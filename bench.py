@@ -492,7 +492,9 @@ def _stdout_line(out: dict, timings: dict[str, float]) -> str:
     first (it all survives in BENCH_LOCAL.json / the history / the
     stderr full record), then timing precision to 1 decimal, and only
     then — as a never-expected last resort — drop entries (counted in
-    ``queries_omitted``)."""
+    ``queries_omitted``). If the line still overflows with no queries
+    left, only metric/value/unit/sf/queries_omitted print, with string
+    fields clipped: the budget is a hard cap."""
 
     def _round_t(t: float, dec: int) -> float | int:
         # degraded tiers (dec=1) drop the decimal entirely at >= 10 s:
@@ -545,6 +547,21 @@ def _stdout_line(out: dict, timings: dict[str, float]) -> str:
                                   for n in by_cost}
             compact["queries_omitted"] = len(timings) - len(by_cost)
             line = json.dumps(compact, separators=(",", ":"))
+    if len(line) > STDOUT_BUDGET:
+        # hard cap: even the query-less skeleton overflows (pathological
+        # metric/sf values) — print only the contract scalars, clipping
+        # string fields until the line fits
+        minimal = {
+            "metric": out["metric"], "value": round(out["value"], 1),
+            "unit": "sec", "sf": out["sf"], "queries_omitted": len(timings),
+        }
+        clip = STDOUT_BUDGET
+        while len(line) > STDOUT_BUDGET:
+            for k in ("metric", "sf"):
+                if not isinstance(minimal[k], (int, float, type(None))):
+                    minimal[k] = str(minimal[k])[:clip]
+            clip //= 2
+            line = json.dumps(minimal, separators=(",", ":"))
     return line
 
 

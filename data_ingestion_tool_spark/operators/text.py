@@ -2067,90 +2067,117 @@ GROUP BY tf.source
 _BPE_MERGES = 12
 
 
+def bpe_learn(vocab, n_merges: int) -> list[tuple]:
+    """Incremental greedy BPE over a ``(word, freq)`` vocabulary — the
+    merge kernel :func:`bpe_fit_merges` runs in one executor task.
+
+    Pair counts are built once; each merge re-counts only the words
+    that contain the merged pair (the ``where`` index), so a merge
+    costs O(words touched), not O(vocab). Tie-break: highest weighted
+    count, then lexicographic ``"left right"``; stops early when the
+    best pair occurs fewer than 2 times. Returns
+    ``[(rank, left, right, pair_count), ...]``.
+    """
+    words: list[list[str]] = []
+    freqs: list[int] = []
+    counts: dict[tuple[str, str], int] = {}
+    where: dict[tuple[str, str], set[int]] = {}
+
+    def add(i: int, sign: int) -> None:
+        syms, f = words[i], sign * freqs[i]
+        for p in zip(syms, syms[1:]):
+            c = counts.get(p, 0) + f
+            if c:
+                counts[p] = c
+                if sign > 0:
+                    where.setdefault(p, set()).add(i)
+            else:
+                del counts[p]
+                where.pop(p, None)
+
+    for w, f in vocab:
+        words.append(list(w))
+        freqs.append(int(f))
+        add(len(words) - 1, 1)
+
+    merges = []
+    for rank in range(n_merges):
+        if not counts:
+            break
+        (left, right), cnt = min(
+            counts.items(), key=lambda kv: (-kv[1], f"{kv[0][0]} {kv[0][1]}")
+        )
+        if cnt < 2:
+            break
+        merges.append((rank, left, right, cnt))
+        # greedy left-to-right, non-overlapping: afterwards no word
+        # holds (left, right), so the index entry is spent
+        for i in where.pop((left, right)):
+            add(i, -1)
+            syms, res, j = words[i], [], 0
+            while j < len(syms):
+                if j + 1 < len(syms) and syms[j] == left and syms[j + 1] == right:
+                    res.append(left + right)
+                    j += 2
+                else:
+                    res.append(syms[j])
+                    j += 1
+            words[i] = res
+            add(i, 1)
+    return merges
+
+
+def _bpe_fit_batches(batches, n_merges: int):
+    """``mapInPandas`` adapter: gather the single partition's vocab
+    batches and emit the learned merge table as one frame."""
+    import pandas as pd
+
+    vocab = [
+        pair
+        for pdf in batches
+        for pair in zip(pdf["w"].tolist(), pdf["freq"].tolist())
+    ]
+    out = pd.DataFrame(
+        bpe_learn(vocab, n_merges),
+        columns=["rank", "left", "right", "pair_count"],
+    )
+    yield out.astype({"rank": "int32", "pair_count": "int64"})
+
+
 def bpe_fit_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed byte-pair-encoding tokenizer training (Sennrich et
     al. 2016): learn the top-``_BPE_MERGES`` merge rules from the
     corpus — the fit step of every subword tokenizer pipeline.
 
     Scale shape (mirrors real BPE trainers): the corpus is scanned
-    ONCE into a (word, freq) vocabulary table — all iterations then
-    run against that bounded table, never the corpus. Each iteration
-    is (a) one JVM explode+hash-agg for weighted adjacent-pair counts,
-    (b) a 1-row argmax to the driver (the merge rule — KBs of driver
-    state total, like kmeans' centroids), (c) one codegen
-    ``regexp_replace`` applying the merge left-to-right (exactly BPE's
-    greedy order), with ``localCheckpoint`` each iteration so lineage
-    stays O(1) deep instead of O(iterations).
+    ONCE, partition-parallel, into a (word, freq) vocabulary by one
+    JVM hash aggregate. The vocabulary — distinct words, orders of
+    magnitude smaller than the corpus — is then gathered into ONE
+    partition and the whole greedy merge loop runs in a single
+    ``mapInPandas`` task (:func:`bpe_learn`, incremental pair counts).
+    The vocab-sized state lives on one executor, never the driver,
+    and the job count does not depend on the merge count: the fit is
+    one lazy plan, executed by the caller's action.
 
-    Deterministic (ties broken lexicographically) and differential-
-    tested against a pure-Python reference BPE on a planted corpus;
-    non-SQL-expressible (iterative) → rows-only driver check.
+    Deterministic (ties broken lexicographically on ``"left right"``)
+    and differential-tested against a pure-Python reference BPE on a
+    planted corpus; non-SQL-expressible (iterative) → rows-only
+    driver check.
 
     Returns the learned merge table (rank, left, right, pair_count).
     """
+    from functools import partial
+
     d = _docs(spark, sf_dir)
     vocab = (
         d.select(F.explode(_tokens()).alias("w"))
         .where(F.col("w").rlike(r"^[a-z0-9]+$"))  # regex-safe symbols
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
-        # words as space-separated symbol sequences: "the" -> "t h e"
-        .select(
-            F.regexp_replace(F.col("w"), r"(.)", r"$1 ")
-            .alias("sym"),
-            "freq",
-        )
-        .select(F.trim("sym").alias("sym"), "freq")
-        # the vocab table is orders of magnitude smaller than the
-        # corpus (distinct words); re-partition it to a bounded width
-        # so the 2·n_merges iteration jobs don't pay full-shuffle-width
-        # task overhead per pass
-        .repartition(4)
-        .localCheckpoint()
     )
-
-    merges = []
-    for rank in range(_BPE_MERGES):
-        pairs = vocab.select(
-            "freq", F.split("sym", " ").alias("s")
-        ).select(
-            "freq",
-            F.explode(
-                F.zip_with(
-                    F.slice("s", 1, F.greatest(F.size("s") - 1, F.lit(0))),
-                    F.slice("s", 2, F.greatest(F.size("s") - 1, F.lit(0))),
-                    lambda a, b: F.concat(a, F.lit(" "), b),
-                )
-            ).alias("pair"),
-        )
-        top = (
-            pairs.groupBy("pair")
-            .agg(F.sum("freq").alias("cnt"))
-            .orderBy(F.desc("cnt"), "pair")
-            .limit(1)
-            .collect()
-        )
-        if not top or top[0]["cnt"] < 2:
-            break
-        pair, cnt = top[0]["pair"], top[0]["cnt"]
-        left, right = pair.split(" ")
-        merges.append((rank, left, right, cnt))
-        # apply the merge: replace "left right" tokens bounded by
-        # start/space — regexp_replace scans left-to-right without
-        # overlap, which IS BPE's greedy application order
-        vocab = vocab.select(
-            F.regexp_replace(
-                F.col("sym"),
-                rf"(?<=^| ){left} {right}(?= |$)",
-                left + right,
-            ).alias("sym"),
-            "freq",
-            # eager=False folds checkpoint materialization into the
-            # next iteration's pair-count job: one job per merge
-        ).localCheckpoint(eager=False)
-
-    return spark.createDataFrame(
-        merges, "rank int, left string, right string, pair_count long"
+    return vocab.repartition(1).mapInPandas(
+        partial(_bpe_fit_batches, n_merges=_BPE_MERGES),
+        "rank int, left string, right string, pair_count long",
     )
 
 
@@ -2501,7 +2528,8 @@ SPECS: list[QuerySpec] = [
               "per-source percent_rank-calibrated 3-signal quality score",
               ("text", "llm", "quality")),
     QuerySpec("bpe_fit_merges", bpe_fit_merges, None,
-              "distributed BPE tokenizer training on the vocab table",
+              "BPE tokenizer training: one-task incremental merge loop "
+              "over the vocab table",
               ("text", "llm", "ml")),
     QuerySpec("bpe_token_counts", bpe_token_counts, None,
               "BPE apply via word-memoized broadcast tokenization",

@@ -8,12 +8,14 @@ Differences from the reference, by design:
   (box_ingest.py:182-183 pins 'development'/'eda_gc_raw')
 - the connector is injected (testable without network; Box is one impl)
 - all matched files of one format are read in ONE ``spark.read`` and
-  written in ONE commit per table, instead of a per-file loop with a
-  commit per file (box_ingest.py:189-190, :127)
+  committed once per table per format batch (Excel: once per
+  workbook, since sheets differ per file), instead of a per-file loop
+  with a commit per file (box_ingest.py:189-190, :127)
 - validation runs as executor-side Column expressions, not a driver
   row loop
 - audit logging is buffered and flushed once, via DataFrame append —
-  no per-action SQL INSERT, no injection surface (box_ingest.py:13-20)
+  no per-action SQL INSERT, no injection surface (box_ingest.py:13-20);
+  each row still carries the time its action was logged
 - export failures raise (the reference swallows the Excel error and
   then fails confusingly on upload — box_export.py:47-48, :66)
 - export uploads carry an extension matching the bytes: .xlsx like the

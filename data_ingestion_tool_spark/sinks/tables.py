@@ -14,13 +14,16 @@ Deliberate changes, each a scale or correctness fix:
 
 - **Format fallback**: Delta when delta-spark is importable, else
   parquet ``saveAsTable`` — same catalog surface either way.
-- **One commit per table per run**: callers union their batch before
-  writing; the reference commits once per file (box_ingest.py:127),
-  which at 100 TB means millions of tiny commits + small files.
+- **One commit per table per batch**: a batch is every file of one
+  format (one scan), or one Excel workbook; the reference commits once
+  per file (box_ingest.py:127), which at 100 TB means millions of tiny
+  commits + small files.
 - **No f-string SQL**: the reference interpolates log values into an
   INSERT (box_ingest.py:14-18) and breaks on a quote (SQL injection);
   log rows here travel as DataFrame literals, and the AuditLog buffers
-  so a run is one log commit, not 3-6 per file.
+  so a run is one log commit, not 3-6 per file. Each buffered row keeps
+  the UTC time of its ``log()`` call, so ``process_dt`` is the action's
+  time (box_ingest.py:13-20 stamps each INSERT), not the flush time.
 """
 
 from __future__ import annotations
@@ -240,15 +243,19 @@ def merge_upsert(
 
 
 AUDIT_TABLE = "box_ingestion_log"
-_AUDIT_SCHEMA = "task_owner string, job_action string, log_info string"
+_AUDIT_SCHEMA = (
+    "task_owner string, job_action string, log_info string, logged_at timestamp"
+)
 
 
 @dataclass
 class AuditLog:
     """Buffered, injection-safe audit logger.
 
-    ``log()`` is cheap (appends to a list + stdlib logging); ``flush()``
-    writes the whole run's rows in ONE table commit. The reference
+    ``log()`` is cheap (appends to a list + stdlib logging) and
+    records the action's UTC time; ``flush()`` writes the whole run's
+    rows in ONE table commit, each with ``process_dt`` derived from its
+    own logged time on the ``process_dt_col`` convention. The reference
     issues a parse→plan→Delta-commit per log line via interpolated SQL
     (box_ingest.py:13-20).
     """
@@ -257,10 +264,12 @@ class AuditLog:
     catalog: str | None = None
     schema: str | None = None
     table_name: str = AUDIT_TABLE
-    rows: list[tuple[str, str, str]] = field(default_factory=list)
+    rows: list[tuple[str, str, str, datetime.datetime]] = field(
+        default_factory=list
+    )
 
     def log(self, action: str, info: str) -> None:
-        self.rows.append((self.owner, action, str(info)))
+        self.rows.append((self.owner, action, str(info), utcnow()))
         import logging
 
         logging.getLogger(__name__).info(
@@ -270,9 +279,18 @@ class AuditLog:
     def flush(self, spark: SparkSession) -> int:
         if not self.rows:
             return 0
-        df = spark.createDataFrame(self.rows, _AUDIT_SCHEMA)
+        df = spark.createDataFrame(self.rows, _AUDIT_SCHEMA).select(
+            "task_owner",
+            "job_action",
+            "log_info",
+            F.from_utc_timestamp("logged_at", PROCESS_TZ).alias("process_dt"),
+        )
         append_table(
-            df, self.table_name, catalog=self.catalog, schema=self.schema
+            df,
+            self.table_name,
+            catalog=self.catalog,
+            schema=self.schema,
+            add_process_dt=False,
         )
         n = len(self.rows)
         self.rows.clear()

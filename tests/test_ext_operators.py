@@ -905,6 +905,55 @@ def test_bpe_fit_runs_and_is_deterministic_on_testdata(spark):
     assert a == b and len(a) > 0
 
 
+@pytest.mark.parametrize(
+    "words, want",
+    [
+        # overlapping runs: greedy left-to-right, non-overlapping
+        ({"aaaa": 2}, [(0, "a", "a", 6), (1, "aa", "aa", 2)]),
+        ({"aaa": 2}, [(0, "a", "a", 4), (1, "aa", "a", 2)]),
+        ({"abab": 2}, [(0, "a", "b", 4), (1, "ab", "ab", 2)]),
+        # count ties resolve on the "left right" string
+        (
+            {"xy": 2, "ba": 2, "ab": 2},
+            [(0, "a", "b", 2), (1, "b", "a", 2), (2, "x", "y", 2)],
+        ),
+        # merge 0 creates merge 1's pair and retires the tied (b, c)
+        (
+            {"abc": 5, "bd": 4, "bx": 3},
+            [(0, "a", "b", 5), (1, "ab", "c", 5), (2, "b", "d", 4),
+             (3, "b", "x", 3)],
+        ),
+        # stop rule: best pair seen fewer than 2 times
+        ({"ab": 1, "cd": 1}, []),
+        ({}, []),
+    ],
+)
+def test_bpe_learn_kernel_without_spark(words, want):
+    """The one-task merge kernel on hand-checked vocabularies, and
+    against the pure-Python reference trainer."""
+    from data_ingestion_tool_spark.operators.text import (
+        _BPE_MERGES,
+        bpe_learn,
+        bpe_reference,
+    )
+
+    assert bpe_learn(words.items(), _BPE_MERGES) == want
+    assert bpe_reference(words, _BPE_MERGES) == want
+
+
+def test_bpe_fit_without_eligible_words_is_empty(spark, tmp_path):
+    """No ``^[a-z0-9]+$`` word in the corpus: zero merge rows, same
+    schema."""
+    from data_ingestion_tool_spark.operators.text import bpe_fit_merges
+
+    sf_dir = _write_docs(spark, tmp_path, [(0, "Hello WORLD"), (1, "a-b c_d !!")])
+    df = bpe_fit_merges(spark, sf_dir)
+    assert df.collect() == []
+    assert df.schema.simpleString() == (
+        "struct<rank:int,left:string,right:string,pair_count:bigint>"
+    )
+
+
 def test_bpe_apply_matches_reference_tokenization(spark, tmp_path):
     """bpe_token_counts' per-doc subword totals equal re-tokenizing
     every word with the pure-Python reference apply."""

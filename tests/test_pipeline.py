@@ -199,6 +199,32 @@ def test_audit_log_quote_safe(spark):
     assert row["task_owner"] == "o'brien; DROP TABLE x--"
 
 
+def test_audit_rows_carry_their_own_action_time(spark):
+    """Each audit row's ``process_dt`` is the time its action was
+    logged (Asia/Shanghai wall clock, as for every append), not the
+    flush time shared by the whole run."""
+    import time
+
+    audit = AuditLog("clock-owner")
+    audit.log("First action", "t0")
+    time.sleep(1)
+    audit.log("Second action", "t1")
+    now = spark.sql(
+        "SELECT from_utc_timestamp(current_timestamp(), 'Asia/Shanghai') AS t"
+    ).collect()[0]["t"]
+    assert audit.flush(spark) == 2
+    got = {
+        r["job_action"]: r["process_dt"]
+        for r in spark.table("box_ingestion_log")
+        .filter("task_owner = 'clock-owner'")
+        .collect()
+    }
+    first, second = got["First action"], got["Second action"]
+    assert first < second
+    assert (second - first).total_seconds() >= 1
+    assert abs((now - second).total_seconds()) < 60
+
+
 def test_export_uploads_real_xlsx(spark, remote_dir, tmp_path):
     """With the stdlib xlsx engine always available, export produces a
     genuine workbook under the .xlsx name (CSV fallback never engages)."""

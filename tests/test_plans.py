@@ -841,8 +841,7 @@ def test_every_driver_materialization_site_is_bounded():
     - similarity: N_QUERIES query sets, k centroids, limit-probed
       broadcast side (auto-demotes past the guard), ≤k cluster sizes,
       ≤d² covariance rows, bounded IVF train sample / centroid table
-    - text (BPE): 1-row per-merge argmax; merge-table collect bounded
-      by the merge count
+    - text (BPE apply): merge-table collect bounded by the merge count
     - excel export: limit-capped collect (the reference's unbounded
       toPandas at box_export.py:37 is the anti-pattern this replaces)
     - layout DML: matched-FILE lists (footer-pruned), not row data
@@ -875,7 +874,6 @@ def test_every_driver_materialization_site_is_bounded():
         ("operators/similarity.py", "kmeans_labels"),
         ("operators/similarity.py", "load_ivf_centroids"),
         ("operators/similarity.py", "semdedup"),
-        ("operators/text.py", "bpe_fit_merges"),
         ("operators/text.py", "bpe_token_counts"),
         ("sinks/excel.py", "export_to_csv"),
         ("sinks/excel.py", "export_to_excel"),
@@ -946,3 +944,33 @@ def test_ivf_exact_rerank_is_jvm_only_bounded_broadcasts(spark):
     assert rep.nested_loop_joins <= 2  # the two bounded centroid crossJoins
     assert rep.broadcast_hash_joins >= 1  # candidates x probes on list_id
     assert rep.exchanges <= 3  # cent-array agg + probe window + rank window
+
+
+def test_bpe_fit_job_count_is_flat_in_merge_count(spark, monkeypatch):
+    """BPE training is one lazy plan: the vocab aggregate feeds ONE
+    single-partition ``mapInPandas`` that runs the whole merge loop, so
+    the builder plus one action start a fixed handful of jobs whatever
+    the merge count, and the plan is real lineage, not a checkpointed
+    ``Scan ExistingRDD`` stub."""
+    from data_ingestion_tool_spark.operators import text
+    from data_ingestion_tool_spark.plans import formatted_plan
+    from tests.conftest import SF_SMOKE
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    jobs = {}
+    for n in (3, 12):
+        monkeypatch.setattr(text, "_BPE_MERGES", n)
+        group = f"bpe-fit-jobs-{n}"
+        sc.setJobGroup(group, "bpe_fit_merges job count")
+        try:
+            rows = text.bpe_fit_merges(spark, SF_SMOKE).collect()
+        finally:
+            sc.setJobGroup(None, None)
+        assert 0 < len(rows) <= n
+        jobs[n] = len(tracker.getJobIdsForGroup(group))
+    assert jobs[3] == jobs[12] <= 5, jobs
+
+    df = text.bpe_fit_merges(spark, SF_SMOKE)
+    assert plan_report(df).map_in_pandas == 1
+    assert "ExistingRDD" not in formatted_plan(df)

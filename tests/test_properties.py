@@ -78,3 +78,21 @@ def test_dedup_contained_in_input(spark, rows):
     assert 0 < k <= n
     # dedup ⊆ input
     assert deduped.exceptAll(df).count() == 0
+
+
+@given(
+    words=st.dictionaries(
+        st.text(alphabet="abc", min_size=1, max_size=8),
+        st.integers(min_value=1, max_value=5),
+        max_size=8,
+    ),
+    n_merges=st.integers(min_value=0, max_value=12),
+)
+@settings(max_examples=300, deadline=None)
+def test_bpe_learn_equals_reference(words, n_merges):
+    """The incremental one-task BPE kernel learns exactly the reference
+    trainer's merge table (a 3-letter alphabet forces overlapping runs
+    and count ties)."""
+    from data_ingestion_tool_spark.operators.text import bpe_learn, bpe_reference
+
+    assert bpe_learn(words.items(), n_merges) == bpe_reference(words, n_merges)

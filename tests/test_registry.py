@@ -149,6 +149,16 @@ def test_bench_stdout_line_prints_every_headline_query():
     parsed3 = json.loads(line3)
     assert parsed3["queries_omitted"] == len(big) - len(parsed3["queries"])
     assert parsed3["queries_omitted"] > 0
+    # hard cap: a skeleton that overflows on its own (pathological
+    # metric/sf strings) degrades to the minimal contract scalars
+    out_huge = dict(out, metric="m" * 3000, sf="s" * 3000)
+    line4 = bench._stdout_line(out_huge, timings)
+    assert len(line4) <= bench.STDOUT_BUDGET
+    parsed4 = json.loads(line4)
+    assert set(parsed4) == {"metric", "value", "unit", "sf", "queries_omitted"}
+    assert parsed4["queries_omitted"] == len(timings)
+    assert parsed4["value"] == round(out["value"], 1)
+    assert parsed4["metric"] and set(parsed4["metric"]) == {"m"}
 
 
 def test_bench_diff_reads_both_formats(tmp_path):

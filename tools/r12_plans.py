@@ -11,7 +11,7 @@ The three eagerly-checkpointing queries are rendered with
 tests/test_plans.py) so the dumped plan is the real candidate-
 generation lineage, not the post-checkpoint Scan ExistingRDD stub.
 Queries whose builder executes eagerly by design (iterative operators:
-pagerank_supply_graph, bpe_fit_merges, ...) still dump the final
+pagerank_supply_graph, ...) still dump the final
 returned plan; their per-iteration shape is documented in
 OPTIMIZATION_r12.md instead.
 """

@@ -7,10 +7,15 @@ Differences from the reference, by design:
 - catalog/schema are parameters, not hardcoded constants
   (box_ingest.py:182-183 pins 'development'/'eda_gc_raw')
 - the connector is injected (testable without network; Box is one impl)
-- all matched files of one format are read in ONE ``spark.read`` and
-  committed once per table per format batch (Excel: once per
-  workbook, since sheets differ per file), instead of a per-file loop
-  with a commit per file (box_ingest.py:189-190, :127)
+- all matched files of one format are read in ONE ``spark.read`` (Excel:
+  one read per workbook, since sheets differ per file); each such batch
+  is validated on its own, and the run then commits ONCE per table: one
+  append of every batch's valid rows, one of every batch's invalid
+  rows to ``<table>_error`` (``just_copy``: one append of every batch),
+  instead of a per-file loop with a commit per file
+  (box_ingest.py:189-190, :127)
+- a batch that fails to read or validate is logged and left out; a
+  failed append fails every batch of the run, and each is logged
 - validation runs as executor-side Column expressions, not a driver
   row loop
 - audit logging is buffered and flushed once, via DataFrame append —
@@ -40,7 +45,9 @@ from data_ingestion_tool_spark.sinks.excel import (
 )
 from data_ingestion_tool_spark.sinks.tables import (
     AuditLog,
-    append_just_copy,
+    append_table,
+    just_copy_projection,
+    union_all,
     write_split,
 )
 from data_ingestion_tool_spark.sources.connector import Connector, select_files
@@ -67,7 +74,8 @@ def execute_ingest(
     work_dir: str | None = None,
 ) -> dict:
     """Discover → fetch → parse → (validate|copy) → append. Returns a
-    summary dict {files, valid_rows, invalid_rows, skipped}."""
+    summary dict {files, valid_rows, invalid_rows, skipped,
+    failed_batches}."""
     audit = AuditLog(owner, catalog=catalog, schema=schema)
     summary = {
         "files": 0,
@@ -112,6 +120,7 @@ def execute_ingest(
             audit.log("Processing failed", f"{what}: {err}")
         summary["failed_batches"] = len(failed)
 
+        batches = []
         for kind, df in frames:
             # one bad batch (unreadable workbook, schema clash) is
             # quarantined by logging, not by aborting the whole ingest —
@@ -119,24 +128,50 @@ def execute_ingest(
             try:
                 df = df.toDF(*[c.strip() for c in df.columns])
                 if just_copy:
-                    append_just_copy(
+                    df = just_copy_projection(
                         spark, df, table_name, catalog=catalog, schema=schema
                     )
-                    audit.log("File copied directly to table", table_name)
-                    continue
-                valid, invalid = validate_and_split(df, metadata or {})
-                n_valid, n_invalid = write_split(
-                    valid, invalid, table_name, catalog=catalog, schema=schema
-                )
-                summary["valid_rows"] += n_valid
-                summary["invalid_rows"] += n_invalid
-                audit.log(
-                    "Batch processed",
-                    f"{table_name} (Valid: {n_valid}, Invalid: {n_invalid})",
-                )
+                    batches.append((kind, df))
+                else:
+                    batches.append(
+                        (kind, validate_and_split(df, metadata or {}))
+                    )
             except Exception as exc:  # noqa: BLE001 — log-and-continue
-                summary["failed_batches"] = summary.get("failed_batches", 0) + 1
+                summary["failed_batches"] += 1
                 audit.log("Processing failed", f"{kind}: {exc}")
+
+        if batches:
+            # one append per table per run; the run's batches commit or
+            # fail together
+            try:
+                if just_copy:
+                    append_table(
+                        union_all([df for _, df in batches]),
+                        table_name,
+                        catalog=catalog,
+                        schema=schema,
+                    )
+                    for _ in batches:
+                        audit.log("File copied directly to table", table_name)
+                else:
+                    counts = write_split(
+                        [split for _, split in batches],
+                        table_name,
+                        catalog=catalog,
+                        schema=schema,
+                    )
+                    for n_valid, n_invalid in counts:
+                        summary["valid_rows"] += n_valid
+                        summary["invalid_rows"] += n_invalid
+                        audit.log(
+                            "Batch processed",
+                            f"{table_name} (Valid: {n_valid}, "
+                            f"Invalid: {n_invalid})",
+                        )
+            except Exception as exc:  # noqa: BLE001 — log-and-continue
+                summary["failed_batches"] += len(batches)
+                for kind, _ in batches:
+                    audit.log("Processing failed", f"{kind}: {exc}")
 
         if delete:
             # Delete exactly the files we ingested (captured ids), not a

@@ -14,10 +14,12 @@ Deliberate changes, each a scale or correctness fix:
 
 - **Format fallback**: Delta when delta-spark is importable, else
   parquet ``saveAsTable`` — same catalog surface either way.
-- **One commit per table per batch**: a batch is every file of one
-  format (one scan), or one Excel workbook; the reference commits once
-  per file (box_ingest.py:127), which at 100 TB means millions of tiny
-  commits + small files.
+- **One commit per table per run**: every batch of an ingest (all
+  files of one format in one scan, or one Excel workbook) is validated
+  on its own, then the run appends the union of the valid sides to the
+  table and the union of the invalid sides to ``<table>_error``, one
+  commit each; the reference commits once per file (box_ingest.py:127),
+  which at 100 TB means millions of tiny commits + small files.
 - **No f-string SQL**: the reference interpolates log values into an
   INSERT (box_ingest.py:14-18) and breaks on a quote (SQL injection);
   log rows here travel as DataFrame literals, and the AuditLog buffers
@@ -29,10 +31,14 @@ Deliberate changes, each a scale or correctness fix:
 from __future__ import annotations
 
 import datetime
+import functools
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+import pandas as pd
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+from data_ingestion_tool_spark.validate import Split
 
 PROCESS_TZ = "Asia/Shanghai"
 
@@ -110,72 +116,96 @@ def write_bucketed(
     writer.saveAsTable(qualified(table_name, catalog, schema))
 
 
+def union_all(frames: list[DataFrame]) -> DataFrame:
+    """``unionByName`` of ``frames``, widest first so the result keeps
+    the full column order; a frame that lacks a column gets nulls in
+    it (on a validation split that is only ever an all-invalid batch,
+    whose valid side is empty)."""
+    ordered = sorted(frames, key=lambda f: -len(f.columns))
+    return functools.reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), ordered
+    )
+
+
 def write_split(
-    valid: DataFrame,
-    invalid: DataFrame,
+    splits: list[Split],
     table_name: str,
     *,
     catalog: str | None = None,
     schema: str | None = None,
-) -> tuple[int, int]:
-    """Write a validation split: valid → table, invalid → table_error.
+) -> list[tuple[int, int]]:
+    """Write a run's validation splits: the union of every valid side
+    → table in ONE append, the union of every invalid side →
+    table_error in ONE append. Returns each split's (valid, invalid)
+    row counts, in order (for the per-batch completion log, reference
+    box_ingest.py:176).
 
-    Counts both sides (for the completion log, reference
-    box_ingest.py:176) without caching either:
+    No count pass and no cache: each split carries its own
+    ``Observation`` above its validity filter, so the first append
+    counts both sides of every batch in its own job. At 100 TB a
+    ``persist()`` of the valid stream would spill the whole table to
+    executor disk just to count it.
 
-    - The HOT side (valid ≈ all rows) is counted by ``observe`` riding
-      the write job itself — one pass, no persist. At 100 TB a
-      ``persist()`` of the valid stream would spill the whole table to
-      executor disk just to count it.
-    - The cold side (invalid ≈ 0 rows) keeps count-then-write (the
-      error table must not be created when there are no errors —
-      reference parity); its recompute is one more scan of the input,
-      cheaper than materializing a cache.
+    Neither table is created empty (reference parity,
+    box_ingest.py:172-175): one emptiness guard per table decides, and
+    it runs on the un-observed frames because an Observation reports
+    only the first action that runs it. The error table needs its
+    guard only when nothing valid was written; otherwise the observed
+    invalid counts decide. The guard is ``head(1)``, not ``isEmpty``:
+    on Spark 4 ``isEmpty`` runs every partition of the union, while
+    ``head`` scans partitions incrementally and stops at the first
+    row, which is one task when the first batch has a valid row.
     """
-    from pyspark.sql import Observation
-
-    # isEmpty short-circuits at the first surviving row (cheap on the
-    # hot path); only a fully-invalid input pays a real scan, and that
-    # case must NOT create the table (reference parity on both sides).
-    if valid.isEmpty():
-        n_valid = 0
-    else:
-        obs = Observation()
-        observed = valid.observe(obs, F.count(F.lit(1)).alias("n"))
-        append_table(observed, table_name, catalog=catalog, schema=schema)
-        n_valid = int(obs.get["n"])
-    n_invalid = invalid.count()
-    if n_invalid:
+    observations = [Observation() for _ in splits]
+    observed = [s.observed(o) for s, o in zip(splits, observations)]
+    wrote_valid = bool(union_all([s.valid for s in splits]).head(1))
+    if wrote_valid:
         append_table(
-            invalid, f"{table_name}_error", catalog=catalog, schema=schema
+            union_all([s.valid for s in observed]),
+            table_name,
+            catalog=catalog,
+            schema=schema,
         )
-    return n_valid, n_invalid
+        write_invalid = any(o.get["invalid"] for o in observations)
+    else:
+        write_invalid = bool(union_all([s.invalid for s in splits]).head(1))
+    if write_invalid:
+        append_table(
+            union_all([s.invalid for s in observed]),
+            f"{table_name}_error",
+            catalog=catalog,
+            schema=schema,
+        )
+    if not (wrote_valid or write_invalid):
+        return [(0, 0)] * len(splits)
+    return [(int(o.get["valid"]), int(o.get["invalid"])) for o in observations]
 
 
-def append_just_copy(
+def just_copy_projection(
     spark: SparkSession,
     df: DataFrame,
     table_name: str,
     *,
     catalog: str | None = None,
     schema: str | None = None,
-) -> None:
+) -> DataFrame:
     """The reference's ``just_copy`` mode (box_ingest.py:161-170):
-    stringify every cell, impose the existing target schema minus
-    ``process_dt``, append with a fresh ``process_dt``."""
+    stringify every cell and impose the existing target schema minus
+    ``process_dt``. Raises here, at analysis, when the batch does not
+    fit the table; the caller appends the projections of a run in one
+    ``append_table`` (which adds a fresh ``process_dt``)."""
     target = qualified(table_name, catalog, schema)
     target_schema = spark.table(target).schema
     fields = [f for f in target_schema.fields if f.name != "process_dt"]
     stringified = df.select(
         [F.col(c).cast("string").alias(c) for c in df.columns]
     )
-    projected = stringified.select(
+    return stringified.select(
         [
             F.col(f.name).cast(f.dataType).alias(f.name)
             for f in fields
         ]
     )
-    append_table(projected, table_name, catalog=catalog, schema=schema)
 
 
 def write_range_layout(
@@ -279,7 +309,14 @@ class AuditLog:
     def flush(self, spark: SparkSession) -> int:
         if not self.rows:
             return 0
-        df = spark.createDataFrame(self.rows, _AUDIT_SCHEMA).select(
+        # A run's few dozen rows: one partition, so one task and one
+        # file per flush. From pandas, Arrow hands the rows to the JVM
+        # directly; a list of tuples is decoded in a Python worker.
+        rows = pd.DataFrame(
+            self.rows,
+            columns=["task_owner", "job_action", "log_info", "logged_at"],
+        )
+        df = spark.createDataFrame(rows, _AUDIT_SCHEMA).coalesce(1).select(
             "task_owner",
             "job_action",
             "log_info",

@@ -282,8 +282,7 @@ def stream_ingest(
     defining_session = spark
 
     def sink(batch_df, batch_id: int) -> None:
-        valid, invalid = validate_and_split(batch_df, metadata)
-        write_split(valid, invalid, table_name)
+        write_split([validate_and_split(batch_df, metadata)], table_name)
         for t in (table_name, f"{table_name}_error"):
             try:
                 defining_session.catalog.refreshTable(t)

@@ -41,9 +41,9 @@ handful more exotic date formats than the format ladder below.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
@@ -166,35 +166,75 @@ def compile_validation(df: DataFrame, metadata: dict) -> CompiledValidation:
     return CompiledValidation(errors, outputs, list(df.columns))
 
 
-def validate_and_split(
-    df: DataFrame, metadata: dict
-) -> tuple[DataFrame, DataFrame]:
-    """Split into (valid, invalid) per the reference's contract.
+@dataclass(frozen=True, eq=False)
+class Split:
+    """One batch's validation split; unpacks as ``(valid, invalid)``.
 
-    One annotated plan, two filters. Catalyst may scan the source
-    twice; for expensive upstream sources callers can ``persist()``
-    the input first (an operational choice — both branches are usually
-    written immediately, see sinks.tables.write_split).
+    Both sides are filters over ONE annotated plan. ``observed(obs)``
+    returns the same split with ``obs`` attached above the validity
+    filter, counting ``valid`` and ``invalid`` rows: whichever side an
+    action runs first counts both sides in that same job.
 
     valid:   coerced metadata columns, lowercase names
     invalid: record (JSON of the normalized input row), error_type
              (messages joined with "; ")
     """
+
+    annotated: DataFrame
+    is_valid: Column
+    is_invalid: Column
+    valid_cols: list
+    invalid_cols: list
+
+    @property
+    def valid(self) -> DataFrame:
+        return self.annotated.filter(self.is_valid).select(*self.valid_cols)
+
+    @property
+    def invalid(self) -> DataFrame:
+        return self.annotated.filter(self.is_invalid).select(*self.invalid_cols)
+
+    def __iter__(self):
+        return iter((self.valid, self.invalid))
+
+    def observed(self, observation: Observation) -> Split:
+        annotated = self.annotated.observe(
+            observation,
+            F.count_if(self.is_valid).alias("valid"),
+            F.count_if(self.is_invalid).alias("invalid"),
+        )
+        return replace(self, annotated=annotated)
+
+
+def validate_and_split(df: DataFrame, metadata: dict) -> Split:
+    """Split into (valid, invalid) per the reference's contract.
+
+    One annotated plan, two filters; nothing runs here. Each side is
+    a separate plan, so writing both scans the source twice — the
+    ingest path writes every batch's valid side in one append and
+    every invalid side in another (see sinks.tables.write_split).
+    """
     norm = normalize_columns(df)
     compiled = compile_validation(norm, metadata)
     if not compiled.error_exprs:
         # No declared columns: everything is trivially valid.
-        return norm.select(compiled.output_exprs or ["*"]), norm.limit(0).select(
-            F.lit("").alias("record"), F.lit("").alias("error_type")
+        return Split(
+            norm,
+            F.lit(True),
+            F.lit(False),
+            compiled.output_exprs or ["*"],
+            [F.lit("").alias("record"), F.lit("").alias("error_type")],
         )
     annotated = norm.withColumn(
         "__errors", F.array_compact(F.array(*compiled.error_exprs))
     )
-    valid = annotated.filter(F.size("__errors") == 0).select(
-        *compiled.output_exprs
+    return Split(
+        annotated,
+        F.size("__errors") == 0,
+        F.size("__errors") > 0,
+        compiled.output_exprs,
+        [
+            F.to_json(F.struct(*compiled.record_cols)).alias("record"),
+            F.array_join("__errors", "; ").alias("error_type"),
+        ],
     )
-    invalid = annotated.filter(F.size("__errors") > 0).select(
-        F.to_json(F.struct(*compiled.record_cols)).alias("record"),
-        F.array_join("__errors", "; ").alias("error_type"),
-    )
-    return valid, invalid

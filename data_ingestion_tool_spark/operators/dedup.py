@@ -38,7 +38,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_ingestion_tool_spark.operators.base import QuerySpec
+from data_ingestion_tool_spark.operators.base import (
+    QuerySpec,
+    cached,
+    materialize,
+)
 from data_ingestion_tool_spark.sources.tables import fan_out, load_table
 
 JACCARD_THRESHOLD = 0.6
@@ -147,7 +151,7 @@ def shingle_sets(df: DataFrame, n: int = 3) -> DataFrame:
 
 
 def _jaccard_pairs_from_candidates(
-    candidates: DataFrame, sets: DataFrame, *, checkpoint: bool = True
+    candidates: DataFrame, sets: DataFrame
 ) -> DataFrame:
     """Exact-Jaccard verification of candidate (doc_a, doc_b) pairs.
 
@@ -164,19 +168,12 @@ def _jaccard_pairs_from_candidates(
     over the corpus twice — once per broadcast (no exchange reuse
     across differently-aliased broadcasts). One corpus pass instead of
     two at any scale; blocks are |docs| × ~K longs, distributed.
-
-    ``checkpoint=False`` (r12 ADVICE) keeps the raw lineage so the
-    plan-inspection escape hatch of the CALLERS (``checkpoint=False``
-    on ``dedup_minhash_lsh`` etc., used by the plan-contract tests and
-    the plan-dump tools) doesn't execute a Spark job at plan-build
-    time or truncate the verify-side lineage to a Scan ExistingRDD.
     """
     hashed = sets.select(
         "doc_id",
         F.transform("shingles", lambda s: F.xxhash64(s)).alias("sh"),
     )
-    if checkpoint:
-        hashed = hashed.localCheckpoint(eager=True)
+    hashed = materialize(hashed)
     joined = candidates.join(
         F.broadcast(
             hashed.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sa"))
@@ -245,7 +242,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Set sizes and intersection counts both derive from ONE posting
     table, persisted across the document-frequency and prefix-ranking
     branches; verification joins broadcast per-doc arrays, touching no
-    posting shuffle at all.
+    posting shuffle at all. The pair list is materialized before both
+    persisted tables are released, so no cache outlives the call.
     """
     # fan_out: the shingle explode + xxhash64 per gram is heavy
     # per-row work below the first exchange; on the unsplittable
@@ -254,7 +252,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # splittable at-scale inputs)
     docs = fan_out(_docs(spark, sf_dir).select("doc_id", "text"))
     sets = shingle_sets(docs)
-    posting = hashed_postings_from_docs(docs).persist()
+    posting = hashed_postings_from_docs(docs)
     from pyspark.sql import Window
 
     # document frequency per shingle; broadcast back onto postings
@@ -275,13 +273,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("n", F.count(F.lit(1)).over(w_all))
     )
     prefix_len = F.col("n") - F.ceil(F.lit(JACCARD_THRESHOLD) * F.col("n")) + 1
-    # persisted: the candidate self-join reads it twice, and its
-    # lineage (df-count join + window) is the expensive prefix stage
-    prefix = (
-        ranked.filter(F.col("rn") <= prefix_len)
-        .select("doc_id", "shingle")
-        .persist()
-    )
+    prefix = ranked.filter(F.col("rn") <= prefix_len).select("doc_id", "shingle")
     candidates = (
         prefix.select(F.col("doc_id").alias("doc_a"), "shingle")
         .join(prefix.select(F.col("doc_id").alias("doc_b"), "shingle"), "shingle")
@@ -289,8 +281,13 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b")
         .distinct()
     )
-    # verify: exact intersection over broadcast hashed-shingle arrays
-    return _jaccard_pairs_from_candidates(candidates, sets)
+    # cached: the df-count and prefix-ranking branches both read
+    # posting, the candidate self-join reads prefix twice, and prefix's
+    # lineage (df-count join + window) is the expensive stage; the
+    # verified pair list (exact intersection over broadcast
+    # hashed-shingle arrays) is materialized before both are released
+    with cached(posting), cached(prefix):
+        return materialize(_jaccard_pairs_from_candidates(candidates, sets))
 
 
 DEDUP_NGRAM_JACCARD_SQL = r"""
@@ -376,9 +373,7 @@ def minhash_signatures_from_docs(df: DataFrame, k: int = MINHASH_K) -> DataFrame
     )
 
 
-def dedup_minhash_lsh(
-    spark: SparkSession, sf_dir: str, *, checkpoint: bool = True
-) -> DataFrame:
+def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs via MinHash banding + exact-Jaccard verify.
 
     Same output contract as dedup_ngram_jaccard on ordinary corpora;
@@ -405,33 +400,18 @@ def dedup_minhash_lsh(
     # windows, identical pairs; no-op on splittable at-scale inputs)
     docs = fan_out(_docs(spark, sf_dir).select("doc_id", "text"))
     sets = shingle_sets(docs)
-    candidates = minhash_lsh_candidates(docs, checkpoint=checkpoint)
-    return _jaccard_pairs_from_candidates(
-        candidates, sets, checkpoint=checkpoint
-    )
+    candidates = minhash_lsh_candidates(docs)
+    return _jaccard_pairs_from_candidates(candidates, sets)
 
 
-def minhash_lsh_candidates(
-    docs: DataFrame,
-    *,
-    band_window: int = _BAND_WINDOW,
-    bucket_cap: int = _BUCKET_CAP,
-    checkpoint: bool = True,
-) -> DataFrame:
+def minhash_lsh_candidates(docs: DataFrame) -> DataFrame:
     """The banded candidate generator behind :func:`dedup_minhash_lsh`:
     ``(doc_id, text)`` in → distinct ``(doc_a, doc_b)`` candidate pairs
     out. Two-path split (shared with ``dedup_simhash``): buckets of
-    ≤ ``bucket_cap`` members keep the COMPLETE all-pairs join; larger
-    buckets emit ≤ band_window candidates per member (see the
+    ≤ ``_BUCKET_CAP`` members keep the COMPLETE all-pairs join; larger
+    buckets emit ≤ ``_BAND_WINDOW`` candidates per member (see the
     caller's hot-bucket note). Separated so the blow-up bound is
-    testable on a planted duplicate-heavy corpus.
-
-    ``checkpoint=False`` skips the eager ``localCheckpoint`` (which
-    truncates lineage to a Scan ExistingRDD and EXECUTES the job as a
-    side effect of building the DataFrame) so plan-contract tests can
-    inspect the real candidate-generation plan; execution paths keep
-    the default, which bounds lineage and releases the persisted
-    signature table deterministically."""
+    testable on a planted duplicate-heavy corpus."""
     sigs = minhash_signatures_from_docs(docs)
     rows_per_band = MINHASH_K // MINHASH_BANDS
     band_cols = [
@@ -444,22 +424,22 @@ def minhash_lsh_candidates(
     stack_expr = ", ".join(
         f"{b}, band{b}" for b in range(MINHASH_BANDS)
     )
-    # persisted for the duration of THIS builder only (unpersisted
-    # below once the candidate union is checkpointed): the banded
-    # long form feeds THREE consumers — the bucket-size window and
-    # both bucket paths' self-join sides — and its lineage (the r12
+    # cached for the duration of THIS builder only (released below
+    # once the candidate union is materialized): the banded long form
+    # feeds THREE consumers — the bucket-size window and both bucket
+    # paths' self-join sides — and its lineage (the r12
     # projection-only signature stage) would otherwise recompute the
     # K seeded gram-hash mins per consumer
     long_form = banded.selectExpr(
         "doc_id",
         f"stack({MINHASH_BANDS}, {stack_expr}) AS (band_idx, band_hash)",
-    ).persist()
+    )
     from pyspark.sql import Window
 
     w_size = Window.partitionBy("band_idx", "band_hash")
     sized = long_form.withColumn("m", F.count(F.lit(1)).over(w_size))
-    small = sized.filter(F.col("m") <= bucket_cap)
-    big = sized.filter(F.col("m") > bucket_cap)
+    small = sized.filter(F.col("m") <= _BUCKET_CAP)
+    big = sized.filter(F.col("m") > _BUCKET_CAP)
 
     small_pairs = (
         small.select(F.col("doc_id").alias("doc_a"), "band_idx", "band_hash")
@@ -480,7 +460,7 @@ def minhash_lsh_candidates(
             F.array(
                 *[
                     F.lead("doc_id", j).over(w_bucket)
-                    for j in range(1, band_window + 1)
+                    for j in range(1, _BAND_WINDOW + 1)
                 ]
             ),
             lambda x: x.isNotNull(),
@@ -488,19 +468,12 @@ def minhash_lsh_candidates(
     )
     big_pairs = neigh.select("doc_a", F.explode("succs").alias("doc_b"))
     # materialize the bounded candidate set, then release the
-    # persisted banded-signature table (same lifetime discipline as
+    # cached banded-signature table (same lifetime discipline as
     # dedup_simhash / semantic_dedup: never leave a session-pinned
     # cache behind); the checkpointed pair list is 16 bytes/row
     out = small_pairs.unionByName(big_pairs).distinct()
-    if not checkpoint:
-        # plan-inspection path: drop the (never-materialized) cache
-        # entry immediately so the returned plan shows the raw
-        # candidate-generation lineage, not an InMemoryRelation
-        long_form.unpersist()
-        return out
-    out = out.localCheckpoint(eager=True)
-    long_form.unpersist()
-    return out
+    with cached(long_form):
+        return materialize(out)
 
 
 _MD5_K = 16  # hash-family size of the md5 anchor twin
@@ -777,14 +750,7 @@ def simhash_column() -> F.Column:
     return _simhash(F.col("text"))
 
 
-def dedup_simhash(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    band_window: int = _BAND_WINDOW,
-    bucket_cap: int = _BUCKET_CAP,
-    checkpoint: bool = True,
-) -> DataFrame:
+def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs with SimHash Hamming distance ≤ 6: 8-bit band
     blocking (8 bands ⇒ guaranteed collision for distance ≤ 7), then
     JVM-side ``bit_count(xor)`` verification. The production path is
@@ -793,15 +759,7 @@ def dedup_simhash(
     anchor for the SAME signature kernel + banding + Hamming verify is
     :func:`dedup_simhash_md5` (complete band join, DuckDB-replayable),
     and the oracle-paired exact twin for near-dup semantics is
-    ``dedup_ngram_jaccard``. ``checkpoint=False`` skips the eager
-    ``localCheckpoint`` so plan tests see the real candidate plan
-    (see ``minhash_lsh_candidates``).
-
-    ``bucket_cap`` / ``band_window`` expose the two-path split knobs
-    (mirroring ``minhash_lsh_candidates``): pair-list consumers that
-    need the complete — inherently quadratic — pair set on saturated
-    corpora can raise ``bucket_cap`` and opt out of the windowed
-    chain.
+    ``dedup_ngram_jaccard``.
 
     BUCKET-SATURATION BOUND (round-5 scale audit): the 8-bit band
     space is FIXED at 256 values, so average bucket size grows
@@ -836,19 +794,19 @@ def dedup_simhash(
     ]
     banded = d.select("doc_id", "sim", *bands)
     stack_expr = ", ".join(f"{b}, band{b}" for b in range(8))
-    # persisted for the duration of THIS builder only (unpersisted
-    # below once the candidate union is checkpointed): the signature
-    # stage is a pandas_udf pass and both bucket paths (and the size
-    # window) read it
+    # cached for the duration of THIS builder only (released below
+    # once the candidate union is materialized): the signature stage
+    # is a pandas_udf pass and both bucket paths (and the size window)
+    # read it
     long_form = banded.selectExpr(
         "doc_id", "sim", f"stack(8, {stack_expr}) AS (band_idx, band_val)"
-    ).persist()
+    )
     from pyspark.sql import Window
 
     w_size = Window.partitionBy("band_idx", "band_val")
     sized = long_form.withColumn("m", F.count(F.lit(1)).over(w_size))
-    small = sized.filter(F.col("m") <= bucket_cap)
-    big = sized.filter(F.col("m") > bucket_cap)
+    small = sized.filter(F.col("m") <= _BUCKET_CAP)
+    big = sized.filter(F.col("m") > _BUCKET_CAP)
 
     sa = small.select(
         F.col("doc_id").alias("doc_a"),
@@ -885,7 +843,7 @@ def dedup_simhash(
     me = F.struct(F.col("doc_id").alias("id"), F.col("sim").alias("s"))
     succs = F.filter(
         F.array(
-            *[F.lead(me, j).over(w_bucket) for j in range(1, band_window + 1)]
+            *[F.lead(me, j).over(w_bucket) for j in range(1, _BAND_WINDOW + 1)]
         ),
         lambda x: x.isNotNull(),
     )
@@ -896,7 +854,7 @@ def dedup_simhash(
         F.bit_count(F.col("x.s").bitwiseXOR(F.col("y.s"))).alias("hamming"),
     )
     # materialize the bounded candidate union, then release the wide
-    # persisted signature table — without this the per-doc signature
+    # cached signature table — without this the per-doc signature
     # blocks stay pinned for the session (the semdedup lifetime fix
     # applied here); the checkpointed pair list is narrow (2 longs +
     # an int per row) and its blocks are GC-cleaned with the result
@@ -905,12 +863,8 @@ def dedup_simhash(
         .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .distinct()
     )
-    if not checkpoint:
-        long_form.unpersist()
-        return out
-    out = out.localCheckpoint(eager=True)
-    long_form.unpersist()
-    return out
+    with cached(long_form):
+        return materialize(out)
 
 
 def dedup_simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1043,9 +997,7 @@ def _fuzzy_seg(target_len, i: int):
     return start, length
 
 
-def fuzzy_title_pairs(
-    spark: SparkSession, sf_dir: str, *, checkpoint: bool = True
-) -> DataFrame:
+def fuzzy_title_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Edit-distance similarity join: document-head pairs within
     Levenshtein distance {d}, found with PassJoin segment blocking
     (Li, Deng & Feng, VLDB 2011) instead of an all-pairs scan —
@@ -1113,14 +1065,8 @@ def fuzzy_title_pairs(
     # joins, Levenshtein verify) to one core (alternated min-of-4 A/B:
     # 0.72×, identical pairs; no-op on splittable at-scale inputs).
     # The exchange moves the 40-byte projection, never the full text
-    # (guide §2.3, project before the exchange). ``checkpoint=False``
-    # is the plan-inspection escape hatch (same convention as
-    # dedup_minhash_lsh/dedup_simhash): an eager localCheckpoint
-    # truncates lineage to a Scan ExistingRDD, which would hide the
-    # candidate-generation plan from the registry-wide plan-contract
-    # tests.
-    if checkpoint:
-        d = fan_out(d).localCheckpoint(eager=True)
+    # (guide §2.3, project before the exchange).
+    d = materialize(fan_out(d))
 
     # ---- index side: the d+1 segments of every title of len >= k,
     # keyed by xxhash64(len, seg, content) — 8-byte join keys instead
@@ -1803,7 +1749,7 @@ def near_dup_graph_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
     template/boilerplate families; ``self_join_blowup_estimate`` is
     its pre-flight cousin on raw keys).
 
-    Composes the exact 3-gram Jaccard pair operator lazily (no new
+    Composes the exact 3-gram Jaccard pair operator (no new
     pair enumeration): pairs → per-doc degree (one doc-keyed hash-agg
     over 2|E| rows) → |degrees|-row histogram. Output is degree-sized
     regardless of corpus size. Both endpoints are projected in ONE

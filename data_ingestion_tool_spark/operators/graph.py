@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_ingestion_tool_spark.operators.base import QuerySpec
+from data_ingestion_tool_spark.operators.base import QuerySpec, cached
 from data_ingestion_tool_spark.sources.tables import load_table
 
 #: Fixed-point scale: total rank mass in integer units. 10**12 keeps
@@ -45,7 +45,7 @@ _PR_D_NUM, _PR_D_DEN = 85, 100
 
 
 def _supply_graph(
-    spark: SparkSession, sf_dir: str, *, persist_pairs: bool = False
+    spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Symmetric (edges, out-degree, pairs) of the customer↔supplier
     graph.
@@ -59,14 +59,13 @@ def _supply_graph(
     decoded back to the identical string form in the final projection
     only (:func:`pagerank_supply_graph`), so results are byte-equal.
 
-    ``persist_pairs=True`` caches the distinct pair table before it
-    fans out (round 12): ``pairs`` feeds FOUR subtrees — both union
-    directions of ``edges``, which itself feeds both ``deg`` and the
-    caller's ``edges_deg`` — so uncached, the fact join + distinct ran
-    up to 4× during graph setup (partial exchange reuse hid only some
-    of it; the r12 lab measured setup alone at 4.6 s vs 6.7 s for the
-    full 5-iteration query once pairs was cached). The pairs handle is
-    returned so the caller owns the unpersist.
+    The distinct pair table is returned so the caller can cache it
+    (round 12): ``pairs`` feeds FOUR subtrees — both union directions
+    of ``edges``, which itself feeds both ``deg`` and the caller's
+    ``edges_deg`` — so uncached, the fact join + distinct ran up to 4×
+    during graph setup (partial exchange reuse hid only some of it;
+    the r12 lab measured setup alone at 4.6 s vs 6.7 s for the full
+    5-iteration query once pairs was cached).
     """
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
@@ -81,8 +80,6 @@ def _supply_graph(
         )
         .distinct()
     )
-    if persist_pairs:
-        pairs = pairs.persist()
     edges = pairs.select(
         F.col("cust").alias("src"), F.col("supp").alias("dst")
     ).unionAll(pairs.select(F.col("supp").alias("src"), F.col("cust").alias("dst")))
@@ -135,21 +132,20 @@ def pagerank_supply_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     Update rule (all BIGINT):
     ``r'(v) = (15·SCALE) div (100·n) + (85 · Σ_{u→v} r(u) div deg(u)) div 100``.
     """
-    edges, deg, pairs = _supply_graph(spark, sf_dir, persist_pairs=True)
-    # pairs (inside _supply_graph) and both setup products are cached:
-    # deg feeds the node count, the initial ranks, and the edges_deg
-    # build; edges_deg feeds the per-iteration src join. deg.count()
-    # (needed for the teleport constant anyway) materializes deg's
-    # cache up front; edges_deg materializes on iteration 1 of the
-    # final eager evaluation. Iterations themselves touch ONLY
-    # edges_deg since the round-12 left-join removal (_pr_iteration).
-    deg = deg.persist()
+    edges, deg, pairs = _supply_graph(spark, sf_dir)
+    # pairs and both setup products are cached: deg feeds the node
+    # count, the initial ranks, and the edges_deg build; edges_deg
+    # feeds the per-iteration src join. deg.count() (needed for the
+    # teleport constant anyway) materializes deg's cache up front;
+    # edges_deg materializes on iteration 1 of the final eager
+    # evaluation. Iterations themselves touch ONLY edges_deg since the
+    # round-12 left-join removal (_pr_iteration).
     # repartition BY THE JOIN KEY before caching: the in-memory scan
     # then reports hash-partitioning on src, so each iteration's
     # edges⋈ranks shuffles only the (node-sized) rank table — the
     # (edge-sized) side never re-exchanges across the 5 iterations
-    edges_deg = edges.join(deg, "src").repartition("src").persist()
-    try:
+    edges_deg = edges.join(deg, "src").repartition("src")
+    with cached(pairs), cached(deg), cached(edges_deg):
         n_nodes = deg.count()
         teleport = (_PR_SCALE * (_PR_D_DEN - _PR_D_NUM)) // (_PR_D_DEN * n_nodes)
         ranks = deg.select(
@@ -179,10 +175,6 @@ def pagerank_supply_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("node"),
             "r",
         )
-    finally:
-        edges_deg.unpersist()
-        deg.unpersist()
-        pairs.unpersist()
 
 
 def _pagerank_sql() -> str:

@@ -28,7 +28,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampNTZType
 
-from data_ingestion_tool_spark.operators.base import QuerySpec
+from data_ingestion_tool_spark.operators.base import QuerySpec, materialize
 from data_ingestion_tool_spark.sources.tables import load_table
 
 
@@ -414,7 +414,6 @@ def concurrent_sessions(
     sf_dir: str,
     *,
     bucket_width_us: int | None = None,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """For every user session, how many OTHER users had a session
     overlapping it in time — the concurrency / capacity-planning
@@ -473,14 +472,11 @@ def concurrent_sessions(
 
     ``bucket_width_us`` (default: density-derived, ≈ 2048 items per
     bucket clamped to [1 min, 1 h]) only redraws rank/gap bucket
-    boundaries; the output is width-invariant (pytest-pinned).
-    ``checkpoint=False`` skips the eager ``localCheckpoint`` of the
-    narrow session table (computed once, read by four downstream
-    subtrees) so plan tests can inspect full lineage.
+    boundaries; the output is width-invariant (pytest-pinned). The
+    narrow session table is materialized once: four downstream
+    subtrees read it.
     """
-    sess = _sessionize(spark, sf_dir)
-    if checkpoint:
-        sess = sess.localCheckpoint(eager=True)
+    sess = materialize(_sessionize(spark, sf_dir))
     n, lo, hi = sess.agg(
         F.count(F.lit(1)), F.min("s_us"), F.max("e_us")
     ).first()

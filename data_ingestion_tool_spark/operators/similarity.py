@@ -25,7 +25,11 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from data_ingestion_tool_spark.operators.base import QuerySpec
+from data_ingestion_tool_spark.operators.base import (
+    QuerySpec,
+    cached,
+    materialize,
+)
 from data_ingestion_tool_spark.sources.tables import fan_out, load_table
 
 N_QUERIES = 10  # queries = vec_id < 10
@@ -2152,16 +2156,15 @@ def semdedup(
     # one cluster, so the per-cluster group may not fit an executor.
     # Persist the assignment (both the size measurement and the dedup
     # kernels read it), compute the RESULT eagerly, then release the
-    # embedding-carrying blocks in ``finally`` — the pagerank
-    # persist/unpersist discipline; a localCheckpoint here would pin
-    # the full (id, cluster, embedding) corpus in executor block
+    # embedding-carrying blocks on leaving the ``cached`` block — the
+    # pagerank persist/unpersist discipline; a localCheckpoint here
+    # would pin the full (id, cluster, embedding) corpus in executor block
     # storage for the session lifetime (round-4 ADVICE). What outlives
     # the call is only the checkpointed RESULT triple
     # (id, cluster, keep) — the data the caller consumes anyway.
     from pyspark import StorageLevel
 
-    assigned = assigned.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+    with cached(assigned, StorageLevel.MEMORY_AND_DISK):
         sizes = assigned.groupBy("cluster").count()
         big = [
             (int(r["cluster"]), int(r["count"]))
@@ -2171,7 +2174,7 @@ def semdedup(
             result = assigned.groupBy("cluster").applyInPandas(
                 dedup_cluster, out_schema
             )
-            return result.localCheckpoint(eager=True)
+            return materialize(result)
         big_ids = [c for c, _ in big]
         max_big = max(n for _, n in big)
         # one kernel task holds ≤ 2 blocks of one cluster; size
@@ -2201,9 +2204,7 @@ def semdedup(
         small_res = small_part.groupBy("cluster").applyInPandas(
             dedup_cluster, out_schema
         )
-        return small_res.unionByName(big_res).localCheckpoint(eager=True)
-    finally:
-        assigned.unpersist()
+        return materialize(small_res.unionByName(big_res))
 
 
 SEMANTIC_DEDUP_SQL = f"""
@@ -2426,7 +2427,7 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(F.col("s").cast("decimal(38,0)")).alias("s"))
     )
     # bounded materialization: ≤ d(d+1)/2 + d + 1 rows (2145 for d=64)
-    mom = mom.localCheckpoint(eager=True)
+    mom = materialize(mom)
     n_row = mom.filter((F.col("i") == -1) & (F.col("j") == -1)).select(
         F.col("s").cast("double").alias("n")
     )

@@ -15,7 +15,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from data_ingestion_tool_spark.operators.base import QuerySpec
+from data_ingestion_tool_spark.operators.base import (
+    QuerySpec,
+    cached,
+    materialize,
+)
 from data_ingestion_tool_spark.sources.tables import fan_out, load_table
 
 
@@ -240,11 +244,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = d.select("doc_id", F.explode(_tokens()).alias("term"))
     # doclen and dfreq both re-aggregate tf — the raw token table is
     # exploded and shuffled exactly once
-    tf = (
-        terms.groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("k"))
-        .persist()
-    )
+    tf = terms.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("k"))
     doclen = tf.groupBy("doc_id").agg(F.sum("k").alias("len"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     score = (F.col("k").cast("double") / F.col("len")) * F.log(
@@ -253,7 +253,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     w = Window.partitionBy("doc_id").orderBy(F.desc("score"), "term")
-    return (
+    top = (
         tf.join(doclen, "doc_id")
         .join(F.broadcast(dfreq), "term")
         .crossJoin(F.broadcast(ndocs))
@@ -262,6 +262,9 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rank") <= 3)
         .select("doc_id", "term", "rank")
     )
+    # tf is cached only until the top terms are materialized
+    with cached(tf):
+        return materialize(top)
 
 
 TFIDF_TOP_TERMS_SQL = r"""
@@ -1112,14 +1115,13 @@ def cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the documents scan 14× across the full plan). One corpus pass
     # instead of two at any scale; blocks are |docs| × ≤V terms,
     # distributed, released with the result.
-    doc_terms = (
+    doc_terms = materialize(
         d.select("doc_id", F.array_distinct(_tokens()).alias("ts0"))
         .crossJoin(F.broadcast(vocab_arr))
         .select(
             "doc_id",
             F.sort_array(F.array_intersect("ts0", "varr")).alias("ts"),
         )
-        .localCheckpoint(eager=True)
     )
     n_term = (
         doc_terms.select(F.explode("ts").alias("term"))

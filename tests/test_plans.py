@@ -5,6 +5,7 @@ programmatically, not eyeballed."""
 from __future__ import annotations
 
 from data_ingestion_tool_spark.operators import registry
+from data_ingestion_tool_spark.operators.base import plan_only
 from data_ingestion_tool_spark.plans import (
     assert_broadcast_join,
     assert_pushed_filter,
@@ -59,7 +60,7 @@ def test_python_only_at_declared_edges(spark):
 def test_minhash_lsh_is_bucketed_not_all_pairs(spark):
     """The LSH claim: candidate pairs come from banded-signature
     equi-joins, never from a cartesian/nested-loop enumeration, and
-    everything stays JVM-side. Built with ``checkpoint=False`` so the
+    everything stays JVM-side. Built inside ``plan_only()`` so the
     assertion inspects the REAL candidate-generation plan — the
     execution path's eager localCheckpoint truncates lineage to a
     Scan ExistingRDD and would make this test vacuous (r06 ADVICE)."""
@@ -68,7 +69,8 @@ def test_minhash_lsh_is_bucketed_not_all_pairs(spark):
         minhash_lsh_candidates,
     )
 
-    df = minhash_lsh_candidates(_docs(spark, SF_CORRECT), checkpoint=False)
+    with plan_only():
+        df = minhash_lsh_candidates(_docs(spark, SF_CORRECT))
     rep = plan_report(df)
     assert rep.nested_loop_joins == 0
     assert rep.map_in_pandas == 0
@@ -88,7 +90,8 @@ def test_simhash_candidates_are_bucketed_not_all_pairs(spark):
     from data_ingestion_tool_spark.operators.dedup import dedup_simhash
     from data_ingestion_tool_spark.plans import formatted_plan
 
-    df = dedup_simhash(spark, SF_CORRECT, checkpoint=False)
+    with plan_only():
+        df = dedup_simhash(spark, SF_CORRECT)
     rep = plan_report(df)
     assert rep.nested_loop_joins == 0
     text = formatted_plan(df)
@@ -110,7 +113,8 @@ def test_fuzzy_checkpoint_collapses_scans_and_matches_lazy_path(spark):
     text = formatted_plan(ckpt)
     assert "Scan parquet" not in text
     assert "ExistingRDD" in text
-    lazy = fuzzy_title_pairs(spark, SF_CORRECT, checkpoint=False)
+    with plan_only():
+        lazy = fuzzy_title_pairs(spark, SF_CORRECT)
     assert "Scan parquet" in formatted_plan(lazy)
     assert sorted(map(tuple, ckpt.collect())) == sorted(
         map(tuple, lazy.collect())
@@ -524,39 +528,20 @@ def test_no_unbounded_pair_enumeration_anywhere(spark):
         # PassJoin path carries all titles of len >= d+1
         "fuzzy_title_pairs",
     }
-    # the two eagerly-checkpointing builders truncate lineage to a
-    # Scan ExistingRDD (and execute as a side effect); inspect their
-    # REAL candidate plans via the checkpoint=False escape hatch
-    from functools import partial
-
-    from data_ingestion_tool_spark.operators.dedup import (
-        dedup_minhash_lsh,
-        dedup_simhash,
-        fuzzy_title_pairs,
-    )
-
-    from data_ingestion_tool_spark.operators.rangejoin import (
-        concurrent_sessions,
-    )
-
-    PRE_CHECKPOINT = {
-        "dedup_minhash_lsh": partial(dedup_minhash_lsh, checkpoint=False),
-        "dedup_simhash": partial(dedup_simhash, checkpoint=False),
-        "concurrent_sessions": partial(concurrent_sessions, checkpoint=False),
-        "fuzzy_title_pairs": partial(fuzzy_title_pairs, checkpoint=False),
-    }
-
+    # builders that materialize an intermediate table would show a
+    # Scan ExistingRDD (and execute as a side effect); plan_only()
+    # keeps their REAL candidate plans
     offenders = {}
-    for name, spec in REG.items():
-        builder = PRE_CHECKPOINT.get(name, spec.builder)
-        text = formatted_plan(builder(spark, SF_CORRECT))
-        if re.search(r"\(\d+\) CartesianProduct", text):
-            offenders[name] = "CartesianProduct"
-        elif (
-            re.search(r"\(\d+\) BroadcastNestedLoopJoin", text)
-            and name not in BOUNDED_BNLJ
-        ):
-            offenders[name] = "BroadcastNestedLoopJoin"
+    with plan_only():
+        for name, spec in REG.items():
+            text = formatted_plan(spec.builder(spark, SF_CORRECT))
+            if re.search(r"\(\d+\) CartesianProduct", text):
+                offenders[name] = "CartesianProduct"
+            elif (
+                re.search(r"\(\d+\) BroadcastNestedLoopJoin", text)
+                and name not in BOUNDED_BNLJ
+            ):
+                offenders[name] = "BroadcastNestedLoopJoin"
     assert not offenders, offenders
 
 
@@ -823,7 +808,8 @@ def test_concurrent_sessions_sweep_plan_has_no_pair_join(spark):
 
     from data_ingestion_tool_spark.plans import formatted_plan
 
-    df = concurrent_sessions(spark, SF_CORRECT, checkpoint=False)
+    with plan_only():
+        df = concurrent_sessions(spark, SF_CORRECT)
     rep = plan_report(df)
     assert rep.nested_loop_joins == 0, rep
     assert rep.map_in_pandas == 0 and rep.grouped_pandas == 0

@@ -9,12 +9,12 @@ gets its full ``.explain("formatted")`` dumped to
 ``<out>/<query>_<tag>.txt`` — the before/after plan evidence of an
 optimization round, judge-checkable without running Spark.
 
-Queries whose default path eagerly localCheckpoints are built with
-``checkpoint=False`` in both modes (the same convention as
-tests/test_plans.py), so the plan shown is the real lineage, not the
-post-checkpoint ``Scan ExistingRDD`` stub. Builders that execute
-eagerly by design (iterative operators such as pagerank_supply_graph)
-still dump their final returned plan.
+Every builder runs inside ``plan_only()`` in both modes (as in
+tests/test_plans.py), so a builder that materializes an intermediate
+table shows its real lineage, not a ``Scan ExistingRDD`` stub.
+Iterative operators whose loop cuts lineage on every step
+(pagerank_supply_graph, dedup_near_clusters) still execute and dump
+their final returned plan.
 """
 
 import argparse
@@ -26,6 +26,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
 from data_ingestion_tool_spark import get_spark  # noqa: E402
 from data_ingestion_tool_spark.operators import registry  # noqa: E402
+from data_ingestion_tool_spark.operators.base import plan_only  # noqa: E402
 from data_ingestion_tool_spark.plans import formatted_plan  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -117,37 +118,13 @@ goals:
   results leaving the stage, not raw scores.
 
 These properties are asserted programmatically in tests/test_plans.py;
-this file is the human-readable rendering. The eagerly-checkpointing
-queries (dedup_minhash_lsh, dedup_simhash, concurrent_sessions) are
-rendered with ``checkpoint=False`` — exactly as test_plans.py asserts
-them — so the plan shown is the REAL candidate-generation lineage,
-not the post-checkpoint ``Scan ExistingRDD`` stub the execution path
-truncates to (r07 ADVICE).
+this file is the human-readable rendering. Every query is built
+inside ``plan_only()`` — the scope test_plans.py asserts under — so a
+query that materializes an intermediate table on its execution path
+(dedup_minhash_lsh, dedup_simhash, fuzzy_title_pairs,
+concurrent_sessions, ...) is rendered with its REAL lineage, not the
+``Scan ExistingRDD`` stub the eager checkpoint truncates to.
 """
-
-
-def _pre_checkpoint_builders():
-    """Builders for the queries whose default path eagerly
-    localCheckpoints (truncating the rendered plan to a Scan
-    ExistingRDD): render the pre-checkpoint plan instead, matching
-    tests/test_plans.py's checkpoint=False assertions."""
-    from functools import partial
-
-    from data_ingestion_tool_spark.operators.dedup import (
-        dedup_minhash_lsh,
-        dedup_simhash,
-        fuzzy_title_pairs,
-    )
-    from data_ingestion_tool_spark.operators.rangejoin import (
-        concurrent_sessions,
-    )
-
-    return {
-        "dedup_minhash_lsh": partial(dedup_minhash_lsh, checkpoint=False),
-        "dedup_simhash": partial(dedup_simhash, checkpoint=False),
-        "concurrent_sessions": partial(concurrent_sessions, checkpoint=False),
-        "fuzzy_title_pairs": partial(fuzzy_title_pairs, checkpoint=False),
-    }
 
 
 def condense(text: str) -> str:
@@ -215,17 +192,18 @@ def main(argv: list[str] | None = None) -> None:
         ap.error("query names need --tag")
     root = os.path.join(os.path.dirname(__file__), "..")
     builders = {name: spec.builder for name, spec in registry().items()}
-    builders.update(_pre_checkpoint_builders())
     spark = get_spark("gen-plans")
     spark.sparkContext.setLogLevel("ERROR")
-    if args.tag:
-        from bench import HEADLINE
+    with plan_only():
+        if args.tag:
+            from bench import HEADLINE
 
-        write_dumps(spark, builders, args.tag,
-                    args.out or os.path.join(root, "plans"),
-                    args.queries or HEADLINE)
-    else:
-        write_summary(spark, builders, args.out or os.path.join(root, "PLANS.md"))
+            write_dumps(spark, builders, args.tag,
+                        args.out or os.path.join(root, "plans"),
+                        args.queries or HEADLINE)
+        else:
+            write_summary(spark, builders,
+                          args.out or os.path.join(root, "PLANS.md"))
     spark.stop()
 
 

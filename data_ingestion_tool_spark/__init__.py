@@ -29,7 +29,19 @@ Subpackages
 ``streaming``  Structured Streaming wrappers
 """
 
+import sys
+
+from pyspark import cloudpickle
+
 from data_ingestion_tool_spark.session import get_spark, stop_spark
+
+# Python workers need not import this package: executor kernels that
+# reference module-level functions (``partial_topk``, ``bpe_learn``,
+# the media codecs) ship by value, like the closures around them. By
+# reference, a driver that has the package on ``sys.path`` but runs
+# outside the repo fails on the workers with ModuleNotFoundError,
+# whoever built the session.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 __version__ = "0.1.0"
 

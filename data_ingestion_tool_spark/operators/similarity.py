@@ -15,6 +15,11 @@ Scale design:
 - Scores are computed in double over ``array<double>`` casts; outputs
   carry ids + rank only (float-score hashing across engines is brittle;
   ranks are stable because score gaps ≫ 1 ulp).
+- Every Python top-k operator (brute force, filtered, int8-quantized,
+  IVF) is one distributed top-k: its own per-batch scoring, then the
+  one :func:`partial_topk` kernel (≤ |Q|·k rows leave each batch),
+  then the one global window :func:`_rank_topk`, which the JVM top-k
+  paths (LSH, pinned IVF) share.
 """
 
 from __future__ import annotations
@@ -22,6 +27,7 @@ from __future__ import annotations
 import math
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -69,27 +75,90 @@ def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact cosine top-k, scale-shaped:
+#: Schema of the per-batch partial top-k every Python top-k stage emits.
+_PARTIAL_SCHEMA = "query_id long, neighbor_id long, score double"
 
-    - queries (vec_id < N_QUERIES) are broadcast as a dense matrix;
-    - candidates stream partition-parallel through ``mapInPandas``,
-      each Arrow batch scored with one BLAS GEMM;
-    - **partial top-k per batch**: only |Q|·k (score, id) pairs leave
-      each batch, so the final shuffle ranks |batches|·|Q|·k rows
-      instead of N·|Q| — at 100 TB the difference between shuffling
-      gigabytes of scores and kilobytes.
-    - exact global rank via one window over the tiny partial set.
-    """
-    import numpy as np
-    import pandas as pd
+
+def _matrix(pdf: pd.DataFrame, col: str = "embedding") -> np.ndarray:
+    """float64 row matrix of an array column (one row per frame row)."""
+    return np.vstack(pdf[col].to_numpy()).astype(np.float64)
+
+
+def _collect_queries(emb: DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """The bounded driver collect of the query set (``vec_id <
+    N_QUERIES``, at most N_QUERIES rows) as (ids, float64 matrix),
+    sorted by id. With no query ids the matrix is 0 × d — d read from
+    one corpus row — so every GEMM downstream stays shape-valid, the
+    kernels emit nothing and the operator returns zero rows, as the
+    SQL formulation does."""
+    q_pdf = (
+        emb.filter(F.col("vec_id") < N_QUERIES).toPandas().sort_values("vec_id")
+    )
+    q_ids = q_pdf["vec_id"].to_numpy(np.int64)
+    if len(q_ids):
+        return q_ids, _matrix(q_pdf)
+    first = emb.select(F.size("embedding")).head(1)
+    return q_ids, np.zeros((0, first[0][0] if first else 0))
+
+
+def partial_topk(
+    scores: np.ndarray,
+    cand_ids: np.ndarray,
+    query_ids: np.ndarray,
+    k: int = TOP_K,
+) -> pd.DataFrame:
+    """Per-batch partial top-k, the one selection kernel of the
+    Python top-k operators: ``scores`` is batch × |Q| (column j scores
+    every candidate against ``query_ids[j]``); self matches and
+    disallowed candidates arrive as ``-inf``. For each query keep the
+    ``k`` best finite scores under the GLOBAL order (score DESC,
+    neighbor_id ASC) — the same total order as :func:`_rank_topk` and
+    the oracle, so the global top-k of the union of per-batch top-ks
+    is exact even for exactly-tied scores (duplicate embeddings).
+    Returns ``query_id long, neighbor_id long, score double`` rows,
+    query-major in ``query_ids`` order; an empty batch or an empty
+    query set yields an empty frame."""
+    n, nq = scores.shape
+    s = scores.T.ravel()  # query-major: entry j·n + i is (query j, cand i)
+    qi = np.repeat(np.arange(nq), n)
+    ids = np.tile(np.asarray(cand_ids, np.int64), nq)
+    ok = np.isfinite(s)
+    s, qi, ids = s[ok], qi[ok], ids[ok]
+    # lexsort keys are last-is-primary: query, then score desc, id asc
+    order = np.lexsort((ids, -s, qi))
+    s, qi, ids = s[order], qi[order], ids[order]
+    top = np.arange(len(qi)) - np.searchsorted(qi, qi) < k
+    return pd.DataFrame(
+        {
+            "query_id": np.asarray(query_ids, np.int64)[qi[top]],
+            "neighbor_id": ids[top],
+            "score": s[top],
+        }
+    )
+
+
+def _rank_topk(partial: DataFrame) -> DataFrame:
+    """The global merge of every top-k operator: one window over the
+    (query_id, neighbor_id, score) candidates, ranked by (score DESC,
+    neighbor_id ASC), keeping rank ≤ TOP_K."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), "neighbor_id")
+    return (
+        partial.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= TOP_K)
+        .select("query_id", "neighbor_id", "rank")
+    )
+
+
+def _exact_topk(
+    spark: SparkSession, emb: DataFrame, cand: DataFrame
+) -> DataFrame:
+    """Exact cosine top-k of the ``emb`` query set over ``cand``
+    (plain row division — a zero vector scores NaN and never ranks):
+    broadcast unit queries, one BLAS GEMM per Arrow batch of
+    candidates, :func:`partial_topk`, :func:`_rank_topk`."""
     from collections.abc import Iterator
 
-    emb = _emb(spark, sf_dir).select("vec_id", "embedding")
-
-    q_pdf = emb.filter(F.col("vec_id") < N_QUERIES).toPandas()
-    q_ids = q_pdf["vec_id"].to_numpy(np.int64)
-    q_mat = np.vstack(q_pdf["embedding"].to_numpy()).astype(np.float64)
+    q_ids, q_mat = _collect_queries(emb)
     q_mat = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
     bc = spark.sparkContext.broadcast((q_ids, q_mat))
 
@@ -99,41 +168,30 @@ def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             if not len(pdf):
                 continue
             ids_c = pdf["vec_id"].to_numpy(np.int64)
-            mc = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
+            mc = _matrix(pdf)
             mc = mc / np.linalg.norm(mc, axis=1, keepdims=True)
             scores = mc @ mq.T  # |batch| × |Q|
             scores[ids_c[:, None] == ids_q[None, :]] = -np.inf  # self
-            k = min(TOP_K, len(ids_c))
-            # Per-batch winners must use the SAME lexicographic key as
-            # the global window and the oracle — (score desc, id asc) —
-            # or exactly-tied scores (duplicate embeddings) can drop
-            # the smaller-id neighbor the oracle ranks.
-            parts = []
-            for j, qid in enumerate(ids_q):
-                col = scores[:, j]
-                order = np.lexsort((ids_c, -col))[:k]
-                sel = order[np.isfinite(col[order])]
-                parts.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": np.full(len(sel), qid, np.int64),
-                            "neighbor_id": ids_c[sel],
-                            "score": col[sel],
-                        }
-                    )
-                )
-            if parts:
-                yield pd.concat(parts, ignore_index=True)
+            yield partial_topk(scores, ids_c, ids_q)
 
-    partial = emb.mapInPandas(
-        stage, "query_id long, neighbor_id long, score double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), "neighbor_id")
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _rank_topk(cand.mapInPandas(stage, _PARTIAL_SCHEMA))
+
+
+def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact cosine top-k, scale-shaped:
+
+    - queries (vec_id < N_QUERIES) are broadcast as a dense matrix;
+    - candidates stream partition-parallel through ``mapInPandas``,
+      each Arrow batch scored with one BLAS GEMM;
+    - **partial top-k per batch** (:func:`partial_topk`): only |Q|·k
+      (score, id) pairs leave each batch, so the final shuffle ranks
+      |batches|·|Q|·k rows instead of N·|Q| — at 100 TB the difference
+      between shuffling gigabytes of scores and kilobytes.
+    - exact global rank via one window over the tiny partial set
+      (:func:`_rank_topk`).
+    """
+    emb = _emb(spark, sf_dir).select("vec_id", "embedding")
+    return _exact_topk(spark, emb, emb)
 
 
 ANN_BRUTEFORCE_TOPK_SQL = f"""
@@ -209,12 +267,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "neighbor_id",
         cosine(F.col("qv"), F.col("cv")).alias("score"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _rank_topk(scored)
 
 
 _IVF_NCENTROIDS = 16
@@ -275,9 +328,7 @@ def _ivf_train(emb: DataFrame, nlist: int = _IVF_NCENTROIDS):
     sample_pdf = (
         emb.orderBy(F.xxhash64("vec_id")).limit(train_max).toPandas()
     )
-    sample = _unit_rows(
-        np.vstack(sample_pdf["embedding"].to_numpy()).astype(np.float64)
-    )
+    sample = _unit_rows(_matrix(sample_pdf))
     rng = np.random.RandomState(42)
     n_cent = min(nlist, len(sample))
     centroids = sample[rng.choice(len(sample), n_cent, replace=False)]
@@ -319,9 +370,7 @@ def _ivf_assign(
         for pdf in batches:
             if not len(pdf):
                 continue
-            m = _unit_rows(
-                np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
-            )
+            m = _unit_rows(_matrix(pdf))
             out = {
                 "vec_id": pdf["vec_id"].to_numpy(np.int64),
                 "list_id": (m @ cents.T).argmax(axis=1).astype(np.int32),
@@ -384,10 +433,8 @@ def _ivf_search(spark: SparkSession, emb: DataFrame, centroids) -> DataFrame:
     assignment GEMM itself — O(N·nlist·d) per call, the price of
     ad-hoc IVF; build_ivf_index / ann_ivf_topk_indexed amortize it
     (assign once at build, probes partition-prune thereafter).
-    Each batch emits at most |Q|·k rows (its
-    local top-k by the global (score DESC, neighbor_id) order), so
-    the final window sees ≤ partitions·|Q|·k rows — the global top-k
-    of a union of per-batch top-ks taken under the SAME total order.
+    Each batch emits at most |Q|·k rows (:func:`partial_topk`), so
+    the final window sees ≤ partitions·|Q|·k rows.
 
     nprobe scales as √nlist (the standard IVF knob coupling): at the
     pinned 16 centroids isqrt(16) = 4 = _IVF_NPROBE — identical to
@@ -409,36 +456,19 @@ def _ivf_search(spark: SparkSession, emb: DataFrame, centroids) -> DataFrame:
 
     scored = emb.repartition(
         spark.sparkContext.defaultParallelism
-    ).mapInPandas(
-        _ivf_rerank_stage(bc, stored_assign=False),
-        "query_id long, neighbor_id long, score double",
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    ).mapInPandas(_ivf_rerank_stage(bc, stored_assign=False), _PARTIAL_SCHEMA)
+    return _rank_topk(scored)
 
 
 def _ivf_probe_mask(emb: DataFrame, centroids):
     """Driver-side probe map shared by the fused search and the
-    indexed probe: collect the N_QUERIES query vectors (bounded), pick
-    each query's nprobe lists with a STABLE argsort (first-listed
+    indexed probe: the bounded query collect (:func:`_collect_queries`),
+    each query's nprobe lists picked with a STABLE argsort (first-listed
     centroid wins exact ties — both consumers must agree or the
-    index's same-neighbors promise breaks), and build the boolean
-    mask[list, query] the rerank kernel filters with."""
-    import numpy as np
-
-    q_pdf = (
-        emb.filter(F.col("vec_id") < N_QUERIES)
-        .toPandas()
-        .sort_values("vec_id")
-    )
-    q_ids = q_pdf["vec_id"].to_numpy(np.int64)
-    q_mat = _unit_rows(
-        np.vstack(q_pdf["embedding"].to_numpy()).astype(np.float64)
-    )
+    index's same-neighbors promise breaks), and the boolean
+    mask[list, query] the rerank kernel masks with."""
+    q_ids, q_mat = _collect_queries(emb)
+    q_mat = _unit_rows(q_mat)
     nprobe = max(_IVF_NPROBE, math.isqrt(len(centroids)))
     probed = np.argsort(-(q_mat @ centroids.T), axis=1, kind="stable")[
         :, :nprobe
@@ -456,50 +486,27 @@ def _ivf_rerank_stage(bc, *, stored_assign: bool):
     ``ann_ivf_topk_indexed`` (assignment read from the index's stored
     ``list_id`` — the amortized path). Scoring, probe masking and the
     per-batch top-k are identical, so the two paths return the same
-    neighbors by construction. Each batch emits ≤ |Q|·k rows."""
+    neighbors by construction. Candidates outside a query's probed
+    lists, and the query itself, score ``-inf``; :func:`partial_topk`
+    keeps ≤ k rows per query of each batch."""
     from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
 
     def search_stage(
         batches: Iterator[pd.DataFrame],
     ) -> Iterator[pd.DataFrame]:
         cents, qids, qmat, m = bc.value
-        k = TOP_K
         for pdf in batches:
             if not len(pdf):
                 continue
             vids = pdf["vec_id"].to_numpy(np.int64)
-            v = _unit_rows(
-                np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
-            )
+            v = _unit_rows(_matrix(pdf))
             if stored_assign:
                 assign = pdf["list_id"].to_numpy(np.int64)
             else:
                 assign = (v @ cents.T).argmax(axis=1)
-            allowed = m[assign]  # batch_n × |Q|
             scores = v @ qmat.T  # batch_n × |Q| exact cosines (unit rows)
-            out_q, out_n, out_s = [], [], []
-            for qi, qid in enumerate(qids):
-                ok = allowed[:, qi] & (vids != qid)
-                if not ok.any():
-                    continue
-                s, vv = scores[ok, qi], vids[ok]
-                # local top-k under the global (score DESC, id ASC)
-                # order — lexsort keys are last-is-primary
-                top = np.lexsort((vv, -s))[:k]
-                out_q.append(np.full(len(top), qid, dtype=np.int64))
-                out_n.append(vv[top])
-                out_s.append(s[top])
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(out_q),
-                        "neighbor_id": np.concatenate(out_n),
-                        "score": np.concatenate(out_s),
-                    }
-                )
+            scores[~m[assign] | (vids[:, None] == qids[None, :])] = -np.inf
+            yield partial_topk(scores, vids, qids)
 
     return search_stage
 
@@ -567,8 +574,6 @@ def ann_ivf_exact_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     if nlist > _IVF_NCENTROIDS:
         import warnings
 
-        import numpy as np
-
         cent_pdf = (
             raw.filter(
                 (F.col("vec_id") >= _IVF_PIN_LO)
@@ -579,7 +584,7 @@ def ann_ivf_exact_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # Sparse vec_ids can leave the widened pinned range thin (the
         # quantizer shrinks, shrinking nprobe/recall with it) or empty
-        # (np.vstack of nothing raises). Thin gets a signal; empty
+        # (no centroid matrix to build). Thin gets a signal; empty
         # falls back to the pinned 16-centroid path below, which
         # selects by the same range bounds and tolerates any hit count.
         if len(cent_pdf) == 0:
@@ -599,12 +604,7 @@ def ann_ivf_exact_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                     RuntimeWarning,
                     stacklevel=2,
                 )
-            centroids = _unit_rows(
-                np.vstack(cent_pdf["embedding"].to_numpy()).astype(
-                    np.float64
-                )
-            )
-            return _ivf_search(spark, raw, centroids)
+            return _ivf_search(spark, raw, _unit_rows(_matrix(cent_pdf)))
     emb = raw.select("vec_id", _as_double("embedding").alias("v"))
     emb = emb.withColumn("vn", _norm(F.col("v")))
     cents = emb.filter(
@@ -664,12 +664,7 @@ def ann_ivf_exact_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _rank_topk(scored)
 
 
 ANN_IVF_EXACT_RERANK_SQL = f"""
@@ -766,13 +761,12 @@ def load_ivf_centroids(spark: SparkSession, index_path: str):
     centroids mis-routes probes (r09 ADVICE)."""
     import os
 
-    import numpy as np
-
     cdir = index_path.rstrip("/") + "/_centroids"
     if not os.path.isdir(cdir):
         return None
-    pdf = spark.read.parquet(cdir).orderBy("centroid_id").toPandas()
-    return np.vstack(pdf["vec"].to_numpy()).astype(np.float64)
+    return _matrix(
+        spark.read.parquet(cdir).orderBy("centroid_id").toPandas(), "vec"
+    )
 
 
 def _lock_holder_alive(lock_path: str):
@@ -1203,16 +1197,8 @@ def ann_ivf_topk_indexed(
     bc = spark.sparkContext.broadcast((centroids, q_ids, q_mat, mask))
     scored = lists.repartition(
         spark.sparkContext.defaultParallelism
-    ).mapInPandas(
-        _ivf_rerank_stage(bc, stored_assign=True),
-        "query_id long, neighbor_id long, score double",
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    ).mapInPandas(_ivf_rerank_stage(bc, stored_assign=True), _PARTIAL_SCHEMA)
+    return _rank_topk(scored)
 
 
 #: Above this the broadcast kernel's collected matrix stops fitting an
@@ -1337,14 +1323,9 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_blocks = max(_GRID_BLOCKS, -(-n // _BLOCK_TARGET_ROWS))
         return embedding_near_dup_blocked(spark, sf_dir, n_blocks=n_blocks)
 
-    def _matrix(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
-        ids = pdf["vec_id"].to_numpy(np.int64)
-        m = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
-        norms = np.linalg.norm(m, axis=1, keepdims=True)
-        norms[norms == 0.0] = 1.0
-        return ids, m / norms
-
-    ids_b, mat_b = _matrix(emb.toPandas())
+    b_pdf = emb.toPandas()
+    ids_b = b_pdf["vec_id"].to_numpy(np.int64)
+    mat_b = _unit_rows(_matrix(b_pdf))
     _warn_if_chance_dominated(
         len(ids_b), mat_b.shape[1], NEAR_DUP_COSINE, op="embedding_near_dup"
     )
@@ -1360,7 +1341,8 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             if not len(pdf):
                 continue
-            ids_a, mat_a = _matrix(pdf)
+            ids_a = pdf["vec_id"].to_numpy(np.int64)
+            mat_a = _unit_rows(_matrix(pdf))
             for s in range(0, len(ids_a), slab):
                 ids_s = ids_a[s : s + slab]
                 scores = mat_a[s : s + slab] @ nbt
@@ -1426,7 +1408,7 @@ def label_top_eigenvalue(spark: SparkSession, sf_dir: str) -> DataFrame:
                 continue
             out = []
             for lb, g in pdf.groupby("label"):
-                m = np.vstack(g["embedding"].to_numpy()).astype(np.float64)
+                m = _matrix(g)
                 out.append(
                     (
                         int(lb),
@@ -1550,10 +1532,7 @@ def blocked_cosine_pairs(
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         bi, bj = int(pdf["bi"].iloc[0]), int(pdf["bj"].iloc[0])
         ids = pdf["vec_id"].to_numpy(np.int64)
-        m = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
-        norms = np.linalg.norm(m, axis=1, keepdims=True)
-        norms[norms == 0.0] = 1.0
-        m = m / norms
+        m = _unit_rows(_matrix(pdf))
         side_i = pdf["blk"].to_numpy() == bi
         if bi == bj:
             mi, ii = m, ids
@@ -1832,7 +1811,7 @@ def kmeans_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _emb(spark, sf_dir).select("vec_id", "embedding")
     init = emb.orderBy("vec_id").limit(_KMEANS_K).toPandas()
-    centroids = np.vstack(init["embedding"].to_numpy()).astype(np.float64)
+    centroids = _matrix(init)
 
     def assign_df(cents: np.ndarray) -> DataFrame:
         bc = spark.sparkContext.broadcast(cents)
@@ -1843,7 +1822,7 @@ def kmeans_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
             for pdf in batches:
                 if not len(pdf):
                     continue
-                m = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
+                m = _matrix(pdf)
                 # argmin ||x-c||² = argmin c·c - 2 x·c (x·x constant per row)
                 d2 = c2[None, :] - 2.0 * (m @ c.T)
                 yield pd.DataFrame(
@@ -1901,11 +1880,11 @@ def ann_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     or spills.
 
     Same partial-top-k shape as the exact operator (broadcast quantized
-    queries, per-batch integer GEMM, |Q|·k rows leave each batch); the
-    int32-accumulated matmul here stands in for the FBGEMM/VNNI int8
-    kernels a production deployment would JNI into."""
-    import numpy as np
-    import pandas as pd
+    queries, per-batch integer GEMM, then the shared
+    :func:`partial_topk` — |Q|·k rows leave each batch — and
+    :func:`_rank_topk`); the int32-accumulated matmul here stands in
+    for the FBGEMM/VNNI int8 kernels a production deployment would JNI
+    into."""
     from collections.abc import Iterator
 
     emb = _emb(spark, sf_dir).select("vec_id", "embedding")
@@ -1914,10 +1893,8 @@ def ann_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         unit = mat / np.linalg.norm(mat, axis=1, keepdims=True)
         return np.clip(np.rint(unit * 127.0), -127, 127).astype(np.int8)
 
-    q_pdf = emb.filter(F.col("vec_id") < N_QUERIES).toPandas()
-    q_ids = q_pdf["vec_id"].to_numpy(np.int64)
-    q_q = quantize(np.vstack(q_pdf["embedding"].to_numpy()).astype(np.float64))
-    bc = spark.sparkContext.broadcast((q_ids, q_q))
+    q_ids, q_mat = _collect_queries(emb)
+    bc = spark.sparkContext.broadcast((q_ids, quantize(q_mat)))
 
     def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ids_q, mq = bc.value
@@ -1926,39 +1903,13 @@ def ann_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             if not len(pdf):
                 continue
             ids_c = pdf["vec_id"].to_numpy(np.int64)
-            mc = quantize(
-                np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
-            ).astype(np.int32)
+            mc = quantize(_matrix(pdf)).astype(np.int32)
             scores = mc @ mq32.T  # int32 accumulate: |batch| × |Q|
             scores = scores.astype(np.float64) / (127.0 * 127.0)
             scores[ids_c[:, None] == ids_q[None, :]] = -np.inf
-            k = min(TOP_K, len(ids_c))
-            parts = []
-            for j, qid in enumerate(ids_q):
-                col = scores[:, j]
-                order = np.lexsort((ids_c, -col))[:k]
-                sel = order[np.isfinite(col[order])]
-                parts.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": np.full(len(sel), qid, np.int64),
-                            "neighbor_id": ids_c[sel],
-                            "score": col[sel],
-                        }
-                    )
-                )
-            if parts:
-                yield pd.concat(parts, ignore_index=True)
+            yield partial_topk(scores, ids_c, ids_q)
 
-    partial = emb.mapInPandas(
-        stage, "query_id long, neighbor_id long, score double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), "neighbor_id")
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _rank_topk(emb.mapInPandas(stage, _PARTIAL_SCHEMA))
 
 
 #: Negatives per query for contrastive sampling.
@@ -2082,10 +2033,7 @@ def semdedup(
         id_col
     ).limit(k).toPandas()
     c_ids = cents[id_col].to_numpy(np.int64)
-    c_mat = np.vstack(cents["embedding"].to_numpy()).astype(np.float64)
-    c_norms = np.linalg.norm(c_mat, axis=1, keepdims=True)
-    c_norms[c_norms == 0.0] = 1.0
-    c_mat = c_mat / c_norms
+    c_mat = _unit_rows(_matrix(cents))
     bc = spark.sparkContext.broadcast((c_ids, c_mat))
 
     def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -2093,10 +2041,7 @@ def semdedup(
         for pdf in batches:
             if not len(pdf):
                 continue
-            m = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
-            norms = np.linalg.norm(m, axis=1, keepdims=True)
-            norms[norms == 0.0] = 1.0
-            m = m / norms
+            m = _unit_rows(_matrix(pdf))
             sims = m @ c.T
             # np.argmax takes the FIRST max → ties go to the lowest
             # centroid id (rows sorted by id), matching the oracle's
@@ -2116,10 +2061,7 @@ def semdedup(
 
     def dedup_cluster(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(id_col).reset_index(drop=True)
-        m = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
-        norms = np.linalg.norm(m, axis=1, keepdims=True)
-        norms[norms == 0.0] = 1.0
-        m = m / norms
+        m = _unit_rows(_matrix(pdf))
         n = len(m)
         # Row-blocked strictly-lower-triangle scan: each block GEMMs
         # only against rows with smaller ids, so peak memory is
@@ -2248,62 +2190,17 @@ def ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring — post-filtering a global top-k instead would return
     fewer than k hits whenever the filter is selective.
 
-    Same partial-top-k scale shape as :func:`ann_bruteforce_topk`:
-    broadcast queries, per-batch GEMM, |batches|·|Q|·k rows shuffled.
-    Queries are NOT label-filtered (search from anywhere into the
-    filtered corpus), and self-matches are excluded."""
-    import pandas as pd
-    from collections.abc import Iterator
-
+    Same partial-top-k scale shape as :func:`ann_bruteforce_topk`
+    (the shared ``_exact_topk`` pass over the filtered candidates):
+    broadcast queries, per-batch GEMM, :func:`partial_topk`,
+    |batches|·|Q|·k rows shuffled. Queries are NOT label-filtered
+    (search from anywhere into the filtered corpus), and self-matches
+    are excluded."""
     emb = _emb(spark, sf_dir).select("vec_id", "embedding", "label")
-
-    q_pdf = emb.filter(F.col("vec_id") < N_QUERIES).toPandas()
-    q_ids = q_pdf["vec_id"].to_numpy(np.int64)
-    q_mat = np.vstack(q_pdf["embedding"].to_numpy()).astype(np.float64)
-    q_mat = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
-    bc = spark.sparkContext.broadcast((q_ids, q_mat))
-
     cand = emb.filter(F.col("label") == _FILTER_LABEL).select(
         "vec_id", "embedding"
     )
-
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_q, mq = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids_c = pdf["vec_id"].to_numpy(np.int64)
-            mc = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
-            mc = mc / np.linalg.norm(mc, axis=1, keepdims=True)
-            scores = mc @ mq.T
-            scores[ids_c[:, None] == ids_q[None, :]] = -np.inf
-            k = min(TOP_K, len(ids_c))
-            parts = []
-            for j, qid in enumerate(ids_q):
-                col = scores[:, j]
-                order = np.lexsort((ids_c, -col))[:k]
-                sel = order[np.isfinite(col[order])]
-                parts.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": np.full(len(sel), qid, np.int64),
-                            "neighbor_id": ids_c[sel],
-                            "score": col[sel],
-                        }
-                    )
-                )
-            if parts:
-                yield pd.concat(parts, ignore_index=True)
-
-    partial = cand.mapInPandas(
-        stage, "query_id long, neighbor_id long, score double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), "neighbor_id")
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _exact_topk(spark, emb, cand)
 
 
 ann_filtered_topk.__doc__ = ann_filtered_topk.__doc__.format(
@@ -2385,7 +2282,7 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             if not len(pdf):
                 continue
-            m = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
+            m = _matrix(pdf)
             peak = float(np.abs(m).max()) if m.size else 0.0
             if peak > _COV_MAX_ABS:
                 raise ValueError(
@@ -2533,7 +2430,7 @@ def embedding_pca_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             if not len(pdf):
                 continue
-            m = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
+            m = _matrix(pdf)
             scores = m @ a.T
             yield pd.DataFrame(
                 {

@@ -577,6 +577,48 @@ def test_ann_quantized_recall_vs_bruteforce(spark):
     assert recall >= 0.9, f"quantized top-k recall {recall:.2f}"
 
 
+def test_ann_topk_without_query_ids_returns_zero_rows(spark, tmp_path):
+    """Wide keys (every vec_id shifted by 2**40) leave no ``vec_id <
+    N_QUERIES``: the top-k operators return an empty frame with the
+    declared schema instead of raising on the empty query matrix — the
+    two oracle-paired ones row-for-row equal to DuckDB, which returns 0
+    rows for the same files."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from data_ingestion_tool_spark.operators import registry
+    from tests.conftest import SF_SMOKE, make_duck
+    from tests.parity import compare
+
+    t = pq.read_table(f"{SF_SMOKE}/embeddings.parquet")
+    t = t.set_column(
+        t.schema.get_field_index("vec_id"), "vec_id", pc.add(t["vec_id"], 2**40)
+    )
+    pq.write_table(t, tmp_path / "embeddings.parquet")
+    reg = registry()
+    con = make_duck(str(tmp_path))
+    try:
+        for name in (
+            "ann_bruteforce_topk",
+            "ann_filtered_topk",
+            "ann_quantized_topk",
+            "ann_ivf_topk",
+        ):
+            sdf = reg[name].builder(spark, str(tmp_path))
+            assert sdf.schema.simpleString() == (
+                "struct<query_id:bigint,neighbor_id:bigint,rank:int>"
+            ), name
+            if reg[name].oracle is None:
+                assert sdf.count() == 0, name
+            else:
+                ddf = con.execute(reg[name].oracle).df()
+                assert len(ddf) == 0, name
+                problems = compare(sdf, ddf)
+                assert not problems, f"{name}: " + "; ".join(problems)
+    finally:
+        con.close()
+
+
 def test_sketch_user_reach_error_bound(spark):
     """HLL-sketch reach must land within 5% of exact distinct users
     per event_type, and the daily→union re-merge must not lose days."""

@@ -842,19 +842,14 @@ def test_every_driver_materialization_site_is_bounded():
     import data_ingestion_tool_spark as pkg
 
     BOUNDED = {
+        # the top-k operators' and the IVF probe map's query collect:
+        # ≤ N_QUERIES rows (the probe map is driver-computed before the
+        # distributed pass)
+        ("operators/similarity.py", "_collect_queries"),
         ("operators/similarity.py", "_ivf_train"),
-        # fused IVF search / indexed probe: N_QUERIES-row query collect
-        # (the probe map is driver-computed before the distributed pass)
-        ("operators/similarity.py", "_ivf_probe_mask"),
-        ("operators/similarity.py", "_ivf_search"),
-        ("operators/similarity.py", "ann_bruteforce_topk"),
-        ("operators/similarity.py", "ann_filtered_topk"),
-        ("operators/similarity.py", "ann_ivf_topk"),
-        ("operators/similarity.py", "ann_ivf_topk_indexed"),
         # auto-nlist branch: ≤ nlist-row pinned-range centroid collect
         # (nlist ≤ _IVF_NLIST_MAX by construction)
         ("operators/similarity.py", "ann_ivf_exact_rerank"),
-        ("operators/similarity.py", "ann_quantized_topk"),
         ("operators/similarity.py", "embedding_near_dup"),
         ("operators/similarity.py", "embedding_pca_scores"),
         ("operators/similarity.py", "kmeans_labels"),

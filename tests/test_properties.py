@@ -5,7 +5,7 @@ each example runs real Spark jobs.
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from data_ingestion_tool_spark.validate import validate_and_split
@@ -96,3 +96,70 @@ def test_bpe_learn_equals_reference(words, n_merges):
     from data_ingestion_tool_spark.operators.text import bpe_learn, bpe_reference
 
     assert bpe_learn(words.items(), n_merges) == bpe_reference(words, n_merges)
+
+
+#: Score pool for the top-k kernel: few distinct values force exact
+#: ties; ±inf and NaN are the non-finite entries it must drop.
+_SCORES = st.sampled_from(
+    [1.0, 0.5, 0.5000000000000001, 0.0, -0.0, -0.25, -float("inf"),
+     float("inf"), float("nan")]
+)
+
+_TOPK_CASES = st.tuples(st.integers(0, 12), st.integers(0, 4)).flatmap(
+    lambda shape: st.tuples(
+        st.lists(
+            st.lists(_SCORES, min_size=shape[1], max_size=shape[1]),
+            min_size=shape[0],
+            max_size=shape[0],
+        ),
+        st.lists(st.integers(0, 20), min_size=shape[0], max_size=shape[0]),
+        st.lists(st.integers(0, 20), min_size=shape[1], max_size=shape[1]),
+    )
+)
+
+
+@given(case=_TOPK_CASES, k=st.integers(1, 15))
+@example(case=([], [], [1, 2]), k=3)  # empty batch
+@example(case=([[], [], []], [4, 5, 6], []), k=2)  # zero queries
+@example(  # ties, -inf, NaN, k larger than the batch
+    case=(
+        [[0.5, -float("inf")], [0.5, float("nan")], [float("nan"), 0.5],
+         [-float("inf"), 0.5]],
+        [3, 1, 2, 0],
+        [7, 8],
+    ),
+    k=9,
+)
+@settings(max_examples=300, deadline=None)
+def test_partial_topk_equals_sorted_reference(case, k):
+    """The shared partial top-k kernel keeps, per query column, the k
+    best finite scores under (score desc, id asc) — exactly what a
+    brute-force ``sorted`` over the finite (score, id) pairs keeps."""
+    import math
+
+    import numpy as np
+
+    from data_ingestion_tool_spark.operators.similarity import partial_topk
+
+    rows, cand_ids, query_ids = case
+    scores = np.array(rows, dtype=np.float64).reshape(
+        len(cand_ids), len(query_ids)
+    )
+    got = partial_topk(
+        scores, np.array(cand_ids, np.int64), np.array(query_ids, np.int64), k
+    )
+    want = [
+        (q, c, s)
+        for j, q in enumerate(query_ids)
+        for s, c in sorted(
+            (
+                (scores[i, j], cand_ids[i])
+                for i in range(len(cand_ids))
+                if math.isfinite(scores[i, j])
+            ),
+            key=lambda t: (-t[0], t[1]),
+        )[:k]
+    ]
+    assert list(got.columns) == ["query_id", "neighbor_id", "score"]
+    assert [str(t) for t in got.dtypes] == ["int64", "int64", "float64"]
+    assert list(got.itertuples(index=False, name=None)) == want

@@ -51,13 +51,16 @@ def _supply_graph(
     graph.
 
     Node ids are BIGINT end-to-end (round 12, guide §2.3 narrower
-    types): customer ``c`` is ``2c``, supplier ``s`` is ``2s+1`` — the
-    parity bit replaces the old ``"c"||key`` / ``"s"||key`` STRING ids,
-    so every setup distinct, the degree agg, the per-iteration src
-    join, and the dst hash-agg hash/compare/shuffle 8-byte longs
-    instead of variable-width strings. The public ``node`` column is
-    decoded back to the identical string form in the final projection
-    only (:func:`pagerank_supply_graph`), so results are byte-equal.
+    types): customer ``c`` is ``c``, supplier ``s`` is ``~s`` (bitwise
+    NOT, i.e. ``-s-1``) — the sign bit replaces the old ``"c"||key`` /
+    ``"s"||key`` STRING ids, so every setup distinct, the degree agg,
+    the per-iteration src join, and the dst hash-agg hash/compare/
+    shuffle 8-byte longs instead of variable-width strings. The
+    encoding is one-to-one for every non-negative int64 key and does
+    no arithmetic, so no key width can overflow it (``2c`` would, under
+    ANSI, from 2^62 up). The public ``node`` column is decoded back to the identical string form
+    in the final projection only (:func:`pagerank_supply_graph`), so
+    results are byte-equal.
 
     The distinct pair table is returned so the caller can cache it
     (round 12): ``pairs`` feeds FOUR subtrees — both union directions
@@ -72,11 +75,10 @@ def _supply_graph(
     pairs = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .select(
-            # cast BEFORE doubling (r12 ADVICE): if a source ever loads
-            # keys as INT, `key * 2` would stay 32-bit and wrap silently
-            # at scale under non-ANSI arithmetic
-            (F.col("o_custkey").cast("bigint") * 2).alias("cust"),
-            (F.col("l_suppkey").cast("bigint") * 2 + 1).alias("supp"),
+            # cast first: node ids are BIGINT end-to-end whatever
+            # width a source loads the keys as
+            F.col("o_custkey").cast("bigint").alias("cust"),
+            F.bitwise_not(F.col("l_suppkey").cast("bigint")).alias("supp"),
         )
         .distinct()
     )
@@ -161,18 +163,16 @@ def pagerank_supply_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
             ranks = _pr_iteration(edges_deg, ranks, teleport).localCheckpoint(
                 eager=(it == _PR_ITERS - 1)
             )
-        # decode the BIGINT node ids (2c / 2s+1, see _supply_graph)
-        # back to the public "c{key}"/"s{key}" strings — one projection
-        # over the final checkpointed table, identical output to the
-        # all-string lineage. (2k+1) div 2 == k, so both parities share
-        # the `node div 2` decode.
+        # decode the BIGINT node ids (c / ~s, see _supply_graph) back
+        # to the public "c{key}"/"s{key}" strings by sign — one
+        # projection over the final checkpointed table, identical
+        # output to the all-string lineage. `~node` undoes the NOT
+        # without arithmetic (`-node-1` would overflow at -2^63).
+        node = F.col("node")
         return ranks.select(
-            F.concat(
-                F.when(F.col("node") % 2 == 0, F.lit("c")).otherwise(
-                    F.lit("s")
-                ),
-                F.expr("node div 2"),
-            ).alias("node"),
+            F.when(node >= 0, F.concat(F.lit("c"), node))
+            .otherwise(F.concat(F.lit("s"), F.bitwise_not(node)))
+            .alias("node"),
             "r",
         )
 

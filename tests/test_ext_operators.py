@@ -619,6 +619,36 @@ def test_ann_topk_without_query_ids_returns_zero_rows(spark, tmp_path):
         con.close()
 
 
+def test_pagerank_wide_keys_match_oracle(spark, tmp_path):
+    """Keys near the top of int64 (``o_custkey`` and ``l_suppkey``
+    shifted by 2**62) must not overflow the BIGINT node encoding:
+    pagerank still runs under ANSI and matches DuckDB, which computes
+    the same string-keyed query on the same files."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from data_ingestion_tool_spark.operators import registry
+    from tests.conftest import SF_SMOKE, make_duck
+    from tests.parity import compare
+
+    for table, col in (("orders", "o_custkey"), ("lineitem", "l_suppkey")):
+        t = pq.read_table(f"{SF_SMOKE}/{table}.parquet")
+        t = t.set_column(
+            t.schema.get_field_index(col), col, pc.add(t[col], 2**62)
+        )
+        pq.write_table(t, tmp_path / f"{table}.parquet")
+    spec = registry()["pagerank_supply_graph"]
+    sdf = spec.builder(spark, str(tmp_path))
+    con = make_duck(str(tmp_path))
+    try:
+        ddf = con.execute(spec.oracle).df()
+    finally:
+        con.close()
+    assert len(ddf) > 0
+    problems = compare(sdf, ddf)
+    assert not problems, "; ".join(problems)
+
+
 def test_sketch_user_reach_error_bound(spark):
     """HLL-sketch reach must land within 5% of exact distinct users
     per event_type, and the daily→union re-merge must not lose days."""

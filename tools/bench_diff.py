@@ -1,31 +1,11 @@
 """Compare two bench JSON lines (e.g. BENCH_r02.json vs BENCH_r03.json):
 
     python tools/bench_diff.py BENCH_r02.json BENCH_r03.json [--flag 1.3]
-                               [--normalize]
 
 Prints per-query deltas for the shared set, the added/removed names,
 and exits 1 when any shared query regressed beyond --flag (default
 1.3×) — the guard the round workflow runs before trusting a "faster"
 total that actually hides a regression under new entries.
-
---normalize (round 8, r07 verdict item 3) divides the new side by the
-host-state factor derived from the calibration probes both records
-carry (bench.py records fixed-work gemm/sort/spark-job axes from r07
-on, plus a disk axis from r09): factor = MEDIAN of the new/old probe
-ratios (round 9 — was geomean: the r09 close-out compared two records
-whose gemm axes differed 2.7x for environmental reasons, BLAS
-threading/turbo, while sort and scheduler read flat; the geomean let
-that single divergent axis drag the factor to 0.72 and inflate a
-raw-flat 1.02x comparison to a fictitious 1.41x "normalized"
-regression sweep. The median tracks the MAJORITY of resource axes, so
-one axis diverging for reasons that don't touch the query mix cannot
-poison the factor; per-axis ratios stay visible in the records for
-the case where the outlier axis IS the story). Identical probe inputs
-every run mean the factor measures the HOST, so the normalized ratio
-isolates what the CODE did — the r06/r07 machine-state episodes are
-exactly what this divides out. With --normalize, the --flag
-regression check applies to the normalized ratios. Records without a
-probe (pre-r07) can only be compared raw.
 """
 
 from __future__ import annotations
@@ -54,42 +34,12 @@ def load(path: str) -> dict[str, float]:
     return load_doc(path)["queries"]
 
 
-def host_factor(old_doc: dict, new_doc: dict) -> float | None:
-    """Median of the new/old calibration-probe ratios (robust to one
-    environmentally-divergent axis — see module docstring), or None
-    when either record predates the probe."""
-    old_c = old_doc.get("calibration")
-    new_c = new_doc.get("calibration")
-    if not old_c or not new_c:
-        return None
-    axes = sorted(set(old_c) & set(new_c))
-    if not axes:
-        return None
-    # Both sides must be positive: a 0.0 probe value (timer resolution
-    # or a degenerate record) on EITHER side is degenerate;
-    # such an axis is dropped and the rest still normalize.
-    ratios = sorted(
-        new_c[a] / old_c[a]
-        for a in axes
-        if old_c[a] > 0 and new_c[a] > 0
-    )
-    if not ratios:
-        return None
-    mid = len(ratios) // 2
-    if len(ratios) % 2:
-        return ratios[mid]
-    return 0.5 * (ratios[mid - 1] + ratios[mid])
-
-
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("old")
     ap.add_argument("new")
     ap.add_argument("--flag", type=float, default=1.3,
                     help="regression ratio threshold (default 1.3)")
-    ap.add_argument("--normalize", action="store_true",
-                    help="divide the new side by the calibration-probe "
-                         "host factor before comparing")
     args = ap.parse_args(argv)
 
     old_doc, new_doc = load_doc(args.old), load_doc(args.new)
@@ -101,46 +51,26 @@ def main(argv: list[str] | None = None) -> int:
         tree = doc.get("tree")
         if tree:
             mark = " (dirty)" if doc.get("dirty") else ""
-            extra = ""
-            if doc.get("sweep_healthy") is False:
-                extra = " [sweep_healthy: false — contended record]"
-            print(f"{side} tree: {tree[:12]}{mark}{extra}")
+            print(f"{side} tree: {tree[:12]}{mark}")
         else:
             print(f"{side} tree: unstamped (pre-r11 record)")
-    factor = 1.0
-    if args.normalize:
-        f = host_factor(old_doc, new_doc)
-        if f is None:
-            print("--normalize: no calibration probe in one or both "
-                  "records (pre-r07?); comparing raw", file=sys.stderr)
-        else:
-            factor = f
-            print(f"host factor (new/old probes, median): {factor:.3f} "
-                  f"— normalized columns divide new by this")
     shared = sorted(set(old) & set(new))
     added = sorted(set(new) - set(old))
     removed = sorted(set(old) - set(new))
 
     regressions = []
-    norm_hdr = f" {'norm':>6s}" if factor != 1.0 else ""
-    print(f"{'query':42s} {'old':>7s} {'new':>7s} {'ratio':>6s}{norm_hdr}")
+    print(f"{'query':42s} {'old':>7s} {'new':>7s} {'ratio':>6s}")
     for name in sorted(shared, key=lambda n: -(new[n] / max(old[n], 1e-9))):
         ratio = new[name] / max(old[name], 1e-9)
-        norm = ratio / factor
-        mark = " <-- REGRESSED" if norm > args.flag else ""
-        norm_col = f" {norm:6.2f}" if factor != 1.0 else ""
+        mark = " <-- REGRESSED" if ratio > args.flag else ""
         print(f"{name:42s} {old[name]:7.2f} {new[name]:7.2f} "
-              f"{ratio:6.2f}{norm_col}{mark}")
-        if norm > args.flag:
+              f"{ratio:6.2f}{mark}")
+        if ratio > args.flag:
             regressions.append(name)
     t_old = sum(old[n] for n in shared)
     t_new = sum(new[n] for n in shared)
-    line = (f"\nshared {len(shared)}: {t_old:.2f}s -> {t_new:.2f}s "
-            f"({t_new / max(t_old, 1e-9):.2f}x)")
-    if factor != 1.0:
-        line += (f"; normalized: {t_new / factor:.2f}s "
-                 f"({t_new / factor / max(t_old, 1e-9):.2f}x)")
-    print(line)
+    print(f"\nshared {len(shared)}: {t_old:.2f}s -> {t_new:.2f}s "
+          f"({t_new / max(t_old, 1e-9):.2f}x)")
     if added:
         print(f"added ({len(added)}): {', '.join(added)}")
     if removed:

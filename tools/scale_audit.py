@@ -285,45 +285,18 @@ QUERY_PROTOCOL: dict[str, dict[str, int]] = {
 }
 
 
-def _probe_entry(pre: dict, post: dict) -> dict:
-    """One audit probe record: the shared bench axes bracketing a
-    timed block, plus the band verdict — the single shape every
-    audit mode stamps (r11 verdict item 6)."""
-    from bench import _probe_healthy
-
-    return {
-        "sched_pre": pre["sched_sec"],
-        "gemm_pre": pre["gemm_sec"],
-        "sched_post": post["sched_sec"],
-        "gemm_post": post["gemm_sec"],
-        "healthy": _probe_healthy(pre) and _probe_healthy(post),
-    }
-
-
 def time_queries(
     spark,
     reg,
     names,
     sf_dir: str,
     runs: int = 2,
-    probe_log: dict | None = None,
 ):
-    """Time each query (min of ``runs`` noop-write shots). When
-    ``probe_log`` is a dict, stamp the shared bench health probes
-    before and after each query's shots, keyed ``name@sf_dir`` — a
-    100x audit row then adjudicates itself the way bench rows do (r11
-    verdict item 6). Consecutive queries share a reading (N's post is
-    N+1's pre; only a cache drop separates them)."""
-    if probe_log is not None:
-        from bench import _sweep_probe
+    """Time each query (min of ``runs`` noop-write shots)."""
     out = {}
-    prev_post = None
     for name in names:
         proto = QUERY_PROTOCOL.get(name, {})
         n_runs = proto.get("runs", runs)
-        pre = None
-        if probe_log is not None:
-            pre = prev_post if prev_post is not None else _sweep_probe(spark)
         for _ in range(proto.get("warmup", 0)):
             reg[name].builder(spark, sf_dir).write.format("noop").mode(
                 "overwrite"
@@ -342,20 +315,7 @@ def time_queries(
             if proto
             else ""
         )
-        probe_note = ""
-        if probe_log is not None:
-            post = _sweep_probe(spark)
-            prev_post = post
-            entry = _probe_entry(pre, post)
-            probe_log[f"{name}@{sf_dir}"] = entry
-            probe_note = (
-                f" probes sched {entry['sched_pre']:.3f}/"
-                f"{entry['sched_post']:.3f} gemm {entry['gemm_pre']:.3f}/"
-                f"{entry['gemm_post']:.3f}"
-                f" healthy={entry['healthy']}"
-            )
-        print(f"  timed {name} @ {sf_dir}: {best:.3f}s{seq}{probe_note}",
-              flush=True)
+        print(f"  timed {name} @ {sf_dir}: {best:.3f}s{seq}", flush=True)
         # several operators persist intermediates as part of their
         # plan (a cost the timing above counts); drop them so block
         # storage doesn't accumulate across the 2·|names| timings and
@@ -403,17 +363,10 @@ def ivf_index_audit(spark, base: str, out: str, factor: int) -> int:
     def noop(df) -> None:
         df.write.format("noop").mode("overwrite").save()
 
-    # same self-adjudication as time_queries (r11 verdict item 6):
-    # bracket each scale's timed block with the shared bench health
-    # probes so an index-audit row names its own window
-    from bench import _sweep_probe
-
     report: dict[str, object] = {"mode": "ivf_index", "factor": factor}
-    probe_log: dict[str, dict] = {}
     rows = []
     for label, sf_dir in (("1x", base), (f"{factor}x", out)):
         idx = os.path.join(sf_dir, "_ivf_index_audit")
-        pre = _sweep_probe(spark)
         build_sec = timed(lambda: build_ivf_index(spark, sf_dir, idx))
         probe_sec = min(
             timed(lambda: noop(ann_ivf_topk_indexed(spark, sf_dir, idx)))
@@ -428,19 +381,13 @@ def ivf_index_audit(spark, base: str, out: str, factor: int) -> int:
             timed(lambda: noop(ann_ivf_topk(spark, sf_dir)))
             for _ in range(2)
         )
-        post = _sweep_probe(spark)
-        probe_log[label] = _probe_entry(pre, post)
         rows.append((label, build_sec, probe_sec, adhoc_sec, pruned))
         print(
             f"  {label}: build {build_sec:.2f}s, probe {probe_sec:.2f}s "
             f"(min of 3), ad-hoc {adhoc_sec:.2f}s, "
-            f"partition-pruned={pruned}, "
-            f"health probes sched {pre['sched_sec']:.3f}/"
-            f"{post['sched_sec']:.3f} gemm {pre['gemm_sec']:.3f}/"
-            f"{post['gemm_sec']:.3f} healthy={probe_log[label]['healthy']}",
+            f"partition-pruned={pruned}",
             flush=True,
         )
-    report["probes"] = probe_log
 
     print(f"\n{'scale':8s} {'build':>8s} {'probe':>8s} {'ad-hoc':>8s} {'pruned':>7s}")
     for label, b, p, a, pr in rows:
@@ -476,11 +423,6 @@ def ivf_index_audit(spark, base: str, out: str, factor: int) -> int:
         )
 
     frag_files = max_files_per_list()
-    # stamp the fragmented-vs-compacted pair too: the readings sit
-    # minutes apart, and the r12 night run's window swung enough in
-    # that gap to INVERT them (16.2 vs 6.6 s) — unstamped, that reads
-    # as a code regression instead of a window artifact
-    h_frag = _sweep_probe(spark)
     frag_probe = min(
         timed(lambda: noop(ann_ivf_topk_indexed(spark, out, idx)))
         for _ in range(3)
@@ -488,14 +430,10 @@ def ivf_index_audit(spark, base: str, out: str, factor: int) -> int:
     t0 = time.perf_counter()
     stats = compact_ivf_index(spark, idx)
     compact_sec = time.perf_counter() - t0
-    h_comp = _sweep_probe(spark)
     comp_probe = min(
         timed(lambda: noop(ann_ivf_topk_indexed(spark, out, idx)))
         for _ in range(3)
     )
-    h_end = _sweep_probe(spark)
-    probe_log["fragmented_probe"] = _probe_entry(h_frag, h_comp)
-    probe_log["compacted_probe"] = _probe_entry(h_comp, h_end)
     print(
         f"  fragmentation: {n_upserts} micro-upserts ({upsert_sec:.1f}s) "
         f"-> max {frag_files} files/list, probe {frag_probe:.2f}s; "
@@ -622,9 +560,8 @@ def main() -> int:
     # warmup both dirs
     reg[names[0]].builder(spark, base).limit(1).collect()
     reg[names[0]].builder(spark, out).limit(1).collect()
-    probe_log: dict = {}
-    base_t = time_queries(spark, reg, names, base, probe_log=probe_log)
-    scaled_t = time_queries(spark, reg, names, out, probe_log=probe_log)
+    base_t = time_queries(spark, reg, names, base)
+    scaled_t = time_queries(spark, reg, names, out)
 
     rows = []
     for n in names:
@@ -652,10 +589,6 @@ def main() -> int:
                 "worst": [
                     {"query": n, "ratio": round(r, 2)} for n, _, _, r in rows[:5]
                 ],
-                "probes_all_healthy": all(
-                    e["healthy"] for e in probe_log.values()
-                ),
-                "probes": probe_log,
             }
         )
     )

@@ -8,7 +8,8 @@ Differences from the reference, by design:
   (box_ingest.py:182-183 pins 'development'/'eda_gc_raw')
 - the connector is injected (testable without network; Box is one impl)
 - all matched files of one format are read in ONE ``spark.read`` (Excel:
-  one read per workbook, since sheets differ per file); each such batch
+  one read per workbook, since sheets differ per file; CSV: one read per
+  distinct header, since a read maps columns by position); each such batch
   is validated on its own, and the run then commits ONCE per table: one
   append of every batch's valid rows, one of every batch's invalid
   rows to ``<table>_error`` (``just_copy``: one append of every batch),
@@ -23,9 +24,9 @@ Differences from the reference, by design:
   each row still carries the time its action was logged
 - export failures raise (the reference swallows the Excel error and
   then fails confusingly on upload — box_export.py:47-48, :66)
-- export uploads carry an extension matching the bytes: .xlsx like the
-  reference's f"{file_name}.xlsx" (box_export.py:81), but .csv when the
-  CSV fallback engaged; a caller-supplied .xlsx/.csv suffix is replaced
+- export always writes a workbook with the stdlib xlsx engine and
+  uploads it as f"{file_name}.xlsx" like the reference
+  (box_export.py:81); a caller-supplied .xlsx/.csv suffix is replaced
   rather than doubled
 """
 
@@ -38,11 +39,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from data_ingestion_tool_spark.sinks.excel import (
-    ExcelEngineMissing,
-    export_to_csv,
-    export_to_excel,
-)
+from data_ingestion_tool_spark.sinks.excel import export_to_excel
 from data_ingestion_tool_spark.sinks.tables import (
     AuditLog,
     append_table,
@@ -201,7 +198,6 @@ def execute_export(
     schema: str | None = None,
     sheet_name: str | None = None,
     column_mapping: dict | None = None,
-    allow_csv_fallback: bool = False,
 ) -> int:
     """Run an arbitrary SQL query and upload the result as Excel
     (reference box_export.py:71-82). Returns exported row count."""
@@ -212,28 +208,20 @@ def execute_export(
     )
     try:
         df: DataFrame = spark.sql(query)
-        try:
-            n = export_to_excel(
-                df,
-                tmp_path,
-                sheet_name=sheet_name,
-                column_mapping=column_mapping,
-            )
-            ext = ".xlsx"
-        except ExcelEngineMissing:
-            if not allow_csv_fallback:
-                raise
-            n = export_to_csv(df, tmp_path, column_mapping=column_mapping)
-            ext = ".csv"
-        # Reference uploads f"{file_name}.xlsx" (box_export.py:81);
-        # mirror that, but name the bytes honestly: when the CSV
-        # fallback engaged, a caller-supplied .xlsx name becomes .csv.
+        n = export_to_excel(
+            df,
+            tmp_path,
+            sheet_name=sheet_name,
+            column_mapping=column_mapping,
+        )
+        # Reference uploads f"{file_name}.xlsx" (box_export.py:81); a
+        # caller-supplied .xlsx or .csv suffix is replaced, not doubled.
         base = file_name
         for known in (".xlsx", ".csv"):
             if base.lower().endswith(known):
                 base = base[: -len(known)]
                 break
-        remote_name = base + ext
+        remote_name = base + ".xlsx"
         audit.log("Exported data", f"{remote_name} ({n} rows)")
         connector.upload(folder_id, remote_name, tmp_path)
         audit.log("Uploaded file", f"{folder_id}/{remote_name}")

@@ -2,17 +2,16 @@
 
 Excel files are inherently single-writer, so the result is collected to
 the driver — with a row-count guard the reference lacks (it collects
-unboundedly, box_export.py:37). Rename mapping is case-insensitive on
-both sides (box_export.py:38-41).
+unboundedly, box_export.py:37) — and written by the stdlib engine
+(:func:`data_ingestion_tool_spark.xlsx_lite.write_xlsx`). Rename mapping
+is case-insensitive on both sides (box_export.py:38-41).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-
-class ExcelEngineMissing(NotImplementedError):
-    pass
+from data_ingestion_tool_spark import xlsx_lite
 
 
 DEFAULT_MAX_ROWS = 1_000_000  # xlsx hard sheet limit is 1,048,576
@@ -44,23 +43,7 @@ def export_to_excel(
             f"export exceeds max_rows={max_rows}; narrow the query or "
             "export partitioned parquet/csv instead"
         )
-    try:
-        import openpyxl  # noqa: F401
-    except ImportError:
-        from data_ingestion_tool_spark.xlsx_lite import write_xlsx
-
-        write_xlsx(pdf, path, sheet_name=sheet_name or "Sheet1")
-        return len(pdf)
-    if sheet_name:
-        pdf.to_excel(path, sheet_name=sheet_name, index=False)
-    else:
-        pdf.to_excel(path, index=False)
-    return len(pdf)
-
-
-def export_to_csv(df: DataFrame, path: str, **kwargs) -> int:
-    """Engine-free sibling used when no Excel engine is available."""
-    renamed = apply_column_mapping(df, kwargs.get("column_mapping"))
-    pdf = renamed.toPandas()
-    pdf.to_csv(path, index=False)
+    # looked up at call time, so a wrapper installed on the module
+    # attribute (perfbench's tracer) sees every write
+    xlsx_lite.write_xlsx(pdf, path, sheet_name=sheet_name or "Sheet1")
     return len(pdf)

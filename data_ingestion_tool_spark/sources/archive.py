@@ -3,36 +3,25 @@
 The reference extracts archives to a temp dir and recurses into every
 contained file, nested ZIPs included (box_ingest.py:135-147). Here the
 recursion is a worklist loop (no Python recursion limit on deeply
-nested archives), and extraction happens where the file lives:
-
-- **Driver-side** (this module's default): ingest inputs arrive on
-  local disk via the connector, stay small (micro-files), and the
-  extracted members feed one batched ``spark.read`` per format.
-- **Distributed** (``binary_members``): for archive collections at
-  scale, read the archives as a ``binaryFile`` DataFrame and explode
-  members inside ``mapInPandas`` so no single node holds the corpus.
+nested archives), and extraction happens on the driver, next to the
+archive: ingest inputs arrive on local disk via the connector, stay
+small (micro-files), and the extracted members feed one batched
+``spark.read`` per format.
 """
 
 from __future__ import annotations
 
 import os
 import zipfile
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
 
 
-def expand_zips(paths: list[str], extract_root: str | None = None) -> list[str]:
+def expand_zips(paths: list[str]) -> list[str]:
     """Replace every .zip in ``paths`` with its (recursively) extracted
     member files; non-zip paths pass through unchanged.
 
-    Each archive extracts into its OWN subdirectory and only that
-    subdirectory is walked — with a shared ``extract_root`` a
-    whole-root re-walk would re-enqueue every previously extracted
-    member once per archive, duplicating ingested rows."""
-    import hashlib
-
+    Each archive extracts into its OWN subdirectory
+    (``<archive>.extracted``) and only that subdirectory is walked, so
+    no member is enqueued twice."""
     out: list[str] = []
     worklist = list(paths)
     while worklist:
@@ -40,11 +29,7 @@ def expand_zips(paths: list[str], extract_root: str | None = None) -> list[str]:
         if not path.lower().endswith(".zip"):
             out.append(path)
             continue
-        if extract_root:
-            tag = hashlib.sha256(path.encode()).hexdigest()[:16]
-            root = os.path.join(extract_root, tag)
-        else:
-            root = path + ".extracted"
+        root = path + ".extracted"
         os.makedirs(root, exist_ok=True)
         with zipfile.ZipFile(path) as zf:
             zf.extractall(root)
@@ -52,42 +37,3 @@ def expand_zips(paths: list[str], extract_root: str | None = None) -> list[str]:
             for name in files:
                 worklist.append(os.path.join(dirpath, name))
     return out
-
-
-_MEMBER_SCHEMA = (
-    "archive string, member string, member_size long, content binary"
-)
-
-
-def binary_members(spark: SparkSession, zip_glob: str) -> DataFrame:
-    """Distributed ZIP member listing: archives sharded across
-    executors via the binaryFile source, members exploded in Arrow
-    batches. Returns (archive, member, member_size, content)."""
-    archives = spark.read.format("binaryFile").load(zip_glob)
-
-    def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        for pdf in batches:
-            rows = []
-            for apath, blob in zip(pdf["path"], pdf["content"]):
-                with zipfile.ZipFile(io.BytesIO(blob)) as zf:
-                    for info in zf.infolist():
-                        if info.is_dir():
-                            continue
-                        rows.append(
-                            {
-                                "archive": apath,
-                                "member": info.filename,
-                                "member_size": info.file_size,
-                                "content": zf.read(info),
-                            }
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=["archive", "member", "member_size", "content"],
-            )
-
-    return archives.select("path", "content").mapInPandas(
-        explode, _MEMBER_SCHEMA
-    )

@@ -1,20 +1,13 @@
 """Excel (.xlsx/.xlsm) source.
 
 Spark has no native Excel reader (reference reads via pandas on the
-driver — box_ingest.py:152-156). Two paths, both behind one function:
-
-- **Distributed** (default): ship the workbook bytes through the
-  ``binaryFile`` source and parse inside ``mapInPandas`` on executors —
-  per-file parallelism for directories of workbooks, no driver
-  bottleneck.
-- **Driver fallback** (``distributed=False``): plain
-  ``pd.read_excel`` → ``createDataFrame`` for the single-small-file
-  case.
-
-Engine selection: openpyxl via ``pd.read_excel`` when importable (full
-fidelity), else the vendored stdlib parser
-(:mod:`data_ingestion_tool_spark.xlsx_lite`) — the Excel path is real
-bytes-in end-to-end either way. Unparseable bytes raise
+driver — box_ingest.py:152-156). Here the workbook bytes ship through
+the ``binaryFile`` source and are parsed inside ``mapInPandas`` on
+executors by the stdlib engine
+(:mod:`data_ingestion_tool_spark.xlsx_lite`), whether or not an Excel
+package is installed: a workbook ingests with the same column types on
+every host. Cells arrive as their stored values, so a date-styled cell
+is its Excel serial number, not a timestamp. Unparseable bytes raise
 :class:`~data_ingestion_tool_spark.xlsx_lite.XlsxFormatError`.
 """
 
@@ -25,29 +18,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from data_ingestion_tool_spark.xlsx_lite import XlsxFormatError, parse_xlsx
-
-
-class ExcelEngineMissing(NotImplementedError):
-    """Kept for callers that inject engines; the built-in path always
-    has the stdlib fallback available."""
-
-
-def _parse_workbook(
-    content: bytes, sheet_name: str | None, skip_rows: int | None
-) -> pd.DataFrame:
-    """Parse workbook bytes → pandas (reference parity: optional sheet,
-    optional skiprows — box_ingest.py:152-156)."""
-    import io
-
-    try:
-        import openpyxl  # noqa: F401
-    except ImportError:
-        return parse_xlsx(content, sheet_name, skip_rows)
-    kwargs: dict = {"skiprows": skip_rows}
-    if sheet_name:
-        kwargs["sheet_name"] = sheet_name
-    return pd.read_excel(io.BytesIO(content), **kwargs)
+from data_ingestion_tool_spark.xlsx_lite import parse_xlsx
 
 
 def read_excel(
@@ -55,34 +26,26 @@ def read_excel(
     path: str,
     sheet_name: str | None = None,
     skip_rows: int | None = None,
-    *,
-    distributed: bool = True,
-    parser=_parse_workbook,
 ) -> DataFrame:
-    """Read one workbook (or a glob of workbooks) as a DataFrame.
-
-    ``parser`` is injectable for tests and for alternative engines.
-    """
-    if not distributed:
-        pdf = parser(open(path, "rb").read(), sheet_name, skip_rows)
-        pdf.columns = [str(c).strip() for c in pdf.columns]
-        return spark.createDataFrame(pdf)
-
+    """Read one workbook (or a glob of workbooks) as a DataFrame
+    (reference parity: optional sheet, optional skiprows —
+    box_ingest.py:152-156)."""
     # Schema must be known up front for mapInPandas: parse one
     # workbook's header on the driver (bytes-bounded), then fan out.
     binary = spark.read.format("binaryFile").load(path)
     first = binary.select("content").limit(1).collect()
     if not first:
         raise FileNotFoundError(path)
-    sample = parser(first[0]["content"], sheet_name, skip_rows)
+    sample = parse_xlsx(first[0]["content"], sheet_name, skip_rows)
     sample.columns = [str(c).strip() for c in sample.columns]
     schema = spark.createDataFrame(sample.head(100)).schema
 
     def parse_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for blob in pdf["content"]:
-                out = parser(blob, sheet_name, skip_rows)
+                out = parse_xlsx(blob, sheet_name, skip_rows)
                 out.columns = [str(c).strip() for c in out.columns]
                 yield out
 
     return binary.select("content").mapInPandas(parse_batches, schema)
+

@@ -10,14 +10,14 @@ distributed Spark scans:
 - Parquet: native
 - Excel / ZIP: see sources.excel / sources.archive
 
-Multiple files of one format are read in a single ``spark.read`` call
-(one jobs/commit per batch), unlike the reference's one-file-at-a-time
-loop (box_ingest.py:189-190).
+Multiple files of one format (for CSV: of one header) are read in a
+single ``spark.read`` call (one jobs/commit per batch), unlike the
+reference's one-file-at-a-time loop (box_ingest.py:189-190).
 """
 
 from __future__ import annotations
 
-import os
+import csv
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -125,6 +125,14 @@ def read_parquet_evolved(
     )
 
 
+_READERS = {
+    "csv": read_csv,
+    "json": read_json,
+    "parquet": read_parquet,
+    "orc": read_orc,
+}
+
+
 def classify(path: str) -> str | None:
     """File-format dispatch key, or None for unsupported types (the
     reference logs + skips those — box_ingest.py:157-159)."""
@@ -133,6 +141,19 @@ def classify(path: str) -> str | None:
         if lower.endswith(ext):
             return ext.lstrip(".")
     return None
+
+
+def _by_header(paths: list[str]) -> list[list[str]]:
+    """Local CSV paths grouped by their parsed first record, in first-seen
+    order. One ``spark.read`` keeps the first file's header and maps the
+    other files' columns by position, so only files whose headers agree
+    may share a read."""
+    groups: dict[tuple[str, ...], list[str]] = {}
+    for p in paths:
+        with open(p, newline="", encoding="utf-8", errors="replace") as fh:
+            header = tuple(next(csv.reader(fh), ()))
+        groups.setdefault(header, []).append(p)
+    return list(groups.values())
 
 
 def read_paths(
@@ -146,10 +167,12 @@ def read_paths(
 
     Returns ([(format, DataFrame)], skipped_paths, failed). ZIPs are
     expanded first (recursively, via a worklist) and their contents
-    re-classified. A file/group whose reader raises eagerly (corrupt
-    workbook, missing engine) lands in ``failed`` as (path-or-format,
-    error) instead of aborting the batch — reference parity: one bad
-    file never stops the run (box_ingest.py:177-178).
+    re-classified. CSV files whose headers differ are read apart, each
+    by its own header; every workbook is read on its own, since sheets
+    differ per file. A file/group whose reader raises eagerly (corrupt
+    workbook) lands in ``failed`` as (path-or-format, error) instead of
+    aborting the batch — reference parity: one bad file never stops the
+    run (box_ingest.py:177-178).
     """
     from data_ingestion_tool_spark.sources.archive import expand_zips
     from data_ingestion_tool_spark.sources.excel import read_excel
@@ -167,27 +190,18 @@ def read_paths(
 
     out: list[tuple[str, DataFrame]] = []
     for kind, group in groups.items():
-        try:
-            if kind == "csv":
-                out.append((kind, read_csv(spark, group)))
-            elif kind == "json":
-                out.append((kind, read_json(spark, group)))
-            elif kind == "parquet":
-                out.append((kind, read_parquet(spark, group)))
-            elif kind == "orc":
-                out.append((kind, read_orc(spark, group)))
-        except Exception as exc:  # noqa: BLE001 — quarantine the group
-            failed.append((kind, str(exc)))
         if kind in ("xlsx", "xlsm"):
-            for p in group:  # sheets differ per workbook; read per file
+            for p in group:
                 try:
                     out.append(
                         (kind, read_excel(spark, p, sheet_name, skip_rows))
                     )
                 except Exception as exc:  # noqa: BLE001
                     failed.append((p, str(exc)))
+            continue
+        for batch in _by_header(group) if kind == "csv" else [group]:
+            try:
+                out.append((kind, _READERS[kind](spark, batch)))
+            except Exception as exc:  # noqa: BLE001 — quarantine the group
+                failed.append((kind, str(exc)))
     return out, skipped, failed
-
-
-def local_uri(path: str) -> str:
-    return "file://" + os.path.abspath(path)

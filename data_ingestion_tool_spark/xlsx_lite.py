@@ -1,9 +1,10 @@
 """Minimal pure-stdlib xlsx engine (zip + SpreadsheetML XML).
 
 The reference parses/writes workbooks with openpyxl via pandas
-(box_ingest.py:152-156, box_export.py:34-48). This container ships no
-Excel engine, so this module implements the small subset of OOXML the
-engine needs, with zero dependencies beyond the stdlib:
+(box_ingest.py:152-156, box_export.py:34-48). This module is the
+engine's one Excel implementation, for both directions: the small
+subset of OOXML the engine needs, with zero dependencies beyond the
+stdlib, so a workbook reads and writes the same on every host:
 
 - :func:`parse_xlsx` — workbook bytes → ``pandas.DataFrame``: sheet
   selection by name, ``skip_rows``, shared/inline/plain strings,
@@ -11,9 +12,8 @@ engine needs, with zero dependencies beyond the stdlib:
 - :func:`write_xlsx` — ``pandas.DataFrame`` → a valid workbook readable
   by Excel/openpyxl/this parser (inline strings; one sheet).
 
-openpyxl remains the preferred engine when importable (full fidelity:
-dates, styles, formula results); this is the fallback that keeps the
-Excel path REAL — bytes in, bytes out — instead of stubbed.
+Cells arrive as their stored values: styles are not read, so a
+date-styled cell is its Excel serial number.
 """
 
 from __future__ import annotations

@@ -1,7 +1,8 @@
 """The ingest write contract: one append per table per run, per-batch
 counts and audit rows, and the failure paths (a corrupt workbook, a
-failed download, a failed append) ending in a correct summary, correct
-audit rows and correct table contents. Every fixture is a few rows."""
+CSV header clash, a failed download, a failed append) ending in a
+correct summary, correct audit rows and correct table contents. Every
+fixture is a few rows."""
 
 from __future__ import annotations
 
@@ -216,6 +217,25 @@ def test_truncated_workbook_fails_only_its_batch(spark, tmp_path):
     assert len(failed) == 1 and "torn.xlsx" in failed[0]
     assert [a for a, _ in rows].count("Batch processed") == 2
     assert ("Ingest completed", table) in rows
+
+
+def test_csv_header_order_clash_reads_by_name(spark, tmp_path):
+    """Two CSVs with the same columns in a different order: each file is
+    read by its own header, not mapped by position onto the first's."""
+    remote = tmp_path / "remote"
+    remote.mkdir()
+    _csv(remote / "a.csv", "id,name,amount\n1,x,1.5\n")
+    _csv(remote / "b.csv", "name,id,amount\ny,2,2.5\n")
+    table, owner = _name("clash"), _name("owner")
+    summary = _ingest(spark, remote, table, owner, tmp_path)
+    assert (summary["valid_rows"], summary["invalid_rows"]) == (2, 0)
+    assert summary["failed_batches"] == 0
+    main = spark.table(table)
+    types = dict(main.dtypes)
+    assert (types["id"], types["amount"]) == ("bigint", "double")
+    assert sorted((r["id"], r["name"], r["amount"]) for r in main.collect()) \
+        == [(1, "x", 1.5), (2, "y", 2.5)]
+    assert not _exists(spark, f"{table}_error")
 
 
 class _FailingConnector(LocalFSConnector):

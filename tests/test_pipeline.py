@@ -226,8 +226,8 @@ def test_audit_rows_carry_their_own_action_time(spark):
 
 
 def test_export_uploads_real_xlsx(spark, remote_dir, tmp_path):
-    """With the stdlib xlsx engine always available, export produces a
-    genuine workbook under the .xlsx name (CSV fallback never engages)."""
+    """Export produces a genuine workbook under the .xlsx name, with a
+    caller-supplied .xlsx suffix replaced, not doubled."""
     from data_ingestion_tool_spark.xlsx_lite import parse_xlsx
 
     spark.createDataFrame(
@@ -241,7 +241,6 @@ def test_export_uploads_real_xlsx(spark, remote_dir, tmp_path):
         remote_dir,
         "out.xlsx",
         column_mapping={"L_RETURNFLAG": "Return Flag"},
-        allow_csv_fallback=True,
     )
     assert n == 2
     out = parse_xlsx(

@@ -1,55 +1,27 @@
-"""Distributed source plumbing: binaryFile-based ZIP member explosion
-and mapInPandas Excel reading (engine injected — no openpyxl here)."""
+"""Distributed source plumbing: binaryFile + mapInPandas Excel reading
+of real workbook bytes, and the other file-format readers."""
 
 from __future__ import annotations
-
-import io
-import zipfile
 
 import pandas as pd
 import pytest
 
-from data_ingestion_tool_spark.sources.archive import binary_members
-from data_ingestion_tool_spark.sources.excel import ExcelEngineMissing, read_excel
-
-
-def test_binary_members_explodes_zip(spark, tmp_path):
-    for i in range(3):
-        with zipfile.ZipFile(tmp_path / f"a{i}.zip", "w") as zf:
-            zf.writestr(f"m{i}_1.csv", f"id\n{i}\n")
-            zf.writestr(f"m{i}_2.csv", f"id\n{i + 10}\n")
-    df = binary_members(spark, str(tmp_path / "*.zip"))
-    rows = df.collect()
-    assert len(rows) == 6
-    members = {r["member"] for r in rows}
-    assert "m0_1.csv" in members and "m2_2.csv" in members
-    one = [r for r in rows if r["member"] == "m1_1.csv"][0]
-    assert bytes(one["content"]) == b"id\n1\n"
-    assert one["member_size"] == 5
-
-
-def _fake_parser(content: bytes, sheet_name, skip_rows):
-    """Deterministic stand-in for openpyxl: content is a CSV payload."""
-    pdf = pd.read_csv(io.BytesIO(content), skiprows=skip_rows or 0)
-    if sheet_name == "empty":
-        return pdf.head(0)
-    return pdf
+from data_ingestion_tool_spark.sources.excel import read_excel
+from data_ingestion_tool_spark.xlsx_lite import write_xlsx
 
 
 def test_read_excel_distributed_with_injected_engine(spark, tmp_path):
+    """Real workbook bytes: ``skip_rows=1`` drops the junk row above the
+    header, and the padded header arrives stripped."""
     p = tmp_path / "wb.xlsx"
-    p.write_text("junk\n  Col A ,col_b\n1,x\n2,y\n")
-    df = read_excel(spark, str(p), skip_rows=1, parser=_fake_parser)
+    write_xlsx(
+        pd.DataFrame({"junk": ["  Col A ", 1, 2], "junk2": ["col_b", "x", "y"]}),
+        str(p),
+    )
+    df = read_excel(spark, str(p), skip_rows=1)
     rows = sorted(df.collect(), key=lambda r: r[0])
     assert df.columns == ["Col A", "col_b"]  # header stripped
     assert [tuple(r) for r in rows] == [(1, "x"), (2, "y")]
-
-
-def test_read_excel_driver_fallback(spark, tmp_path):
-    p = tmp_path / "wb2.xlsx"
-    p.write_text("a,b\n5,z\n")
-    df = read_excel(spark, str(p), distributed=False, parser=_fake_parser)
-    assert [tuple(r) for r in df.collect()] == [(5, "z")]
 
 
 def test_unparseable_workbook_raises_helpfully(spark, tmp_path):
@@ -62,9 +34,8 @@ def test_unparseable_workbook_raises_helpfully(spark, tmp_path):
 
 
 def test_real_xlsx_end_to_end_without_injected_parser(spark, tmp_path):
-    """REAL workbook bytes through the DEFAULT parser chain (stdlib
-    xlsx_lite here — openpyxl absent): write via the sink, read back
-    distributed via binaryFile + mapInPandas."""
+    """REAL workbook bytes through the stdlib xlsx engine: write via
+    the sink, read back distributed via binaryFile + mapInPandas."""
     import pandas as pd
 
     from data_ingestion_tool_spark.sinks.excel import export_to_excel
@@ -181,36 +152,6 @@ def test_text_source_reads_lines(spark, tmp_path):
     assert classify(str(p)) is None
     rows = [r["value"] for r in read_text(spark, str(p)).collect()]
     assert rows == ["alpha beta", "gamma", "", "delta"]
-
-
-def test_xlsx_python_datasource(spark, tmp_path):
-    """Custom Spark-4 Python DataSource: directory of workbooks scans
-    with one InputPartition per file, schema inferred at plan time."""
-    import pandas as pd
-
-    from data_ingestion_tool_spark.sources.xlsx_datasource import (
-        register_xlsx_source,
-    )
-    from data_ingestion_tool_spark.xlsx_lite import write_xlsx
-
-    for i in range(3):
-        pdf = pd.DataFrame(
-            {
-                "id": [i * 10 + 1, i * 10 + 2],
-                "name": [f"a{i}", f"b{i}"],
-                "score": [1.5 + i, 2.5 + i],
-            }
-        )
-        write_xlsx(pdf, str(tmp_path / f"wb{i}.xlsx"))
-
-    register_xlsx_source(spark)
-    df = spark.read.format("xlsx").load(str(tmp_path))
-    assert df.rdd.getNumPartitions() == 3  # one per workbook
-    rows = sorted((r["id"], r["name"], r["score"]) for r in df.collect())
-    assert rows[0] == (1, "a0", 1.5) and len(rows) == 6
-    assert dict(df.dtypes) == {
-        "id": "bigint", "name": "string", "score": "double"
-    }
 
 
 def test_read_jsonl_tolerant_quarantines_bad_lines(spark, tmp_path):

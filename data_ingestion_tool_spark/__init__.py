@@ -26,7 +26,6 @@ Subpackages
                sort/limit, scalar functions, dedup, similarity, text
 ``functions``  shared Column-expression helpers
 ``plans``      plan-inspection utilities (.explain auditing)
-``streaming``  Structured Streaming wrappers
 """
 
 import sys

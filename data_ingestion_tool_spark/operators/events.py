@@ -1,10 +1,8 @@
 """Event-time operators over the ``events`` table: tumbling / sliding /
-session windows (batch form of the streaming tier, SURVEY.md §2.10).
+session windows, in batch (SURVEY.md §2.10).
 
-``F.window`` / ``F.session_window`` are plain Catalyst expressions:
-the same code runs under Structured Streaming with a watermark (see
-``data_ingestion_tool_spark.streaming``). Windowed aggregation shuffles
-once on (window, keys); at scale the skew concern is hot keys
+``F.window`` / ``F.session_window`` are plain Catalyst expressions.
+Windowed aggregation shuffles once on (window, keys); at scale the skew concern is hot keys
 (user_id), which AQE skew-join/partition-split handles.
 
 Cross-engine notes: window starts are emitted as ``timestamp_ntz``
@@ -304,7 +302,7 @@ GROUP BY user_id ORDER BY total_spent DESC, user_id LIMIT 25
 
 
 def purchases_after_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch form of the streaming interval join: each click paired
+    """Interval join: each click paired
     with the same user's purchases within 1 hour after it. Equi-join
     on user_id (one shuffle) + a time-range residual filter — NOT a
     pure range theta-join, which Spark would nested-loop.

@@ -342,46 +342,6 @@ def _ivf_train(emb: DataFrame, nlist: int = _IVF_NCENTROIDS):
     return centroids
 
 
-def _ivf_assign(
-    spark: SparkSession,
-    emb: DataFrame,
-    centroids,
-    *,
-    keep_embedding: bool = False,
-) -> DataFrame:
-    """(vec_id, list_id[, embedding]): broadcast centroids, one BLAS
-    argmax per Arrow batch. ``keep_embedding`` passes the vector
-    through unchanged — the index build stores it so probes never have
-    to join back to the corpus (the FAISS-style inverted-list layout;
-    without it, partition pruning saves the index scan but the rerank
-    re-shuffles the full corpus to fetch vectors)."""
-    import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
-
-    bc = spark.sparkContext.broadcast(centroids)
-    out_schema = "vec_id long, list_id int"
-    if keep_embedding:
-        emb_type = emb.schema["embedding"].dataType.simpleString()
-        out_schema += f", embedding {emb_type}"
-
-    def assign_stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cents = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = _unit_rows(_matrix(pdf))
-            out = {
-                "vec_id": pdf["vec_id"].to_numpy(np.int64),
-                "list_id": (m @ cents.T).argmax(axis=1).astype(np.int32),
-            }
-            if keep_embedding:
-                out["embedding"] = pdf["embedding"]
-            yield pd.DataFrame(out)
-
-    return emb.mapInPandas(assign_stage, out_schema)
-
-
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF (inverted-file) approximate cosine top-k — the
     coarse-quantizer scale path next to the LSH variant.
@@ -400,11 +360,10 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     3. **Assign** (distributed): broadcast centroids; one BLAS argmax
        per Arrow batch tags every vector with its nearest list.
     4. **Probe**: each query scores all centroids (driver, tiny) and
-       keeps ``nprobe`` lists; candidates = vectors in those lists
-       (equi-join on list_id — partition-pruned at scale when the
-       index table is written partitioned by list_id); exact cosine
-       rerank + window top-k restores precision within the probed
-       lists.
+       keeps ``nprobe`` lists; candidates = vectors in those lists,
+       masked in the same Arrow pass as the assignment
+       (:func:`_ivf_search`); exact cosine rerank + window top-k
+       restores precision within the probed lists.
 
     Same output contract as ann_bruteforce_topk; recall
     property-tested against it. Rows-only driver check.
@@ -430,9 +389,7 @@ def _ivf_search(spark: SparkSession, emb: DataFrame, centroids) -> DataFrame:
     the whole operator at 26.7 s join-reranked vs 8.8 s fused (6.83×,
     below the same-run scan tier's 10.6×; the BLAS batch GEMM scores
     candidates at memory bandwidth). What remains at 100× is the
-    assignment GEMM itself — O(N·nlist·d) per call, the price of
-    ad-hoc IVF; build_ivf_index / ann_ivf_topk_indexed amortize it
-    (assign once at build, probes partition-prune thereafter).
+    assignment GEMM itself — O(N·nlist·d) per call.
     Each batch emits at most |Q|·k rows (:func:`partial_topk`), so
     the final window sees ≤ partitions·|Q|·k rows.
 
@@ -449,47 +406,15 @@ def _ivf_search(spark: SparkSession, emb: DataFrame, centroids) -> DataFrame:
     The streamed side repartitions to session parallelism: per-row
     work is O((nlist+|Q|)·d), so a single-file corpus layout must
     never serialize the kernel (the embedding_near_dup discipline).
+    Candidates outside a query's probed lists, and the query itself,
+    score ``-inf``; :func:`partial_topk` keeps ≤ k rows per query of
+    each batch.
     """
-    # --- driver side (tiny): queries + their probed lists
-    q_ids, q_mat, _probed, mask = _ivf_probe_mask(emb, centroids)
-    bc = spark.sparkContext.broadcast((centroids, q_ids, q_mat, mask))
-
-    scored = emb.repartition(
-        spark.sparkContext.defaultParallelism
-    ).mapInPandas(_ivf_rerank_stage(bc, stored_assign=False), _PARTIAL_SCHEMA)
-    return _rank_topk(scored)
-
-
-def _ivf_probe_mask(emb: DataFrame, centroids):
-    """Driver-side probe map shared by the fused search and the
-    indexed probe: the bounded query collect (:func:`_collect_queries`),
-    each query's nprobe lists picked with a STABLE argsort (first-listed
-    centroid wins exact ties — both consumers must agree or the
-    index's same-neighbors promise breaks), and the boolean
-    mask[list, query] the rerank kernel masks with."""
-    q_ids, q_mat = _collect_queries(emb)
-    q_mat = _unit_rows(q_mat)
-    nprobe = max(_IVF_NPROBE, math.isqrt(len(centroids)))
-    probed = np.argsort(-(q_mat @ centroids.T), axis=1, kind="stable")[
-        :, :nprobe
-    ]
-    # mask[l, qi] = does query qi probe list l
-    mask = np.zeros((len(centroids), len(q_ids)), dtype=bool)
-    for qi, lids in enumerate(probed):
-        mask[lids, qi] = True
-    return q_ids, q_mat, probed, mask
-
-
-def _ivf_rerank_stage(bc, *, stored_assign: bool):
-    """The Arrow/BLAS rerank kernel shared by ``_ivf_search``
-    (assignment computed in-kernel — the ad-hoc operator's price) and
-    ``ann_ivf_topk_indexed`` (assignment read from the index's stored
-    ``list_id`` — the amortized path). Scoring, probe masking and the
-    per-batch top-k are identical, so the two paths return the same
-    neighbors by construction. Candidates outside a query's probed
-    lists, and the query itself, score ``-inf``; :func:`partial_topk`
-    keeps ≤ k rows per query of each batch."""
     from collections.abc import Iterator
+
+    # --- driver side (tiny): queries + their probed lists
+    q_ids, q_mat, mask = _ivf_probe_mask(emb, centroids)
+    bc = spark.sparkContext.broadcast((centroids, q_ids, q_mat, mask))
 
     def search_stage(
         batches: Iterator[pd.DataFrame],
@@ -500,15 +425,33 @@ def _ivf_rerank_stage(bc, *, stored_assign: bool):
                 continue
             vids = pdf["vec_id"].to_numpy(np.int64)
             v = _unit_rows(_matrix(pdf))
-            if stored_assign:
-                assign = pdf["list_id"].to_numpy(np.int64)
-            else:
-                assign = (v @ cents.T).argmax(axis=1)
+            assign = (v @ cents.T).argmax(axis=1)
             scores = v @ qmat.T  # batch_n × |Q| exact cosines (unit rows)
             scores[~m[assign] | (vids[:, None] == qids[None, :])] = -np.inf
             yield partial_topk(scores, vids, qids)
 
-    return search_stage
+    scored = emb.repartition(
+        spark.sparkContext.defaultParallelism
+    ).mapInPandas(search_stage, _PARTIAL_SCHEMA)
+    return _rank_topk(scored)
+
+
+def _ivf_probe_mask(emb: DataFrame, centroids):
+    """Driver-side probe map of the fused search: the bounded query
+    collect (:func:`_collect_queries`), each query's nprobe lists picked
+    with a STABLE argsort (first-listed centroid wins exact ties), and
+    the boolean mask[list, query] the search kernel masks with."""
+    q_ids, q_mat = _collect_queries(emb)
+    q_mat = _unit_rows(q_mat)
+    nprobe = max(_IVF_NPROBE, math.isqrt(len(centroids)))
+    probed = np.argsort(-(q_mat @ centroids.T), axis=1, kind="stable")[
+        :, :nprobe
+    ]
+    # mask[l, qi] = does query qi probe list l
+    mask = np.zeros((len(centroids), len(q_ids)), dtype=bool)
+    for qi, lids in enumerate(probed):
+        mask[lids, qi] = True
+    return q_ids, q_mat, mask
 
 
 #: Pinned quantizer for the oracle-paired IVF variant: the centroids
@@ -710,495 +653,6 @@ SELECT query_id, neighbor_id, rank FROM (
   WHERE a.vec_id != p.query_id
 ) WHERE rank <= {TOP_K}
 """
-
-
-def build_ivf_index(
-    spark: SparkSession, sf_dir: str, index_path: str
-) -> None:
-    """Materialize the IVF inverted lists as parquet PARTITIONED BY
-    list_id — the scale path ``ann_ivf_topk``'s docstring promises:
-    once written, a probe touches only ``nprobe`` partitions
-    (partition pruning at the file listing, verified in
-    tests/test_plans.py) instead of scanning every vector's
-    assignment. Train/assign are identical to the ad-hoc operator, so
-    probes against the index return the same neighbors. ``nlist``
-    auto-sizes to ~√N above ``_IVF_AUTO_MIN_N`` (round 8) and is
-    recorded by the index itself — the persisted ``_centroids`` table
-    IS the nlist (row count), so upserts and probes stay consistent
-    with the build-time sizing however the corpus grows afterwards."""
-    emb = _emb(spark, sf_dir).select("vec_id", "embedding")
-    centroids = _ivf_train(emb, _ivf_nlist(emb))
-    lists = _ivf_assign(spark, emb, centroids, keep_embedding=True)
-    # Cluster rows by list BEFORE the partitioned write: without the
-    # shuffle every scan task writes a sliver into every list_id
-    # directory — tasks×nlist files (14k at the 100× audit's 32×447),
-    # and probe-time file listing dominates the pruned scan. After it
-    # each list directory holds files from one task.
-    lists.repartition(F.col("list_id")).write.mode("overwrite").partitionBy(
-        "list_id"
-    ).parquet(index_path)
-    _save_ivf_centroids(spark, index_path, centroids)
-
-
-def _save_ivf_centroids(spark: SparkSession, index_path: str, centroids) -> None:
-    """Persist the trained centroids INSIDE the index (underscore-
-    prefixed dir — invisible to parquet directory listing), so later
-    probes and upserts reuse the exact train-time quantizer instead of
-    re-training on a corpus that has since grown."""
-    rows = [(i, [float(x) for x in c]) for i, c in enumerate(centroids)]
-    spark.createDataFrame(
-        rows, "centroid_id int, vec array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        index_path.rstrip("/") + "/_centroids"
-    )
-
-
-def load_ivf_centroids(spark: SparkSession, index_path: str):
-    """Load the persisted quantizer; None when the index predates
-    centroid persistence. Callers must treat None as rebuild-required:
-    the stored list_id assignments are only meaningful under the
-    persisted quantizer, so pairing them with freshly trained
-    centroids mis-routes probes (r09 ADVICE)."""
-    import os
-
-    cdir = index_path.rstrip("/") + "/_centroids"
-    if not os.path.isdir(cdir):
-        return None
-    return _matrix(
-        spark.read.parquet(cdir).orderBy("centroid_id").toPandas(), "vec"
-    )
-
-
-def _lock_holder_alive(lock_path: str):
-    """Probe the holder stamped into a ``_compact.lock``
-    (``pid\\nhostname``): True = live, False = verifiably dead (lock
-    is stale), None = unattributable (no readable PID, or a DIFFERENT
-    hostname) — never treated as stale, since breaking a lock we
-    cannot attribute could unfence a LIVE compaction. An empty read
-    retries briefly: a concurrent acquirer writes the PID right after
-    its O_EXCL create, so a momentarily-empty lock is one being born.
-
-    **Liveness-scope boundary:** PID liveness is LOCAL. Multi-host
-    deployments (index on NFS/shared mounts) get fail-fast from the
-    hostname check, never auto-break; a production port replaces the
-    file-lock with a lease (heartbeat mtime) or metastore lock — the
-    same boundary as the rename-swap contract. PID reuse is the
-    inverse caveat: a recycled PID makes a stale lock read live; the
-    error path names the manual ``rm <lock>`` recovery."""
-    import os
-    import socket
-    import time as _time
-
-    pid = host = None
-    for attempt in range(3):
-        try:
-            with open(lock_path) as fh:
-                parts = fh.read().split()
-            pid = int(parts[0])
-            host = parts[1] if len(parts) > 1 else None
-            break
-        except (OSError, ValueError, IndexError):
-            if attempt == 2:
-                return None
-            _time.sleep(0.05)
-    if host is not None and host != socket.gethostname():
-        return None
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        return True
-    return True
-
-
-def _acquire_compact_lock(lock_path: str) -> int:
-    """O_EXCL-acquire the compaction lock (holder pid+host stamped
-    in) with stale-lock self-healing (r11 ADVICE): kill -9/OOM
-    mid-swap skips the ``finally`` unlink, so without this every
-    retry would die on a bare ``FileExistsError`` before crash
-    recovery could run. A verifiably-dead holder's lock is broken via
-    atomic rename-aside (racing retries elect one winner; losers
-    re-contend the O_EXCL open). An unattributable holder (no PID, or
-    a different hostname — see :func:`_lock_holder_alive`) is never
-    auto-broken; the error names the path and the manual step."""
-    import os
-    import socket
-
-    for _ in range(3):
-        try:
-            fd = os.open(lock_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            alive = _lock_holder_alive(lock_path)
-            if alive is False:
-                stale = lock_path + ".stale"
-                try:
-                    os.rename(lock_path, stale)
-                    os.unlink(stale)
-                except OSError:
-                    pass  # another retry won the break; re-contend
-                continue
-            holder = (
-                "a live local compaction holds it (if you are CERTAIN "
-                "none is running — PID reuse after a crash — remove "
-                f"{lock_path} manually)"
-                if alive
-                else (
-                    "holder unattributable: no readable PID or a "
-                    "different host — if no compaction is running "
-                    f"anywhere against this index, remove {lock_path} "
-                    "manually"
-                )
-            )
-            raise RuntimeError(
-                f"compaction fence busy: {lock_path} exists ({holder})"
-            ) from None
-        os.write(
-            fd, f"{os.getpid()}\n{socket.gethostname()}".encode()
-        )
-        return fd
-    raise RuntimeError(
-        f"compaction fence busy: could not acquire {lock_path} after "
-        "3 attempts (persistent contention on the stale-lock break)"
-    )
-
-
-def ivf_index_upsert(
-    spark: SparkSession, index_path: str, new_emb: DataFrame
-) -> None:
-    """Incremental IVF maintenance: assign NEW vectors with the
-    index's PERSISTED quantizer (no retrain — centroids are the
-    index's contract) and append them — a ``partitionBy`` append
-    writes new part files only under the affected ``list_id``
-    directories, so every untouched inverted list keeps its existing
-    files byte-identical. At 100 TB this is the difference between
-    absorbing a day's new vectors and rebuilding the index."""
-    centroids = load_ivf_centroids(spark, index_path)
-    if centroids is None:
-        raise ValueError(
-            f"{index_path} has no persisted centroids; rebuild with "
-            "build_ivf_index before upserting"
-        )
-    idx_schema = spark.read.parquet(index_path).schema
-    if "embedding" not in idx_schema.names:
-        raise ValueError(
-            f"{index_path} predates embedding storage (vec_id/list_id "
-            "only); rebuild with build_ivf_index before upserting — "
-            "appending mixed schemas would corrupt the index"
-        )
-    # Element-type guard (r09 ADVICE): the name check alone lets an
-    # array<double> batch append into an array<float> index — mixed
-    # parquet physical types across part files of one list, exactly
-    # the corruption the message above warns about. Cast the new
-    # vectors to the index's stored type; the index's type is the
-    # contract.
-    idx_type = idx_schema["embedding"].dataType
-    new_emb = new_emb.select("vec_id", "embedding")
-    if new_emb.schema["embedding"].dataType != idx_type:
-        new_emb = new_emb.withColumn(
-            "embedding", F.col("embedding").cast(idx_type)
-        )
-    # Honor the compaction fence (r11 ADVICE): appending mid-swap can
-    # land part files in a dir the swap renames away (silently
-    # discarded), and after a crash a displaced list's dir would be
-    # recreated, blocking the recovery rename — so fail fast while
-    # ``_compact.lock`` exists, live OR stale. Best-effort (a
-    # compaction starting an instant later still races); the hard
-    # guarantee remains compact_ivf_index's caller-quiescence contract.
-    import os
-
-    lock_path = os.path.join(index_path.rstrip("/"), "_compact.lock")
-    if os.path.exists(lock_path):
-        alive = _lock_holder_alive(lock_path)
-        if alive is True:
-            state = "held by a live compaction"
-            action = "wait for it to finish, then retry"
-        elif alive is False:
-            state = "stale (holder dead — a compaction crashed mid-swap)"
-            action = (
-                "run compact_ivf_index to complete/recover the swap "
-                "(it breaks verifiably-stale locks itself), then retry"
-            )
-        else:
-            state = "unattributable (no readable PID, or another host)"
-            action = (
-                "if no compaction runs anywhere against this index, "
-                f"remove {lock_path} manually, run compact_ivf_index "
-                "to recover, then retry"
-            )
-        raise RuntimeError(
-            f"refusing to upsert into {index_path}: {lock_path} is "
-            f"{state}; {action}"
-        )
-    lists = _ivf_assign(spark, new_emb, centroids, keep_embedding=True)
-    lists.repartition(F.col("list_id")).write.mode("append").partitionBy(
-        "list_id"
-    ).parquet(index_path)
-
-
-def compact_ivf_index(
-    spark: SparkSession,
-    index_path: str,
-    *,
-    target_bytes: int = 128 * 1024 * 1024,
-) -> dict:
-    """Rewrite fragmented IVF inverted lists back to ≈``target_bytes``
-    files per ``list_id`` partition (r09 verdict item 3).
-
-    Every ``ivf_index_upsert`` (and every ``vector_index_stream``
-    micro-batch) APPENDS part files under the touched lists — correct,
-    but after K upserts a hot list holds K+ small files and the
-    indexed probe's pruned scan degrades into a file-listing problem:
-    the exact small-file failure ``sinks.layout.compact_files`` solves
-    for flat directories, applied here per-partition.
-
-    Discipline (the ``delete_where`` swap rules):
-
-    - only lists whose file count exceeds their byte-derived target
-      (``ceil(list_bytes / target_bytes)``) are rewritten — untouched
-      lists and the ``_centroids`` quantizer stay byte-identical;
-    - ONE Spark job rewrites all fragmented lists (read with
-      ``basePath`` so ``list_id`` survives, shuffle on
-      (list_id, slot) so each list lands in ≤ its target file count),
-      staged to a sibling temp dir, then swapped per-list via two
-      atomic directory renames — a reader sees the old or the new
-      layout of each list, never a half-written one (the two-syscall
-      window between a list's renames can make that ONE list briefly
-      absent; displaced originals stage OUTSIDE the index root so a
-      crash never leaves a scan-visible stray partition);
-    - row content is untouched, so probes return identical neighbors
-      before and after (pytest-pinned).
-
-    **Exclusive-access contract (hard precondition):** compaction is a
-    SINGLE-WRITER maintenance operation — no concurrent
-    ``ivf_index_upsert`` / ``vector_index_stream`` batch and no
-    concurrent probe may run during the swap window. A writer racing
-    the swap can append into a directory mid-rename; a probe racing it
-    can see a list briefly absent and silently return missing
-    neighbors rather than erroring. Writers are fenced by a lock file
-    under the index root (``_compact.lock``, O_EXCL, holder PID
-    stamped inside): a second compaction and any ``ivf_index_upsert``
-    / ``vector_index_stream`` batch fail fast while it exists. The
-    upsert-side check is best-effort (an upsert that passed the check
-    one instant before the lock appears still races); probe callers
-    must be quiesced by the caller's scheduler (probes take no lock —
-    they are the hot path).
-
-    **Crash recovery:** a run that finds a non-empty
-    ``<root>__compact_old`` (a prior compaction died mid-swap) first
-    RESTORES every displaced list whose ``list_id=`` dir is missing
-    under the root, then removes the leftovers — so retrying after a
-    crash is always safe and never destroys the only copy of a list.
-    A crash also leaks ``_compact.lock`` (the unlink lives in a
-    ``finally`` that kill -9/OOM skips): the retry reads the PID
-    stamped in the lock and, when that holder is dead, BREAKS the
-    stale lock itself (atomic rename-aside, so concurrent retries
-    elect one winner) before re-acquiring — no manual ``rm`` step. A
-    lock with no readable PID is never auto-broken (it may belong to
-    a live pre-PID holder); the error it raises names the path and
-    the manual recovery step.
-
-    **Scale boundary (object stores):** the staged swap assumes
-    POSIX-atomic same-volume directory rename (local disk, HDFS). On
-    S3/GCS, rename is copy+delete and not atomic — a production port
-    replaces the swap step (only it; the one-job rewrite is unchanged)
-    with a manifest/metastore commit, the Delta/Iceberg pattern.
-
-    Returns ``{"lists_total", "lists_compacted", "files_before",
-    "files_after"}`` (file counts over the compacted lists only).
-    """
-    import os
-    import shutil
-
-    root = index_path.rstrip("/")
-    old_root = root + "__compact_old"
-    lock_path = os.path.join(root, "_compact.lock")
-    # single-writer fence: see the exclusive-access contract above
-    lock_fd = _acquire_compact_lock(lock_path)
-    try:
-        return _compact_ivf_locked(
-            spark, root, old_root, target_bytes=target_bytes
-        )
-    finally:
-        os.close(lock_fd)
-        os.unlink(lock_path)
-
-
-def _compact_ivf_locked(
-    spark: SparkSession,
-    root: str,
-    old_root: str,
-    *,
-    target_bytes: int,
-) -> dict:
-    import os
-    import shutil
-
-    # Crash recovery BEFORE planning (r10 ADVICE, medium): if a prior
-    # run died between a list's two renames, that list's ONLY copy
-    # lives under old_root — a naive re-run would not see it under
-    # root, compact the rest, then rmtree(old_root) and destroy it.
-    # Restore any displaced list whose root dir is missing; lists
-    # present under BOTH roots finished their swap (the old copy is
-    # the superseded original) and are safe to drop with the rest.
-    if os.path.isdir(old_root):
-        for d in sorted(os.listdir(old_root)):
-            if d.startswith("list_id=") and not os.path.isdir(
-                os.path.join(root, d)
-            ):
-                os.rename(os.path.join(old_root, d), os.path.join(root, d))
-        shutil.rmtree(old_root)
-
-    list_dirs = sorted(
-        d for d in os.listdir(root)
-        if d.startswith("list_id=") and os.path.isdir(os.path.join(root, d))
-    )
-    frag: list[tuple[str, int]] = []  # (dirname, n_out)
-    n_files_before: dict[str, int] = {}
-    for d in list_dirs:
-        full = os.path.join(root, d)
-        names = [n for n in os.listdir(full) if n.endswith(".parquet")]
-        total = sum(os.path.getsize(os.path.join(full, n)) for n in names)
-        n_out = max(1, math.ceil(total / target_bytes))
-        if len(names) > n_out:
-            frag.append((d, n_out))
-            n_files_before[d] = len(names)
-    if not frag:
-        return {
-            "lists_total": len(list_dirs),
-            "lists_compacted": 0,
-            "files_before": 0,
-            "files_after": 0,
-        }
-    # One rewrite job for ALL fragmented lists: per-list jobs would be
-    # thousands of tiny jobs on a real index. The per-list slot target
-    # rides a BROADCAST join against a tiny (list_id, n_out) frame —
-    # a literal create_map would put 2·|fragmented lists| child
-    # expressions into one Catalyst node, which at the streaming scale
-    # this function exists for (10⁴–10⁵ hot lists) is minutes of
-    # analysis and a codegen-size risk. The slot column caps the file
-    # count a large list keeps after compaction; hash-partition
-    # collisions can only MERGE slots of one list (fewer files), never
-    # split them across tasks.
-    slot_targets = spark.createDataFrame(
-        [(int(d.split("=", 1)[1]), n_out) for d, n_out in frag],
-        "list_id int, __n_out int",
-    )
-    src = spark.read.option("basePath", root).parquet(
-        *[os.path.join(root, d) for d, _ in frag]
-    )
-    tmp = root + "__compact_tmp"
-    (
-        src.join(F.broadcast(slot_targets), "list_id")
-        .withColumn(
-            "__slot", F.pmod(F.hash("vec_id"), F.col("__n_out"))
-        )
-        .repartition(
-            sum(n for _, n in frag), F.col("list_id"), F.col("__slot")
-        )
-        .drop("__slot", "__n_out")
-        .write.mode("overwrite")
-        .partitionBy("list_id")
-        .parquet(tmp)
-    )
-    # Verify EVERY rewrite landed before displacing anything (r10
-    # ADVICE, low): a fragmented list whose part files hold zero rows
-    # produces no partition dir in tmp — renaming its missing tmp dir
-    # would raise AFTER the original was displaced, leaving the list
-    # absent until manual recovery. Such lists are skipped (their
-    # original empty-but-fragmented files stay in place; nothing to
-    # compact in zero rows).
-    swapped = [d for d, _ in frag if os.path.isdir(os.path.join(tmp, d))]
-    # Displaced originals stage to a SIBLING of the index root — never
-    # inside it: a dir named "list_id=7__compact_old" under the root
-    # would be partition-DISCOVERED by the next index scan (flipping
-    # the inferred list_id type to string and duplicating rows), and a
-    # compaction retry would crash parsing it. Outside the root, a
-    # crash mid-swap leaves the index readable minus the one list
-    # whose two renames it interrupted; the entry-time recovery pass
-    # restores that list from <root>__compact_old on the next run.
-    os.makedirs(old_root, exist_ok=True)
-    for d in swapped:
-        full = os.path.join(root, d)
-        os.rename(full, os.path.join(old_root, d))
-        os.rename(os.path.join(tmp, d), full)
-    shutil.rmtree(old_root)
-    shutil.rmtree(tmp, ignore_errors=True)
-    files_after = sum(
-        len(
-            [
-                n
-                for n in os.listdir(os.path.join(root, d))
-                if n.endswith(".parquet")
-            ]
-        )
-        for d in swapped
-    )
-    return {
-        "lists_total": len(list_dirs),
-        "lists_compacted": len(swapped),
-        "files_before": sum(n_files_before[d] for d in swapped),
-        "files_after": files_after,
-    }
-
-
-def ann_ivf_topk_indexed(
-    spark: SparkSession, sf_dir: str, index_path: str
-) -> DataFrame:
-    """IVF probe against a prebuilt partitioned index: identical
-    output contract (and neighbors) to ann_ivf_topk, with the ad-hoc
-    operator's two scale costs amortized away:
-
-    - **no assignment GEMM** — the index stores each vector's list_id
-      (assigned once at build/upsert time with the persisted
-      quantizer), so the O(N·nlist·d) per-call assignment the fused
-      search pays is gone;
-    - **no full-corpus scan** — the index stores the embedding beside
-      the assignment (the FAISS inverted-list layout), so candidates
-      come from the probed list_id PARTITIONS only (pruned at file
-      listing, plan-asserted) and never join back to the corpus table.
-
-    The probed candidates then run the SAME Arrow/BLAS rerank kernel
-    as the fused search (``_ivf_rerank_stage`` with the stored
-    assignment), so the two paths agree bit-for-bit — including on
-    exactly-tied centroid scores, where both sides' stable argsort
-    picks the first-listed centroid. Per-probe cost is
-    nprobe·(N/nlist)·|Q|·d BLAS flops over a pruned scan — at
-    auto-sized nlist ≈ √N that is ~N^(3/4), and none of it rescans or
-    reshuffles the unprobed corpus."""
-    emb = _emb(spark, sf_dir).select("vec_id", "embedding")
-    centroids = load_ivf_centroids(spark, index_path)
-    if centroids is None:
-        # The stored list_id assignments are valid ONLY under the
-        # quantizer that produced them. Retraining here would pair
-        # fresh centroids with build-time list_ids: mask[assign]
-        # raises IndexError when the retrained nlist shrinks below a
-        # stored list_id, and silently mis-filters probes otherwise
-        # (r09 ADVICE) — refuse instead.
-        raise ValueError(
-            f"{index_path} has no persisted centroids (_centroids "
-            "missing); rebuild with build_ivf_index before probing"
-        )
-
-    # driver side: same bounded query collect + stable probe map the
-    # fused search uses (nprobe = isqrt(nlist) coupling documented on
-    # _ivf_search)
-    q_ids, q_mat, probed, mask = _ivf_probe_mask(emb, centroids)
-    wanted = sorted({int(lid) for lids in probed for lid in lids})
-
-    lists = spark.read.parquet(index_path).filter(
-        F.col("list_id").isin(wanted)  # prunes partitions at listing
-    )
-    if "embedding" not in lists.columns:
-        raise ValueError(
-            f"{index_path} predates embedding storage (vec_id/list_id "
-            "only); rebuild with build_ivf_index"
-        )
-    bc = spark.sparkContext.broadcast((centroids, q_ids, q_mat, mask))
-    scored = lists.repartition(
-        spark.sparkContext.defaultParallelism
-    ).mapInPandas(_ivf_rerank_stage(bc, stored_assign=True), _PARTIAL_SCHEMA)
-    return _rank_topk(scored)
 
 
 #: Above this the broadcast kernel's collected matrix stops fitting an

@@ -26,9 +26,7 @@ is copy+delete and NOT atomic: a production port replaces the publish
 step — and ONLY it; the predicate-pushed scans, file targeting, and
 one-job rewrites are unchanged — with a manifest/metastore commit (the
 Delta/Iceberg transaction-log pattern; ``sinks.tables`` holds the
-table-catalog variants). The same boundary is documented on
-``operators.similarity.compact_ivf_index`` and the streaming state
-snapshot in ``streaming.streams``.
+table-catalog variants).
 """
 
 from __future__ import annotations

@@ -46,15 +46,7 @@ from dataclasses import dataclass, replace
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BooleanType,
-    ByteType,
     DateType,
-    DecimalType,
-    DoubleType,
-    FloatType,
-    IntegerType,
-    LongType,
-    ShortType,
     TimestampNTZType,
     TimestampType,
 )
@@ -74,17 +66,6 @@ DATE_FORMATS = (
     "yyyy/M/d",
 )
 
-_NUMERIC_TYPES = (
-    ByteType,
-    ShortType,
-    IntegerType,
-    LongType,
-    FloatType,
-    DoubleType,
-    DecimalType,
-    BooleanType,
-)
-
 _TEMPORAL_TYPES = (TimestampType, TimestampNTZType, DateType)
 
 
@@ -97,12 +78,10 @@ def _coerce(col: Column, declared: str, source_type) -> Column:
     """The coercion ladder as a null-on-failure expression."""
     t = declared.lower()
     if t == "int":
-        if isinstance(source_type, _NUMERIC_TYPES):
-            # Python int() truncates toward zero on numerics; Spark's
-            # numeric→long cast has identical truncation. try_cast so
-            # NaN/overflow become null (→ type-mismatch error), like
-            # int(float('nan')) raising.
-            return col.try_cast("long")
+        # Python int() truncates toward zero on numerics; Spark's
+        # numeric→long cast has identical truncation. try_cast so
+        # NaN/overflow become null (→ type-mismatch error), like
+        # int(float('nan')) raising.
         return col.try_cast("long")
     if t == "float":
         return col.try_cast("double")

@@ -1064,360 +1064,6 @@ def test_bpe_apply_matches_reference_tokenization(spark, tmp_path):
         assert got[i] == (f, f * n_sub), (w, got[i], n_sub)
 
 
-def test_ivf_index_upsert_appends_without_rewriting(spark, tmp_path):
-    """Incremental IVF maintenance: new vectors assign with the
-    PERSISTED quantizer and append under their list_id partitions —
-    every pre-existing index file stays byte-identical, and the grown
-    index equals a from-scratch assignment of the union corpus with
-    the same centroids."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from data_ingestion_tool_spark.operators.similarity import (
-        _ivf_assign,
-        build_ivf_index,
-        ivf_index_upsert,
-        load_ivf_centroids,
-    )
-    from data_ingestion_tool_spark.sources.tables import load_table
-
-    idx = str(tmp_path / "ivf")
-    build_ivf_index(spark, "/root/testdata/sf0.01", idx)
-    cents = load_ivf_centroids(spark, idx)
-    assert cents is not None and len(cents) > 0
-
-    old_files = {}
-    for root, _dirs, files in os.walk(idx):
-        for f in files:
-            if "_SUCCESS" in f:  # commit marker is refreshed on append
-                continue
-            p = os.path.join(root, f)
-            old_files[p] = (os.path.getsize(p), os.path.getmtime(p))
-
-    emb = load_table(spark, "/root/testdata/sf0.01", "embeddings")
-    new_emb = emb.select(
-        (F.col("vec_id") + 10_000_000).alias("vec_id"), "embedding"
-    )
-    ivf_index_upsert(spark, idx, new_emb)
-
-    for p, sig in old_files.items():
-        assert os.path.exists(p), p
-        assert (os.path.getsize(p), os.path.getmtime(p)) == sig, p
-
-    grown = {
-        (r["vec_id"], r["list_id"])
-        for r in spark.read.parquet(idx).collect()
-    }
-    union = emb.select("vec_id", "embedding").unionByName(new_emb)
-    expected = {
-        (r["vec_id"], r["list_id"])
-        for r in _ivf_assign(spark, union, cents).collect()
-    }
-    assert grown == expected
-
-
-def test_compact_ivf_index_bounds_files_and_preserves_probes(
-    spark, tmp_path
-):
-    """r09 verdict item 3: K upserts fragment the touched lists (K+
-    part files each); compaction rewrites ONLY the fragmented lists
-    back to their byte-derived file target, leaves `_centroids` and
-    every already-compact list byte-identical, and the indexed probe
-    returns identical neighbors before/after. A second compaction is
-    a no-op."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from data_ingestion_tool_spark.operators.similarity import (
-        ann_ivf_topk_indexed,
-        build_ivf_index,
-        compact_ivf_index,
-        ivf_index_upsert,
-    )
-    from data_ingestion_tool_spark.sources.tables import load_table
-
-    sf = "/root/testdata/sf0.001"
-    idx = str(tmp_path / "ivf")
-    build_ivf_index(spark, sf, idx)
-    emb = load_table(spark, sf, "embeddings").select("vec_id", "embedding")
-    for k in range(1, 4):  # 3 upserts -> up to 4+ files in hot lists
-        ivf_index_upsert(
-            spark,
-            idx,
-            emb.select(
-                (F.col("vec_id") + 10_000_000 * k).alias("vec_id"),
-                "embedding",
-            ),
-        )
-
-    def list_files(root):
-        out = {}
-        for d in os.listdir(root):
-            full = os.path.join(root, d)
-            if d.startswith("list_id=") and os.path.isdir(full):
-                out[d] = sorted(
-                    n for n in os.listdir(full) if n.endswith(".parquet")
-                )
-        return out
-
-    before = list_files(idx)
-    assert max(len(v) for v in before.values()) > 1, "no fragmentation"
-    cent_dir = os.path.join(idx, "_centroids")
-    cent_sig = {
-        n: os.path.getsize(os.path.join(cent_dir, n))
-        for n in os.listdir(cent_dir)
-    }
-    probe_before = sorted(
-        map(tuple, ann_ivf_topk_indexed(spark, sf, idx).collect())
-    )
-
-    stats = compact_ivf_index(spark, idx)
-    assert stats["lists_compacted"] > 0
-    assert stats["files_after"] < stats["files_before"]
-    after = list_files(idx)
-    assert set(after) == set(before)
-    # tiny lists -> byte-derived target is 1 file per compacted list
-    for d, names in after.items():
-        if len(before[d]) > 1:
-            assert len(names) == 1, (d, names)
-        else:  # already-compact lists keep their exact files
-            assert names == before[d], d
-    assert {
-        n: os.path.getsize(os.path.join(cent_dir, n))
-        for n in os.listdir(cent_dir)
-    } == cent_sig
-
-    probe_after = sorted(
-        map(tuple, ann_ivf_topk_indexed(spark, sf, idx).collect())
-    )
-    assert probe_after == probe_before
-
-    again = compact_ivf_index(spark, idx)
-    assert again["lists_compacted"] == 0
-
-
-def test_compact_ivf_index_crash_recovery_lock_and_zero_row_skip(
-    spark, tmp_path
-):
-    """r10 ADVICE (all three compaction items):
-
-    - medium: a retry after a mid-swap crash must RESTORE the displaced
-      list from <root>__compact_old instead of rmtree-ing the only copy;
-    - low: a fragmented list whose part files hold zero rows produces no
-      tmp partition dir — the swap must skip it, not displace the
-      original and then crash on the missing rename source;
-    - low: the single-writer contract is enforced by a lock file (a
-      concurrent compaction fails fast), and the lock file is invisible
-      to index scans (underscore-prefixed = Hadoop-hidden).
-    """
-    import os
-    import shutil
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    from data_ingestion_tool_spark.operators.similarity import (
-        ann_ivf_topk_indexed,
-        build_ivf_index,
-        compact_ivf_index,
-        ivf_index_upsert,
-    )
-    from data_ingestion_tool_spark.sources.tables import load_table
-
-    sf = "/root/testdata/sf0.001"
-    idx = str(tmp_path / "ivf")
-    build_ivf_index(spark, sf, idx)
-    emb = load_table(spark, sf, "embeddings").select("vec_id", "embedding")
-    for k in (1, 2):
-        ivf_index_upsert(
-            spark,
-            idx,
-            emb.select(
-                (F.col("vec_id") + 10_000_000 * k).alias("vec_id"),
-                "embedding",
-            ),
-        )
-    probe_before = sorted(
-        map(tuple, ann_ivf_topk_indexed(spark, sf, idx).collect())
-    )
-
-    # zero-row fragmented list: two empty part files under a fresh
-    # list_id -> detected as fragmented (2 files > byte target 1) but
-    # the rewrite emits no tmp partition dir for it
-    frag_lists = [
-        d for d in os.listdir(idx)
-        if d.startswith("list_id=")
-        and len([n for n in os.listdir(os.path.join(idx, d))
-                 if n.endswith(".parquet")]) > 1
-    ]
-    assert frag_lists, "no fragmentation to test against"
-    sample_file = next(
-        os.path.join(idx, frag_lists[0], n)
-        for n in os.listdir(os.path.join(idx, frag_lists[0]))
-        if n.endswith(".parquet")
-    )
-    empty_dir = str(tmp_path / "empty_rows")
-    spark.read.parquet(sample_file).limit(0).coalesce(1).write.parquet(
-        empty_dir
-    )
-    empty_part = next(
-        os.path.join(empty_dir, n)
-        for n in os.listdir(empty_dir)
-        if n.endswith(".parquet")
-    )
-    zero_list = os.path.join(idx, "list_id=999983")
-    os.makedirs(zero_list)
-    shutil.copy(empty_part, os.path.join(zero_list, "part-empty-a.parquet"))
-    shutil.copy(empty_part, os.path.join(zero_list, "part-empty-b.parquet"))
-
-    # mid-swap crash: a prior run displaced one fragmented list (first
-    # rename done) and died before the second rename
-    old_root = idx + "__compact_old"
-    os.makedirs(old_root)
-    crashed = frag_lists[0]
-    os.rename(os.path.join(idx, crashed), os.path.join(old_root, crashed))
-
-    # single-writer fence, three lock states (r11 ADVICE):
-    # (a) PID-less lock (pre-PID era / unreadable): never auto-broken,
-    #     fails with an actionable RuntimeError naming the path
-    lock = os.path.join(idx, "_compact.lock")
-    with open(lock, "w"):
-        pass
-    with pytest.raises(RuntimeError, match="_compact.lock"):
-        compact_ivf_index(spark, idx)
-    assert os.path.isdir(os.path.join(old_root, crashed)), (
-        "failed lock attempt must not touch the recovery copy"
-    )
-    assert os.path.exists(lock), "PID-less lock must never be auto-broken"
-    os.unlink(lock)
-    # (b) live-holder lock: compaction fails fast AND the upsert fence
-    #     is real — ivf_index_upsert refuses instead of appending into
-    #     a mid-swap index
-    with open(lock, "w") as fh:
-        fh.write(str(os.getpid()))
-    with pytest.raises(RuntimeError, match="live"):
-        compact_ivf_index(spark, idx)
-    with pytest.raises(RuntimeError, match="refusing to upsert"):
-        ivf_index_upsert(
-            spark,
-            idx,
-            emb.select(
-                (F.col("vec_id") + 90_000_000).alias("vec_id"), "embedding"
-            ),
-        )
-    os.unlink(lock)
-    # (b2) foreign-host lock: PID liveness is LOCAL, so a lock stamped
-    #      by another hostname is unattributable here — never
-    #      auto-broken even with a locally-dead PID (shared-mount
-    #      deployments get fail-fast, not a second concurrent swap)
-    with open(lock, "w") as fh:
-        fh.write("999999\nsome-other-host")
-    with pytest.raises(RuntimeError, match="unattributable|different host"):
-        compact_ivf_index(spark, idx)
-    assert os.path.exists(lock), "foreign-host lock must never be broken"
-    os.unlink(lock)
-    # (c) stale lock (holder PID dead — the kill -9 mid-swap leak):
-    #     the retry breaks it itself and proceeds; no manual rm.
-    #     Re-spawn if the reaped PID got recycled to a live process
-    #     before the lock was probed (rare PID-wraparound flake).
-    import subprocess
-
-    from data_ingestion_tool_spark.operators.similarity import (
-        _lock_holder_alive,
-    )
-
-    for _ in range(5):
-        dead = subprocess.Popen(["true"])
-        dead.wait()
-        with open(lock, "w") as fh:
-            fh.write(str(dead.pid))
-        if _lock_holder_alive(lock) is False:
-            break
-    else:
-        pytest.fail("could not obtain a verifiably-dead PID")
-
-    stats = compact_ivf_index(spark, idx)
-    # crashed list restored and compacted with the rest; recovery
-    # staging cleared; lock released for the next maintenance run
-    assert not os.path.exists(old_root)
-    assert not os.path.exists(lock)
-    assert os.path.isdir(os.path.join(idx, crashed))
-    # zero-row list skipped: originals intact, not counted as compacted
-    assert sorted(os.listdir(zero_list)) == [
-        "part-empty-a.parquet", "part-empty-b.parquet",
-    ]
-    assert stats["lists_compacted"] > 0
-    assert stats["files_after"] < stats["files_before"]
-
-    probe_after = sorted(
-        map(tuple, ann_ivf_topk_indexed(spark, sf, idx).collect())
-    )
-    assert probe_after == probe_before
-
-
-def test_indexed_probe_refuses_centroidless_index(spark, tmp_path):
-    """r09 ADVICE: stored list_id assignments are only valid under the
-    persisted quantizer — with `_centroids` gone the probe must demand
-    a rebuild, not silently retrain and mis-route (or IndexError on a
-    shrunken nlist)."""
-    import shutil
-
-    import pytest
-
-    from data_ingestion_tool_spark.operators.similarity import (
-        ann_ivf_topk_indexed,
-        build_ivf_index,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    idx = str(tmp_path / "ivf")
-    build_ivf_index(spark, sf, idx)
-    shutil.rmtree(idx + "/_centroids")
-    with pytest.raises(ValueError, match="rebuild"):
-        ann_ivf_topk_indexed(spark, sf, idx)
-
-
-def test_ivf_upsert_casts_new_vectors_to_index_element_type(
-    spark, tmp_path
-):
-    """r09 ADVICE: appending an array<double> batch into an
-    array<float> index (or vice versa) writes mixed parquet physical
-    types across one list's part files — the upsert must cast new
-    vectors to the index's stored type, and the grown index must read
-    back with the ORIGINAL element type end-to-end."""
-    from pyspark.sql import functions as F
-
-    from data_ingestion_tool_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_index_upsert,
-    )
-    from data_ingestion_tool_spark.sources.tables import load_table
-
-    sf = "/root/testdata/sf0.001"
-    idx = str(tmp_path / "ivf")
-    build_ivf_index(spark, sf, idx)
-    idx_type = spark.read.parquet(idx).schema["embedding"].dataType
-    flipped = (
-        "array<double>"
-        if idx_type.simpleString() == "array<float>"
-        else "array<float>"
-    )
-    emb = load_table(spark, sf, "embeddings")
-    new_emb = emb.select(
-        (F.col("vec_id") + 10_000_000).alias("vec_id"),
-        F.col("embedding").cast(flipped).alias("embedding"),
-    )
-    ivf_index_upsert(spark, idx, new_emb)
-    grown = spark.read.parquet(idx)
-    assert grown.schema["embedding"].dataType == idx_type
-    # the mixed-schema corruption shows up at read time — prove the
-    # grown index scans clean
-    n_new = new_emb.count()
-    assert grown.where(F.col("vec_id") >= 10_000_000).count() == n_new
-
-
 def test_weighted_sample_biases_toward_heavy_docs(spark):
     """A-Res weighting works: the byte-weighted sample's mean doc size
     exceeds the corpus mean (deterministic draw → fixed assertion)."""

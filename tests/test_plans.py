@@ -4,6 +4,8 @@ programmatically, not eyeballed."""
 
 from __future__ import annotations
 
+import pytest
+
 from data_ingestion_tool_spark.operators import registry
 from data_ingestion_tool_spark.operators.base import plan_only
 from data_ingestion_tool_spark.plans import (
@@ -14,6 +16,23 @@ from data_ingestion_tool_spark.plans import (
 from tests.conftest import SF_CORRECT
 
 REG = registry()
+
+
+@pytest.fixture(scope="module")
+def registry_plans(spark):
+    """Every registry builder built once: ``{name: (schema, formatted
+    plan)}``. Builders that materialize an intermediate table would
+    show a Scan ExistingRDD (and execute as a side effect); plan_only()
+    keeps their REAL candidate plans. A builder's output schema is the
+    same under plan_only() as in an eager build."""
+    from data_ingestion_tool_spark.plans import formatted_plan
+
+    built = {}
+    with plan_only():
+        for name, spec in REG.items():
+            df = spec.builder(spark, SF_CORRECT)
+            built[name] = (df.schema, formatted_plan(df))
+    return built
 
 
 def test_pricing_summary_pushes_filter_and_prunes(spark):
@@ -185,28 +204,6 @@ def test_blocked_near_dup_replication_factor_is_n_blocks(spark):
     exploded = emb.select(F.explode(pairs)).count()
     assert exploded == n_rows * _GRID_BLOCKS
     assert df.count() >= 0
-
-
-def test_ivf_index_probe_prunes_partitions(spark, tmp_path):
-    """The materialized IVF index is partitioned by list_id; a probe
-    reads only the nprobe partitions (PartitionFilters at the scan)
-    and returns exactly the ad-hoc operator's neighbors."""
-    from data_ingestion_tool_spark.operators.similarity import (
-        ann_ivf_topk,
-        ann_ivf_topk_indexed,
-        build_ivf_index,
-    )
-    from data_ingestion_tool_spark.plans import formatted_plan
-
-    idx = str(tmp_path / "ivf_index")
-    build_ivf_index(spark, SF_CORRECT, idx)
-    probed = ann_ivf_topk_indexed(spark, SF_CORRECT, idx)
-    plan = formatted_plan(probed)
-    assert "PartitionFilters" in plan
-    assert "list_id" in plan.split("PartitionFilters", 1)[1][:200]
-    adhoc = ann_ivf_topk(spark, SF_CORRECT)
-    assert probed.exceptAll(adhoc).count() == 0
-    assert adhoc.exceptAll(probed).count() == 0
 
 
 def test_pack_token_budget_is_single_shuffle(spark):
@@ -487,7 +484,7 @@ def test_tpch_q10_finishes_with_take_ordered(spark):
     assert "TakeOrderedAndProject" in formatted_plan(df)
 
 
-def test_no_unbounded_pair_enumeration_anywhere(spark):
+def test_no_unbounded_pair_enumeration_anywhere(registry_plans):
     """Registry-wide scale contract: NO query may plan a
     CartesianProduct, and BroadcastNestedLoopJoin may appear only in
     the whitelisted bounded patterns — 1-row/dim-sized broadcast
@@ -496,8 +493,6 @@ def test_no_unbounded_pair_enumeration_anywhere(spark):
     fan-out. Any new operator that plans an unbounded pair
     enumeration fails here by default."""
     import re
-
-    from data_ingestion_tool_spark.plans import formatted_plan
 
     BOUNDED_BNLJ = {
         "tfidf_top_terms",          # 1-row n_docs broadcast
@@ -528,20 +523,15 @@ def test_no_unbounded_pair_enumeration_anywhere(spark):
         # PassJoin path carries all titles of len >= d+1
         "fuzzy_title_pairs",
     }
-    # builders that materialize an intermediate table would show a
-    # Scan ExistingRDD (and execute as a side effect); plan_only()
-    # keeps their REAL candidate plans
     offenders = {}
-    with plan_only():
-        for name, spec in REG.items():
-            text = formatted_plan(spec.builder(spark, SF_CORRECT))
-            if re.search(r"\(\d+\) CartesianProduct", text):
-                offenders[name] = "CartesianProduct"
-            elif (
-                re.search(r"\(\d+\) BroadcastNestedLoopJoin", text)
-                and name not in BOUNDED_BNLJ
-            ):
-                offenders[name] = "BroadcastNestedLoopJoin"
+    for name, (_, text) in registry_plans.items():
+        if re.search(r"\(\d+\) CartesianProduct", text):
+            offenders[name] = "CartesianProduct"
+        elif (
+            re.search(r"\(\d+\) BroadcastNestedLoopJoin", text)
+            and name not in BOUNDED_BNLJ
+        ):
+            offenders[name] = "BroadcastNestedLoopJoin"
     assert not offenders, offenders
 
 
@@ -658,11 +648,10 @@ def test_every_grouped_pandas_site_is_bounded():
     - ``semdedup`` — per-cluster groups run only under the
       ``cluster_cap`` limit-probe; oversized clusters auto-demote to
       the blocked kernel
-    - ``running_user_totals_stream`` — per-key streaming state, one
-      micro-batch of one key per invocation
 
     A new ``applyInPandas`` site fails here by default until its
-    author documents why the group is bounded and adds it.
+    author documents why the group is bounded and adds it; a deleted
+    site fails here until its stale entry is dropped.
     """
     import ast
     import os
@@ -673,7 +662,6 @@ def test_every_grouped_pandas_site_is_bounded():
         ("operators/similarity.py", "label_top_eigenvalue"),
         ("operators/similarity.py", "blocked_cosine_pairs"),
         ("operators/similarity.py", "semdedup"),
-        ("streaming/streams.py", "running_user_totals_stream"),
     }
     root = os.path.dirname(pkg.__file__)
     found = set()
@@ -700,7 +688,10 @@ def test_every_grouped_pandas_site_is_bounded():
                     walk(child, nf)
 
             walk(tree, "<module>")
-    assert found <= BOUNDED, f"unreviewed grouped-pandas sites: {found - BOUNDED}"
+    assert found == BOUNDED, (
+        f"unreviewed grouped-pandas sites: {found - BOUNDED}; "
+        f"stale allowlist entries: {BOUNDED - found}"
+    )
 
 
 def test_pagerank_iteration_is_bounded_shuffle_jvm_only(spark):
@@ -826,7 +817,7 @@ def test_every_driver_materialization_site_is_bounded():
 
     - similarity: N_QUERIES query sets, k centroids, limit-probed
       broadcast side (auto-demotes past the guard), ≤k cluster sizes,
-      ≤d² covariance rows, bounded IVF train sample / centroid table
+      ≤d² covariance rows, bounded IVF train sample
     - text (BPE apply): merge-table collect bounded by the merge count
     - excel export: limit-capped collect (the reference's unbounded
       toPandas at box_export.py:37 is the anti-pattern this replaces)
@@ -854,7 +845,6 @@ def test_every_driver_materialization_site_is_bounded():
         ("operators/similarity.py", "embedding_near_dup"),
         ("operators/similarity.py", "embedding_pca_scores"),
         ("operators/similarity.py", "kmeans_labels"),
-        ("operators/similarity.py", "load_ivf_centroids"),
         ("operators/similarity.py", "semdedup"),
         ("operators/text.py", "bpe_token_counts"),
         ("sinks/excel.py", "export_to_excel"),
@@ -893,7 +883,7 @@ def test_every_driver_materialization_site_is_bounded():
     )
 
 
-def test_registry_outputs_are_driver_hashable_scalars(spark):
+def test_registry_outputs_are_driver_hashable_scalars(registry_plans):
     """Output-boundary contract (round-4 verdict): no registry builder
     may emit DECIMAL or ARRAY/MAP/STRUCT top-level columns. The driver
     canonicalizer pandas-sorts cells (lists are unhashable → crash) and
@@ -905,8 +895,8 @@ def test_registry_outputs_are_driver_hashable_scalars(spark):
     from pyspark.sql.types import ArrayType, DecimalType, MapType, StructType
 
     offenders = {}
-    for name, spec in REG.items():
-        for field in spec.builder(spark, SF_CORRECT).schema.fields:
+    for name, (schema, _) in registry_plans.items():
+        for field in schema.fields:
             if isinstance(field.dataType, (ArrayType, DecimalType, MapType, StructType)):
                 offenders.setdefault(name, []).append(
                     f"{field.name}:{field.dataType.simpleString()}"

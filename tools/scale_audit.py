@@ -336,138 +336,6 @@ EMBED_QUERIES = [
 ]
 
 
-def ivf_index_audit(spark, base: str, out: str, factor: int) -> int:
-    """--ivf-index (r08 verdict item 4): the prior 100x audits priced
-    the AD-HOC IVF operator, whose cost is dominated by the per-call
-    O(N·nlist·d) assignment GEMM; the documented 100 TB deployment
-    path is build-once/probe-many (``build_ivf_index`` →
-    ``ann_ivf_topk_indexed`` with list_id partition pruning). This
-    mode times the build ONCE (the amortized cost), then probes alone
-    (min of 3) at both scales, prices the ad-hoc operator at the
-    audit scale for comparison, and plan-asserts partition pruning on
-    the AUDIT-scale index (the pytest pin covers sf0.01 only)."""
-    from data_ingestion_tool_spark.operators.similarity import (
-        ann_ivf_topk,
-        ann_ivf_topk_indexed,
-        build_ivf_index,
-        compact_ivf_index,
-        ivf_index_upsert,
-    )
-    from data_ingestion_tool_spark.plans import formatted_plan
-
-    def timed(fn) -> float:
-        t0 = time.perf_counter()
-        fn()
-        return time.perf_counter() - t0
-
-    def noop(df) -> None:
-        df.write.format("noop").mode("overwrite").save()
-
-    report: dict[str, object] = {"mode": "ivf_index", "factor": factor}
-    rows = []
-    for label, sf_dir in (("1x", base), (f"{factor}x", out)):
-        idx = os.path.join(sf_dir, "_ivf_index_audit")
-        build_sec = timed(lambda: build_ivf_index(spark, sf_dir, idx))
-        probe_sec = min(
-            timed(lambda: noop(ann_ivf_topk_indexed(spark, sf_dir, idx)))
-            for _ in range(3)
-        )
-        plan = formatted_plan(ann_ivf_topk_indexed(spark, sf_dir, idx))
-        pruned = (
-            "PartitionFilters" in plan
-            and "list_id" in plan.split("PartitionFilters", 1)[1][:200]
-        )
-        adhoc_sec = min(
-            timed(lambda: noop(ann_ivf_topk(spark, sf_dir)))
-            for _ in range(2)
-        )
-        rows.append((label, build_sec, probe_sec, adhoc_sec, pruned))
-        print(
-            f"  {label}: build {build_sec:.2f}s, probe {probe_sec:.2f}s "
-            f"(min of 3), ad-hoc {adhoc_sec:.2f}s, "
-            f"partition-pruned={pruned}",
-            flush=True,
-        )
-
-    print(f"\n{'scale':8s} {'build':>8s} {'probe':>8s} {'ad-hoc':>8s} {'pruned':>7s}")
-    for label, b, p, a, pr in rows:
-        print(f"{label:8s} {b:8.2f} {p:8.2f} {a:8.2f} {str(pr):>7s}")
-    (_, b1, p1, a1, pr1), (_, bN, pN, aN, prN) = rows
-
-    # Fragmentation pricing (r09 verdict item 3): K tiny upserts model
-    # streaming micro-batches — rows barely grow, but every touched
-    # list gains a part file per batch, so the pruned probe's cost
-    # drifts from scan to file listing/open overhead.
-    # compact_ivf_index restores the layout; the probe is re-priced on
-    # IDENTICAL content both sides (compaction moves bytes, not rows).
-    idx = os.path.join(out, "_ivf_index_audit")
-    emb = spark.read.parquet(os.path.join(out, "embeddings.parquet"))
-    n_upserts, batch_rows = 16, 2000
-    t0 = time.perf_counter()
-    for k in range(1, n_upserts + 1):
-        batch = (
-            emb.select(
-                (F.col("vec_id") + 50_000_000 * k).alias("vec_id"),
-                "embedding",
-            ).limit(batch_rows)
-        )
-        ivf_index_upsert(spark, idx, batch)
-    upsert_sec = time.perf_counter() - t0
-
-    def max_files_per_list() -> int:
-        return max(
-            len([f for f in os.listdir(os.path.join(idx, d))
-                 if f.endswith(".parquet")])
-            for d in os.listdir(idx)
-            if d.startswith("list_id=")
-        )
-
-    frag_files = max_files_per_list()
-    frag_probe = min(
-        timed(lambda: noop(ann_ivf_topk_indexed(spark, out, idx)))
-        for _ in range(3)
-    )
-    t0 = time.perf_counter()
-    stats = compact_ivf_index(spark, idx)
-    compact_sec = time.perf_counter() - t0
-    comp_probe = min(
-        timed(lambda: noop(ann_ivf_topk_indexed(spark, out, idx)))
-        for _ in range(3)
-    )
-    print(
-        f"  fragmentation: {n_upserts} micro-upserts ({upsert_sec:.1f}s) "
-        f"-> max {frag_files} files/list, probe {frag_probe:.2f}s; "
-        f"compacted ({compact_sec:.1f}s, {stats['lists_compacted']} "
-        f"lists, {stats['files_before']}->{stats['files_after']} files) "
-        f"-> max {max_files_per_list()} files/list, "
-        f"probe {comp_probe:.2f}s",
-        flush=True,
-    )
-    report["fragmentation"] = {
-        "n_upserts": n_upserts,
-        "max_files_per_list_fragmented": frag_files,
-        "probe_fragmented_sec": round(frag_probe, 2),
-        "compact_sec": round(compact_sec, 2),
-        "lists_compacted": stats["lists_compacted"],
-        "max_files_per_list_compacted": max_files_per_list(),
-        "probe_compacted_sec": round(comp_probe, 2),
-    }
-    report.update(
-        {
-            "build_sec": {"1x": round(b1, 2), f"{factor}x": round(bN, 2)},
-            "probe_sec": {"1x": round(p1, 2), f"{factor}x": round(pN, 2)},
-            "adhoc_sec": {"1x": round(a1, 2), f"{factor}x": round(aN, 2)},
-            "probe_ratio": round(pN / p1, 2) if p1 > 0 else None,
-            "probe_vs_adhoc_at_scale": round(pN / aN, 2) if aN > 0 else None,
-            "partition_pruned": {"1x": pr1, f"{factor}x": prN},
-        }
-    )
-    print(json.dumps(report))
-    # the audit's contract: pruning holds at scale and probes beat the
-    # per-call assignment GEMM they exist to amortize
-    return 0 if (prN and pN < aN) else 1
-
-
 def main() -> int:
     factor = 10
     base = "/root/testdata/sf0.1"
@@ -475,7 +343,6 @@ def main() -> int:
     names = None
     with_text = "--with-text" in sys.argv
     prod_dims = "--production-dims" in sys.argv
-    ivf_index = "--ivf-index" in sys.argv
     argv = sys.argv[1:]
     for i, a in enumerate(argv):
         if a == "--factor":
@@ -486,10 +353,6 @@ def main() -> int:
             out_root = argv[i + 1]
         elif a == "--queries":
             names = argv[i + 1].split(",")
-    if ivf_index:
-        # the index audit runs on the production-dims replica — same
-        # corpus discipline as the ad-hoc embedding-tier audits
-        prod_dims = True
     if prod_dims:
         with_text = True
         names = names or EMBED_QUERIES
@@ -531,11 +394,6 @@ def main() -> int:
             )
             open(os.path.join(base_prod, "_SUCCESS_AUDIT"), "w").close()
         base = base_prod
-
-    if ivf_index:
-        rc = ivf_index_audit(spark, base, out, factor)
-        spark.stop()
-        return rc
 
     reg = registry()
     names = [n for n in names if n in reg]

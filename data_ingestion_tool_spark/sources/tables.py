@@ -6,17 +6,23 @@ a scale-factor directory.
 
 At cluster scale the same loader reads a partitioned parquet/Delta
 prefix; nothing here assumes single-file inputs. Column pruning and
-predicate pushdown come from reading lazily (``spark.read.parquet``)
-and never caching eagerly.
+predicate pushdown come from reading lazily (``spark.read.parquet``):
+no table's rows are ever cached. The one thing kept across calls is
+each table's inferred schema, memoized per session and per file
+version (see ``load_table``), so a repeat load skips the one-task
+footer-reading job that schema inference runs.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from collections import OrderedDict
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, TimestampType
+from pyspark.sql.types import LongType, StructType, TimestampType
 
 TABLE_NAMES = (
     "region",
@@ -41,9 +47,49 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+#: Inferred parquet schemas, keyed by (session uuid, path, modification
+#: time, length); least recently used entries beyond the bound drop out.
+_SCHEMAS: OrderedDict[tuple, StructType] = OrderedDict()
+_SCHEMAS_MAX = 64
+_SCHEMAS_LOCK = threading.Lock()
+
+
+def _schema_key(spark: SparkSession, path: str) -> tuple | None:
+    """The memo key of ``path`` in ``spark``: its modification time and
+    length from the Hadoop FileSystem the reader itself uses (local
+    files and object stores alike), or None when the path cannot be
+    stat'ed (the read then raises Spark's own error)."""
+    jsession = spark._jsparkSession
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(jsession.sessionState().newHadoopConf())
+    try:
+        status = fs.getFileStatus(p)
+    except Py4JJavaError:
+        return None
+    return (jsession.sessionUUID(), path, status.getModificationTime(), status.getLen())
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """A fresh lazy relation over table ``name`` under ``sf_dir``.
+
+    The parquet schema is inferred once per session and file version:
+    the inferred ``StructType`` is memoized under the session, the path
+    and the path's modification time and length, and a repeat load
+    reads with ``spark.read.schema(known)``, which starts no Spark job.
+    A file rewritten in place gets a new modification time or length
+    and so is inferred again; for a directory the key is the
+    directory's own status. Only the schema is memoized, never the
+    DataFrame: every call returns a new relation with fresh attribute
+    ids, so two loads of one table self-join cleanly.
+    """
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
+    path = table_path(sf_dir, name)
+    key = _schema_key(spark, path)
+    with _SCHEMAS_LOCK:
+        known = _SCHEMAS.get(key)
+        if known is not None:
+            _SCHEMAS.move_to_end(key)
     # Runtime-settable SQLConfs, set here rather than at session build:
     # callers (the external harness included) may hand us an arbitrary
     # unconfigured SparkSession. Naive parquet timestamps must arrive as
@@ -63,13 +109,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             saved[k] = None
         spark.conf.set(k, v)
     try:
-        df = spark.read.parquet(table_path(sf_dir, name))
+        reader = spark.read if known is None else spark.read.schema(known)
+        df = reader.parquet(path)
     finally:
         for k, old in saved.items():
             if old is None:
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, old)
+    if key is not None and known is None:
+        with _SCHEMAS_LOCK:
+            _SCHEMAS[key] = df.schema
+            if len(_SCHEMAS) > _SCHEMAS_MAX:
+                _SCHEMAS.popitem(last=False)
     if name == "events":
         # Canonicalize ts to TIMESTAMP_NTZ no matter how this session's
         # reader surfaced it; downstream operators see ONE type.

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import itertools
 import os
 
 import duckdb
@@ -38,6 +39,25 @@ def spark(tmp_path_factory):
     session.sparkContext.setLogLevel("ERROR")
     yield session
     session.stop()
+
+
+_GROUPS = itertools.count()
+
+
+def jobs_started(spark, fn):
+    """Run ``fn()`` under a Spark job group of its own and return
+    ``(fn's result, number of Spark jobs it started)``. The listener bus
+    is drained before the count is read, so the count is exact."""
+    sc = spark.sparkContext
+    group = f"jobs-started-{next(_GROUPS)}"
+    outer = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", outer)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def make_duck(sf_dir: str) -> duckdb.DuckDBPyConnection:

@@ -20,6 +20,7 @@ from data_ingestion_tool_spark.sinks import tables
 from data_ingestion_tool_spark.sinks.tables import AuditLog
 from data_ingestion_tool_spark.sources.connector import LocalFSConnector
 from data_ingestion_tool_spark.xlsx_lite import write_xlsx
+from tests.conftest import jobs_started
 
 METADATA = {
     "id": "int",
@@ -94,23 +95,19 @@ def _land_batches(remote, n_xlsx: int) -> None:
 
 
 def _write_split_jobs(spark, monkeypatch, remote, table, tmp_path) -> int:
-    """Spark jobs started inside ``write_split`` for one ingest, read
-    from the status tracker under a job group of its own."""
-    group = _name("write-split")
-    sc = spark.sparkContext
+    """Spark jobs started inside ``write_split`` for one ingest."""
     inner = pipeline.write_split
+    counts = []
 
-    def grouped(*args, **kwargs):
-        sc.setLocalProperty("spark.jobGroup.id", group)
-        try:
-            return inner(*args, **kwargs)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
+    def counted(*args, **kwargs):
+        out, jobs = jobs_started(spark, lambda: inner(*args, **kwargs))
+        counts.append(jobs)
+        return out
 
-    monkeypatch.setattr(pipeline, "write_split", grouped)
+    monkeypatch.setattr(pipeline, "write_split", counted)
     _ingest(spark, remote, table, "jobs-owner", tmp_path)
     monkeypatch.setattr(pipeline, "write_split", inner)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return sum(counts)
 
 
 def test_write_split_job_count_is_flat_in_batch_count(

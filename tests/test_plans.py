@@ -928,21 +928,19 @@ def test_bpe_fit_job_count_is_flat_in_merge_count(spark, monkeypatch):
     ``Scan ExistingRDD`` stub."""
     from data_ingestion_tool_spark.operators import text
     from data_ingestion_tool_spark.plans import formatted_plan
-    from tests.conftest import SF_SMOKE
+    from data_ingestion_tool_spark.sources.tables import load_table
+    from tests.conftest import SF_SMOKE, jobs_started
 
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
+    # Infer the documents schema first, so that neither count below
+    # includes the session's one schema-inference job for that table.
+    load_table(spark, SF_SMOKE, "documents")
     jobs = {}
     for n in (3, 12):
         monkeypatch.setattr(text, "_BPE_MERGES", n)
-        group = f"bpe-fit-jobs-{n}"
-        sc.setJobGroup(group, "bpe_fit_merges job count")
-        try:
-            rows = text.bpe_fit_merges(spark, SF_SMOKE).collect()
-        finally:
-            sc.setJobGroup(None, None)
+        rows, jobs[n] = jobs_started(
+            spark, lambda: text.bpe_fit_merges(spark, SF_SMOKE).collect()
+        )
         assert 0 < len(rows) <= n
-        jobs[n] = len(tracker.getJobIdsForGroup(group))
     assert jobs[3] == jobs[12] <= 5, jobs
 
     df = text.bpe_fit_merges(spark, SF_SMOKE)

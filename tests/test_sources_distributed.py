@@ -7,7 +7,32 @@ import pandas as pd
 import pytest
 
 from data_ingestion_tool_spark.sources.excel import read_excel
+from data_ingestion_tool_spark.sources.tables import load_table
 from data_ingestion_tool_spark.xlsx_lite import write_xlsx
+from tests.conftest import SF_SMOKE, jobs_started
+
+_TS_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+
+def _confs(spark) -> dict:
+    return {k: spark.conf.get(k, None) for k in _TS_CONFS}
+
+
+def _memo_hit_load(spark, sf_dir: str, name: str):
+    """A repeat load of ``name``: it must start no Spark job and leave
+    the caller's timestamp confs as it found them."""
+    before = _confs(spark)
+    df, jobs = jobs_started(spark, lambda: load_table(spark, sf_dir, name))
+    assert jobs == 0
+    assert _confs(spark) == before
+    return df
+
+
+def _rows_by_id(df) -> list:
+    return sorted(df.collect(), key=lambda r: r["event_id"])
 
 
 def test_read_excel_distributed_with_injected_engine(spark, tmp_path):
@@ -55,18 +80,20 @@ def test_real_xlsx_end_to_end_without_injected_parser(spark, tmp_path):
     rows = sorted(df.collect(), key=lambda r: r[0])
     assert [tuple(r) for r in rows] == [(1, "x", 2.5), (2, "héllo <&>", -1.0)]
 
+
 def test_events_loads_on_unconfigured_session(spark):
     """Regression: the external harness builds its own SparkSession
     without our confs; load_table must canonicalize events.ts to
     TIMESTAMP_NTZ at runtime whether the file stores TIMESTAMP(NANOS)
     (round-1 testdata; PARQUET_TYPE_ILLEGAL without nanosAsLong) or
     naive micros (current testdata), under any session settings."""
-    from data_ingestion_tool_spark.sources.tables import load_table
-
     spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-    df = load_table(spark, "/root/testdata/sf0.001", "events")
+    df = load_table(spark, SF_SMOKE, "events")
     assert df.schema["ts"].dataType.typeName() == "timestamp_ntz"
     assert df.count() > 0
+    again = _memo_hit_load(spark, SF_SMOKE, "events")
+    assert again.schema == df.schema
+    assert _rows_by_id(again) == _rows_by_id(df)
     # the scoped confs are RESTORED after schema resolution — the
     # caller's session is left exactly as we found it (the conf is
     # captured into the relation at read time, so execution still
@@ -82,8 +109,6 @@ def test_nanos_file_loads_with_scoped_conf(spark, tmp_path):
     import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq
-
-    from data_ingestion_tool_spark.sources.tables import load_table
 
     ts = pd.to_datetime(
         ["2024-01-01 00:00:00.123456789", "2024-01-02 12:34:56.987654321"]
@@ -101,6 +126,8 @@ def test_nanos_file_loads_with_scoped_conf(spark, tmp_path):
     # ns truncated to µs, naive, tz-independent
     assert str(rows[1]) == "2024-01-01 00:00:00.123456"
     assert str(rows[2]) == "2024-01-02 12:34:56.987654"
+    again = _memo_hit_load(spark, str(tmp_path), "events")
+    assert {r["event_id"]: r["ts"] for r in again.collect()} == rows
 
     # An LTZ arrival (session read naive micros as TIMESTAMP) must
     # reconstruct the exact naive value, not shift it by session tz.
@@ -119,12 +146,89 @@ def test_nanos_file_loads_with_scoped_conf(spark, tmp_path):
                     " TIMESTAMP_NTZ '1970-01-01 00:00:00')"
                 ),
             )
-            ntz = load_table(spark, "/root/testdata/sf0.001", "events")
+            ntz = load_table(spark, SF_SMOKE, "events")
             a = ltz_df.select("event_id", "ts").orderBy("event_id").limit(5).collect()
             b = ntz.select("event_id", "ts").orderBy("event_id").limit(5).collect()
             assert [tuple(r) for r in a] == [tuple(r) for r in b]
     finally:
         spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
+
+
+def test_repeat_load_starts_no_job(spark):
+    first = load_table(spark, SF_SMOKE, "orders")
+    again = _memo_hit_load(spark, SF_SMOKE, "orders")
+    assert again.schema == first.schema
+    assert again.count() == first.count() == 1500
+
+
+def test_file_rewritten_in_place_is_inferred_again(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "orders.parquet")
+    pq.write_table(pa.table({"o_orderkey": [1, 2]}), path)
+    assert load_table(spark, str(tmp_path), "orders").columns == ["o_orderkey"]
+    pq.write_table(pa.table({"o_orderkey": [1, 2], "o_comment": ["a", "b"]}), path)
+    df = load_table(spark, str(tmp_path), "orders")
+    assert df.columns == ["o_orderkey", "o_comment"]
+    assert sorted(df.collect()) == [(1, "a"), (2, "b")]
+
+
+def test_two_loads_of_one_table_self_join(spark):
+    """Only the schema is memoized: each load is a new relation with
+    fresh attribute ids, so a join of two loads resolves each side."""
+    import pyarrow.parquet as pq
+
+    a = load_table(spark, SF_SMOKE, "orders")
+    b = load_table(spark, SF_SMOKE, "orders")
+    pairs = a.join(b, a["o_custkey"] == b["o_orderkey"]).select(
+        a["o_orderkey"], b["o_orderkey"]
+    )
+    o = pq.read_table(f"{SF_SMOKE}/orders.parquet").to_pandas()
+    want = o.merge(o, left_on="o_custkey", right_on="o_orderkey")
+    assert sorted(tuple(r) for r in pairs.collect()) == sorted(
+        zip(want["o_orderkey_x"], want["o_orderkey_y"])
+    )
+
+
+def test_schema_memo_under_concurrent_loads(spark, monkeypatch):
+    """Eight threads load three tables through a two-entry memo, so
+    hits, inserts and evictions interleave: every load must return its
+    own table's schema and the memo must end within its bound."""
+    import sys
+    import threading
+    from collections import OrderedDict
+
+    from data_ingestion_tool_spark.sources import tables
+
+    names = ("region", "nation", "supplier")
+    want = {n: load_table(spark, SF_SMOKE, n).schema for n in names}
+    monkeypatch.setattr(tables, "_SCHEMAS", OrderedDict())
+    monkeypatch.setattr(tables, "_SCHEMAS_MAX", 2)
+    errors = []
+
+    def work(i):
+        try:
+            for j in range(8):
+                n = names[(i + j) % len(names)]
+                if load_table(spark, SF_SMOKE, n).schema != want[n]:
+                    errors.append(f"{n}: wrong schema")
+        except Exception as exc:  # noqa: BLE001 — reported below
+            errors.append(repr(exc))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=work, args=(i,)) for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(tables._SCHEMAS) <= 2
 
 
 def test_orc_roundtrip(spark, tmp_path):

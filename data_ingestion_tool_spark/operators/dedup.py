@@ -194,19 +194,6 @@ def _jaccard_pairs_from_candidates(
     )
 
 
-def hashed_postings(sets: DataFrame) -> DataFrame:
-    """(doc_id, shingle int64) inverted index. Joining on a 64-bit
-    shingle hash, not the string, keeps shuffle rows narrow;
-    intersection counts are unchanged up to xxhash64 collisions
-    (~shingles²/2⁶⁴ per pair — negligible)."""
-    return sets.select(
-        "doc_id",
-        F.explode(F.transform("shingles", lambda s: F.xxhash64(s))).alias(
-            "shingle"
-        ),
-    )
-
-
 def hashed_postings_from_docs(df: DataFrame, n: int = 3) -> DataFrame:
     """(doc_id, shingle int64) built straight from the text column —
     the fast path: n-grams are hashed and deduped INSIDE the explode
@@ -311,27 +298,10 @@ WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
 # ---------------------------------------------------------------------------
 
 
-def minhash_signatures(sets: DataFrame, k: int = MINHASH_K) -> DataFrame:
-    """K min-hash values per document, one shuffle: explode → groupBy
-    doc → K min-aggregates.
-
-    Each shingle string is hashed ONCE to int64; the K hash family
-    members are seeded xxhash64 mixes of that integer (8-byte input)
-    rather than K independent string hashes — the dominant cost at
-    K=32 was hashing every multi-word shingle 32 times (measured 3× on
-    the signature stage at sf0.1)."""
-    posting = hashed_postings(sets)
-    aggs = [
-        F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}")
-        for i in range(k)
-    ]
-    return posting.groupBy("doc_id").agg(*aggs)
-
-
 def minhash_signatures_from_docs(df: DataFrame, k: int = MINHASH_K) -> DataFrame:
-    """Same signature VALUES as :func:`minhash_signatures`, computed
-    NARROWLY (round 12): instead of exploding the postings and paying
-    a doc-keyed exchange into K min-aggregates, each doc row computes
+    """K min-hash values per document (``h0``..``h{k-1}``), computed
+    NARROWLY (round 12): instead of exploding the hashed postings and
+    paying a doc-keyed exchange into K min-aggregates, each doc row computes
     its K signature components in place —
     ``array_min(transform(grams, g -> xxhash64(i, xxhash64(g))))`` —
     so the signature stage is a pure projection: zero shuffles, no

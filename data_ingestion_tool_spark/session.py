@@ -51,12 +51,6 @@ def configure_builder(
         # error; read as long and convert in the loader (sources/tables
         # truncates ns→µs, matching DuckDB's microsecond timestamps).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # Report the on-disk sort order of bucketed scans so a
-        # co-bucketed sort-merge join elides its per-query Sort.
-        # Safe (and cheap) here because sinks.layout.write_bucketed
-        # guarantees ONE file per bucket — the only layout for which
-        # the reported ordering is actually true.
-        .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
         # Keep driver results bounded: exports collect to the driver.
         .config("spark.driver.maxResultSize", "4g")
         .config("spark.ui.enabled", "false")

@@ -88,34 +88,6 @@ def append_table(
     writer.saveAsTable(qualified(table_name, catalog, schema))
 
 
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    *,
-    bucket_cols: list[str],
-    n_buckets: int = 32,
-    sort_cols: list[str] | None = None,
-    catalog: str | None = None,
-    schema: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Write a managed table bucketed (and optionally sorted) by the
-    join/agg key. Two tables co-bucketed on the same key with the same
-    bucket count join with NO shuffle on either side — the planner
-    reads the bucket layout from the catalog. At 100 TB this is how a
-    repeatedly-joined fact pair amortizes its shuffle: pay it once at
-    write time, never at read time.
-    """
-    writer = (
-        df.write.format(TABLE_FORMAT)
-        .mode(mode)
-        .bucketBy(n_buckets, *bucket_cols)
-    )
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(qualified(table_name, catalog, schema))
-
-
 def union_all(frames: list[DataFrame]) -> DataFrame:
     """``unionByName`` of ``frames``, widest first so the result keeps
     the full column order; a frame that lacks a column gets nulls in
@@ -206,70 +178,6 @@ def just_copy_projection(
             for f in fields
         ]
     )
-
-
-def write_range_layout(
-    df: DataFrame,
-    table_name: str,
-    *,
-    range_col: str,
-    n_files: int = 16,
-    catalog: str | None = None,
-    schema: str | None = None,
-) -> None:
-    """Write with a range-clustered file layout: rows range-partitioned
-    then sorted on ``range_col``, so every parquet file covers a
-    disjoint value range. Readers filtering on that column skip whole
-    files via row-group min/max stats — the sort-key analog of
-    partition pruning, without the directory explosion of
-    ``partitionBy`` on a high-cardinality column.
-    """
-    (
-        df.repartitionByRange(n_files, F.col(range_col))
-        .sortWithinPartitions(range_col)
-        .write.format(TABLE_FORMAT)
-        .mode("overwrite")
-        .saveAsTable(qualified(table_name, catalog, schema))
-    )
-
-
-def merge_upsert(
-    spark: SparkSession,
-    source: DataFrame,
-    table_name: str,
-    keys: list[str],
-    *,
-    catalog: str | None = None,
-    schema: str | None = None,
-) -> None:
-    """Keyed upsert: source rows replace same-key target rows, others
-    insert — re-running an ingest becomes idempotent instead of
-    duplicating (the reference can only append).
-
-    Delta available → a real MERGE (file-level rewrite of touched
-    files only). Parquet fallback → anti-join keep-set ∪ source,
-    lineage cut with ``localCheckpoint`` so the overwrite doesn't read
-    the files it is replacing. The fallback rewrites the whole table —
-    correct everywhere, economical only below Delta adoption size.
-    """
-    target = qualified(table_name, catalog, schema)
-    if TABLE_FORMAT == "delta":
-        from delta.tables import DeltaTable  # type: ignore
-
-        cond = " AND ".join(f"t.{k} = s.{k}" for k in keys)
-        (
-            DeltaTable.forName(spark, target)
-            .alias("t")
-            .merge(source.alias("s"), cond)
-            .whenMatchedUpdateAll()
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-        return
-    existing = spark.table(target)
-    keep = existing.join(source.select(keys).distinct(), keys, "left_anti")
-    merged = keep.unionByName(source).localCheckpoint(eager=True)
-    merged.write.format(TABLE_FORMAT).mode("overwrite").saveAsTable(target)
 
 
 AUDIT_TABLE = "box_ingestion_log"

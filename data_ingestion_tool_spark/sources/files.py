@@ -20,12 +20,10 @@ from __future__ import annotations
 import csv
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 #: Ingest-pipeline dispatch. ``.txt`` is deliberately NOT here: the
 #: reference skips it (box_ingest.py:157-159) and a one-column line
-#: table has no place in the validated-ingest path; ``read_text`` is
-#: the standalone raw-corpus entry point for the text/dedup tier.
+#: table has no place in the validated-ingest path.
 SUPPORTED_EXTENSIONS = (
     ".csv",
     ".json",
@@ -60,69 +58,6 @@ def read_orc(spark: SparkSession, paths: list[str] | str) -> DataFrame:
     predicate pushdown) — no reference analog (pandas has no ORC
     writer path in the tool), included for format completeness."""
     return spark.read.orc(*([paths] if isinstance(paths, str) else paths))
-
-
-def read_text(spark: SparkSession, paths: list[str] | str) -> DataFrame:
-    """Plain text: one row per line, a single ``value`` column — the
-    raw-corpus entry point for the text/dedup tier."""
-    return spark.read.text(paths)
-
-
-_CORRUPT = "_corrupt_record"
-
-
-def read_jsonl_tolerant(
-    spark: SparkSession,
-    paths: list[str] | str,
-    schema: str,
-) -> tuple[DataFrame, DataFrame]:
-    """Corrupt-record-tolerant NDJSON ingestion: PERMISSIVE parse with
-    the raw text of every unparseable line captured in a quarantine
-    DataFrame instead of poisoning the batch (FAILFAST) or silently
-    vanishing (DROPMALFORMED).
-
-    Returns (valid, corrupt): ``valid`` carries exactly ``schema``;
-    ``corrupt`` is ``(record string)`` — the same quarantine contract
-    as the validation split (``validate_and_split``), so bad *lines*
-    and bad *values* land in the same error-table shape. Requires an
-    explicit schema: at 100 TB you never pay double-scan inference,
-    and inference can't represent "this line didn't parse".
-
-    Both sides are filters over ONE text scan + ``from_json`` with an
-    embedded corrupt-record field (the DataFrameReader's own corrupt
-    column can't be queried standalone —
-    UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN — and the
-    documented cache() workaround is a non-starter at 100 TB). No
-    pre-parse, no per-file driver loop (reference contrast: one pandas
-    ``read_json`` per file, box_ingest.py:150-151)."""
-    raw = spark.read.text(paths)
-    rec = F.from_json(
-        "value",
-        f"{schema}, {_CORRUPT} string",
-        {"columnNameOfCorruptRecord": _CORRUPT},
-    )
-    parsed = raw.select(F.col("value"), rec.alias("rec"))
-    flag = F.col(f"rec.{_CORRUPT}")
-    valid = parsed.filter(flag.isNull()).select("rec.*").drop(_CORRUPT)
-    corrupt = parsed.filter(flag.isNotNull()).select(
-        F.col("value").alias("record")
-    )
-    return valid, corrupt
-
-
-def read_parquet_evolved(
-    spark: SparkSession, paths: list[str] | str
-) -> DataFrame:
-    """Schema-evolution-aware parquet read: ``mergeSchema`` unions the
-    footers of every file, so columns added over a table's lifetime
-    surface as nullable columns instead of being silently dropped
-    (default reads take one random footer). Footer merging is
-    O(files) at planning time — use for evolving ingest directories,
-    not for curated tables with a catalog schema."""
-    return (
-        spark.read.option("mergeSchema", True)
-        .parquet(*([paths] if isinstance(paths, str) else paths))
-    )
 
 
 _READERS = {

@@ -69,13 +69,47 @@ def _schema_key(spark: SparkSession, path: str) -> tuple | None:
     return (jsession.sessionUUID(), path, status.getModificationTime(), status.getLen())
 
 
+def _infer_and_read(spark: SparkSession, path: str, name: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with its schema inferred under the
+    loader's timestamp confs.
+
+    Runtime-settable SQLConfs, set here rather than at session build:
+    callers (the external harness included) may hand us an arbitrary
+    unconfigured SparkSession. Naive parquet timestamps must arrive as
+    TIMESTAMP_NTZ (DuckDB-oracle semantics — no session-tz shift), and
+    a TIMESTAMP(NANOS) events file must not be rejected outright.
+    Parquet schema resolution happens EAGERLY at .parquet(), so the
+    confs are restored immediately after — the caller's session is
+    left exactly as we found it (their own reads keep their settings).
+    """
+    scoped = {"spark.sql.parquet.inferTimestampNTZ.enabled": "true"}
+    if name == "events":
+        scoped["spark.sql.legacy.parquet.nanosAsLong"] = "true"
+    saved: dict[str, str | None] = {}
+    for k, v in scoped.items():
+        try:
+            saved[k] = spark.conf.get(k)
+        except Exception:
+            saved[k] = None
+        spark.conf.set(k, v)
+    try:
+        return spark.read.parquet(path)
+    finally:
+        for k, old in saved.items():
+            if old is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, old)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """A fresh lazy relation over table ``name`` under ``sf_dir``.
 
     The parquet schema is inferred once per session and file version:
     the inferred ``StructType`` is memoized under the session, the path
     and the path's modification time and length, and a repeat load
-    reads with ``spark.read.schema(known)``, which starts no Spark job.
+    reads with ``spark.read.schema(known)``, which starts no Spark job
+    and leaves the session's confs untouched.
     A file rewritten in place gets a new modification time or length
     and so is inferred again; for a directory the key is the
     directory's own status. Only the schema is memoized, never the
@@ -90,38 +124,17 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         known = _SCHEMAS.get(key)
         if known is not None:
             _SCHEMAS.move_to_end(key)
-    # Runtime-settable SQLConfs, set here rather than at session build:
-    # callers (the external harness included) may hand us an arbitrary
-    # unconfigured SparkSession. Naive parquet timestamps must arrive as
-    # TIMESTAMP_NTZ (DuckDB-oracle semantics — no session-tz shift), and
-    # a TIMESTAMP(NANOS) events file must not be rejected outright.
-    # Parquet schema resolution happens EAGERLY at .parquet(), so the
-    # confs can be restored immediately after — the caller's session is
-    # left exactly as we found it (their own reads keep their settings).
-    _SCOPED = {"spark.sql.parquet.inferTimestampNTZ.enabled": "true"}
-    if name == "events":
-        _SCOPED["spark.sql.legacy.parquet.nanosAsLong"] = "true"
-    saved: dict[str, str | None] = {}
-    for k, v in _SCOPED.items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, v)
-    try:
-        reader = spark.read if known is None else spark.read.schema(known)
-        df = reader.parquet(path)
-    finally:
-        for k, old in saved.items():
-            if old is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, old)
-    if key is not None and known is None:
-        with _SCHEMAS_LOCK:
-            _SCHEMAS[key] = df.schema
-            if len(_SCHEMAS) > _SCHEMAS_MAX:
-                _SCHEMAS.popitem(last=False)
+    if known is not None:
+        # _infer_and_read's timestamp confs only steer inference: a read
+        # with the known schema yields the same types under any session.
+        df = spark.read.schema(known).parquet(path)
+    else:
+        df = _infer_and_read(spark, path, name)
+        if key is not None:
+            with _SCHEMAS_LOCK:
+                _SCHEMAS[key] = df.schema
+                if len(_SCHEMAS) > _SCHEMAS_MAX:
+                    _SCHEMAS.popitem(last=False)
     if name == "events":
         # Canonicalize ts to TIMESTAMP_NTZ no matter how this session's
         # reader surfaced it; downstream operators see ONE type.

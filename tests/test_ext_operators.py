@@ -221,23 +221,6 @@ def test_label_top_eigenvalue_invariants(spark):
     ).count()
 
 
-def test_merge_upsert_idempotent_reingest(spark):
-    """merge_upsert: same-key rows replaced, new keys inserted,
-    untouched rows kept; re-running the same upsert changes nothing."""
-    from data_ingestion_tool_spark.sinks.tables import merge_upsert
-
-    spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c")], "k int, v string"
-    ).write.format("parquet").mode("overwrite").saveAsTable("upsert_tgt")
-    src = spark.createDataFrame([(2, "B"), (4, "d")], "k int, v string")
-    merge_upsert(spark, src, "upsert_tgt", ["k"])
-    got = {r["k"]: r["v"] for r in spark.table("upsert_tgt").collect()}
-    assert got == {1: "a", 2: "B", 3: "c", 4: "d"}
-    merge_upsert(spark, src, "upsert_tgt", ["k"])  # idempotent
-    again = {r["k"]: r["v"] for r in spark.table("upsert_tgt").collect()}
-    assert again == got
-
-
 def test_near_dup_clusters_match_union_find(spark, exact_pairs):
     """Connected components agree with a driver-side union-find oracle
     over the same pair set."""

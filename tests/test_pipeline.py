@@ -259,30 +259,6 @@ def test_select_files_regex_anchored():
     assert [f.id for f in select_files(files, r"sales_.*\.csv")] == ["1"]
 
 
-def test_bucketed_join_plans_without_shuffle(spark):
-    """Two tables co-bucketed on the join key: the planned join has no
-    Exchange on either input (the write-time shuffle is amortized)."""
-    from data_ingestion_tool_spark.sinks.tables import write_bucketed
-    from data_ingestion_tool_spark.sources.tables import load_table
-
-    SF = "/root/testdata/sf0.001"
-    li = load_table(spark, SF, "lineitem").select("l_orderkey", "l_quantity")
-    o = load_table(spark, SF, "orders").select("o_orderkey", "o_orderpriority")
-    write_bucketed(li, "li_bkt", bucket_cols=["l_orderkey"], n_buckets=8,
-                   sort_cols=["l_orderkey"])
-    write_bucketed(o, "o_bkt", bucket_cols=["o_orderkey"], n_buckets=8,
-                   sort_cols=["o_orderkey"])
-    li_t, o_t = spark.table("li_bkt"), spark.table("o_bkt")
-    # merge hint: force sort-merge (small inputs would broadcast, which
-    # sidesteps bucketing); the point is zero shuffle on a SMJ
-    joined = li_t.hint("merge").join(o_t, li_t.l_orderkey == o_t.o_orderkey)
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "SortMergeJoin" in plan, plan
-    assert "Exchange" not in plan, plan
-    # and the join still answers correctly
-    assert joined.count() == spark.table("li_bkt").count()
-
-
 def test_partitioned_append_prunes(spark):
     """partition_by writes a layout the planner prunes on."""
     from data_ingestion_tool_spark.sinks.tables import append_table
@@ -322,42 +298,6 @@ def test_bad_batch_logged_not_fatal(spark, remote_dir, tmp_path):
     assert summary["valid_rows"] == 2
     assert summary["failed_batches"] == 1
     assert spark.table("mixed_batch_tbl").count() == 2
-
-
-def test_range_layout_files_cover_disjoint_ranges(spark):
-    """write_range_layout: parquet footers show disjoint min/max per
-    file on the range column — the property file-skipping relies on."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from data_ingestion_tool_spark.sinks.tables import write_range_layout
-    from data_ingestion_tool_spark.sources.tables import load_table
-
-    o = load_table(spark, "/root/testdata/sf0.001", "orders")
-    write_range_layout(o, "orders_ranged", range_col="o_orderkey", n_files=4)
-    tbl_dir = (
-        spark.sql("DESCRIBE TABLE EXTENDED orders_ranged")
-        .filter("col_name = 'Location'")
-        .collect()[0]["data_type"]
-    ).removeprefix("file:")
-    ranges = []
-    for f in glob.glob(f"{tbl_dir}/*.parquet"):
-        meta = pq.ParquetFile(f).metadata
-        cols = {
-            meta.row_group(0).column(i).path_in_schema: i
-            for i in range(meta.num_columns)
-        }
-        idx = cols["o_orderkey"]
-        lo = min(meta.row_group(g).column(idx).statistics.min
-                 for g in range(meta.num_row_groups))
-        hi = max(meta.row_group(g).column(idx).statistics.max
-                 for g in range(meta.num_row_groups))
-        ranges.append((lo, hi))
-    ranges.sort()
-    assert len(ranges) >= 2
-    for (_, hi_prev), (lo_next, _) in zip(ranges, ranges[1:]):
-        assert hi_prev <= lo_next  # disjoint (boundary may touch)
 
 
 def test_ingest_real_xlsx_validate_mode(spark, remote_dir, tmp_path):

@@ -821,7 +821,6 @@ def test_every_driver_materialization_site_is_bounded():
     - text (BPE apply): merge-table collect bounded by the merge count
     - excel export: limit-capped collect (the reference's unbounded
       toPandas at box_export.py:37 is the anti-pattern this replaces)
-    - layout DML: matched-FILE lists (footer-pruned), not row data
     - excel source: limit(1) schema probe
 
     A new collect()/toPandas() site fails here until its author
@@ -848,9 +847,6 @@ def test_every_driver_materialization_site_is_bounded():
         ("operators/similarity.py", "semdedup"),
         ("operators/text.py", "bpe_token_counts"),
         ("sinks/excel.py", "export_to_excel"),
-        ("sinks/layout.py", "delete_where"),
-        ("sinks/layout.py", "merge_upsert_where"),
-        ("sinks/layout.py", "update_where"),
         ("sources/excel.py", "read_excel"),
     }
     root = os.path.dirname(pkg.__file__)

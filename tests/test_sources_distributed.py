@@ -154,6 +154,53 @@ def test_nanos_file_loads_with_scoped_conf(spark, tmp_path):
         spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
 
 
+def test_memo_hit_matches_miss_with_timestamp_confs_off(
+    spark, tmp_path, monkeypatch
+):
+    """A memo hit reads with the known schema and sets no conf; with
+    both timestamp confs off in the caller's session it still returns
+    the miss's rows and TIMESTAMP_NTZ ``ts``, for the naive-micros
+    events table and for a TIMESTAMP(NANOS) file."""
+    from collections import OrderedDict
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.conf import RuntimeConfig
+    from pyspark.sql.types import TimestampNTZType
+
+    from data_ingestion_tool_spark.sources import tables
+
+    ts = pd.to_datetime(["2024-01-01 00:00:00.123456789"])
+    pq.write_table(
+        pa.table({"event_id": pa.array([1], type=pa.int64()),
+                  "ts": pa.array(ts, type=pa.timestamp("ns"))}),
+        str(tmp_path / "events.parquet"),
+        coerce_timestamps=None,
+    )
+    monkeypatch.setattr(tables, "_SCHEMAS", OrderedDict())
+    outer = _confs(spark)
+    try:
+        for k in _TS_CONFS:
+            spark.conf.set(k, "false")
+        for sf_dir in (SF_SMOKE, str(tmp_path)):
+            miss = load_table(spark, sf_dir, "events")
+            sets = []
+            with monkeypatch.context() as m:
+                m.setattr(RuntimeConfig, "set", lambda *a: sets.append(a))
+                hit = _memo_hit_load(spark, sf_dir, "events")
+            assert sets == []
+            assert isinstance(hit.schema["ts"].dataType, TimestampNTZType)
+            assert hit.schema == miss.schema
+            assert _rows_by_id(hit) == _rows_by_id(miss)
+            assert _confs(spark) == dict.fromkeys(_TS_CONFS, "false")
+    finally:
+        for k, v in outer.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def test_repeat_load_starts_no_job(spark):
     first = load_table(spark, SF_SMOKE, "orders")
     again = _memo_hit_load(spark, SF_SMOKE, "orders")
@@ -244,58 +291,6 @@ def test_orc_roundtrip(spark, tmp_path):
     assert sorted(r["n_nationkey"] for r in back.collect()) == sorted(
         r["n_nationkey"] for r in src.collect()
     )
-
-
-def test_text_source_reads_lines(spark, tmp_path):
-    from data_ingestion_tool_spark.sources.files import classify, read_text
-
-    p = tmp_path / "corpus.txt"
-    p.write_text("alpha beta\ngamma\n\ndelta\n")
-    # .txt stays OUT of the ingest dispatch (reference skips it);
-    # read_text is the standalone corpus entry point
-    assert classify(str(p)) is None
-    rows = [r["value"] for r in read_text(spark, str(p)).collect()]
-    assert rows == ["alpha beta", "gamma", "", "delta"]
-
-
-def test_read_jsonl_tolerant_quarantines_bad_lines(spark, tmp_path):
-    """PERMISSIVE parse: bad lines land in the quarantine side with
-    their raw text; valid side carries exactly the declared schema."""
-    from data_ingestion_tool_spark.sources.files import read_jsonl_tolerant
-
-    p = tmp_path / "mixed.jsonl"
-    p.write_text(
-        '{"id": 1, "name": "ok"}\n'
-        "this is not json\n"
-        '{"id": "noncastable", "name": "bad-type"}\n'
-        '{"id": 3, "name": "fine"}\n'
-    )
-    valid, corrupt = read_jsonl_tolerant(
-        spark, str(p), "id bigint, name string"
-    )
-    assert valid.columns == ["id", "name"]
-    assert sorted(r.id for r in valid.collect()) == [1, 3]
-    bad = sorted(r.record for r in corrupt.collect())
-    assert len(bad) == 2
-    assert "this is not json" in bad[0]
-    assert "noncastable" in bad[1]
-
-
-def test_read_parquet_evolved_merges_schemas(spark, tmp_path):
-    """mergeSchema surfaces late-added columns as nullable instead of
-    dropping them (default read picks one footer)."""
-    from data_ingestion_tool_spark.sources.files import read_parquet_evolved
-
-    old = str(tmp_path / "evo/gen=0")
-    new = str(tmp_path / "evo/gen=1")
-    spark.createDataFrame([(1, "a")], "id long, name string").write.parquet(old)
-    spark.createDataFrame(
-        [(2, "b", 0.5)], "id long, name string, score double"
-    ).write.parquet(new)
-    df = read_parquet_evolved(spark, [old, new])
-    assert set(df.columns) >= {"id", "name", "score"}
-    rows = {r.id: r.score for r in df.collect()}
-    assert rows == {1: None, 2: 0.5}
 
 
 def test_fan_out_redistributes_unsplittable_scans_only(spark, tmp_path):

@@ -6,10 +6,11 @@ sizing), at any scale factor:
 
 Runs every oracle-paired registry query against DuckDB on the same
 parquet and prints one line per query plus a final tally. Exits 1 on
-any mismatch. ``--skip-slow`` applies the same oracle-COST carve-out
-as tests/test_oracle_parity.py (the pair-CTE oracles take ~10+ min in
-DuckDB at sf0.1; their correctness is covered by the sf0.01 gate and
-one-off direct verification).
+any mismatch. ``--skip-slow`` applies the same oracle-COST rule as
+tests/test_oracle_parity.py: it leaves out every oracle that embeds
+``DEDUP_NGRAM_JACCARD_SQL`` (the all-pairs 3-gram Jaccard CTE takes
+~10+ min in DuckDB at sf0.1; its correctness is covered by the sf0.01
+gate and one-off direct verification).
 """
 
 from __future__ import annotations
@@ -23,11 +24,11 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 from pyspark.sql import SparkSession  # noqa: E402
 
 from data_ingestion_tool_spark.operators import registry  # noqa: E402
+from data_ingestion_tool_spark.operators.dedup import (  # noqa: E402
+    DEDUP_NGRAM_JACCARD_SQL,
+)
 from tests.conftest import make_duck  # noqa: E402
 from tests.parity import compare  # noqa: E402
-
-SLOW = {"near_dup_graph_degree", "dedup_near_clusters"}
-
 
 def main() -> int:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
@@ -52,10 +53,15 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     reg = registry()
     names = [n for n, s in reg.items() if s.oracle is not None]
+    slow = {
+        n
+        for n in names
+        if skip_slow and DEDUP_NGRAM_JACCARD_SQL in reg[n].oracle
+    }
     failures = []
     t0 = time.time()
     for name in sorted(names):
-        if skip_slow and name in SLOW:
+        if name in slow:
             print(f"SKIP  {name} (oracle cost; see test_oracle_parity)")
             continue
         con = make_duck(sf_dir)
@@ -73,7 +79,7 @@ def main() -> int:
         print(f"{status:5s} {name} ({time.time() - t:.1f}s)")
         if problems:
             failures.append((name, problems))
-    n_run = len(names) - (len(SLOW & set(names)) if skip_slow else 0)
+    n_run = len(names) - len(slow)
     print(
         f"\n{n_run - len(failures)}/{n_run} green at {sf_dir} "
         f"in {time.time() - t0:.0f}s "

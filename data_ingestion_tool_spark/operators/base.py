@@ -10,7 +10,9 @@ registry, and ``bench.py`` picks its headline set from it.
 It also holds the one materialization mechanism every builder uses:
 :func:`materialize` (an eager ``localCheckpoint``), :func:`cached` (a
 persist released on every exit path) and :func:`plan_only` (a scope in
-which :func:`materialize` keeps the lazy lineage, for plan tools).
+which :func:`materialize` keeps the lazy lineage, for plan tools),
+and the one band projection of the banded-candidate operators,
+:func:`stack_bands`.
 """
 
 from __future__ import annotations
@@ -21,7 +23,7 @@ from contextvars import ContextVar
 from dataclasses import dataclass, field
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 Builder = Callable[[SparkSession, str], DataFrame]
 
@@ -87,3 +89,15 @@ def cached(
         yield df
     finally:
         df.unpersist()
+
+
+def stack_bands(df: DataFrame, bands: list[Column], *keep: str) -> DataFrame:
+    """Long form of a banded signature: one row per (row, band) with
+    columns ``(*keep, band_idx, band_val)``, where ``band_val`` is
+    ``bands[band_idx]`` evaluated on the row. Two rows collide in a
+    band when their ``(band_idx, band_val)`` keys are equal."""
+    wide = df.select(*keep, *[c.alias(f"band{b}") for b, c in enumerate(bands)])
+    pairs = ", ".join(f"{b}, band{b}" for b in range(len(bands)))
+    return wide.selectExpr(
+        *keep, f"stack({len(bands)}, {pairs}) AS (band_idx, band_val)"
+    )

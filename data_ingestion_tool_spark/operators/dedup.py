@@ -20,28 +20,25 @@ Scale design:
   (numpy), then pairs via 8-bit band blocking (8 bands guarantee a
   collision for Hamming distance ≤ 7) and verifies with
   ``bit_count(xor)`` JVM-side.
-- **Band buckets are capped** (MinHash + SimHash, round-5): buckets up
-  to ``_BUCKET_CAP`` members keep the complete all-pairs join; larger
-  buckets — saturated band spaces or duplicate-heavy families, whose
-  true pair set is inherently quadratic — emit ≤ ``_BAND_WINDOW``
-  lead-window chains per member, preserving family connectivity for
-  the clustering consumers at bounded candidate cost.
+- **Band buckets are capped** by one kernel, :func:`capped_pairs`,
+  shared by MinHash, SimHash and the PassJoin tiny-title bucket.
 - **Edit-distance pairs** use PassJoin segment blocking (content-based
   keys — bucket sizes track shared-prefix families, not corpus size),
   lossless below the hot-segment / tiny-bucket caps; beyond them the
-  same lead-window demotion as the band buckets applies.
+  same :func:`lead_chain` demotion as the band buckets applies.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_ingestion_tool_spark.operators.base import (
     QuerySpec,
     cached,
     materialize,
+    stack_bands,
 )
 from data_ingestion_tool_spark.sources.tables import fan_out, load_table
 
@@ -69,6 +66,94 @@ _SEG_BUCKET_CAP = 256
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "documents")
+
+
+# ---------------------------------------------------------------------------
+# Capped-bucket pairing (MinHash, SimHash, PassJoin)
+# ---------------------------------------------------------------------------
+
+
+def _bucket(key: tuple[str, ...]) -> list[Column]:
+    """Partition columns of a bucket key; an empty key is one bucket."""
+    return [F.col(c) for c in key] or [F.lit(0)]
+
+
+def lead_chain(
+    members: DataFrame,
+    key: tuple[str, ...],
+    order_by: tuple,
+    payload: tuple[str, ...] = (),
+) -> DataFrame:
+    """Pair each member of a bucket with its next ``_BAND_WINDOW``
+    neighbours in ``order_by`` order: a bucket of m members yields at
+    most m·W pairs, and they chain the whole bucket into one connected
+    component. ``members`` holds ``doc_id``, the ``key`` columns and the
+    ``payload`` columns; the result is ``doc_a, doc_b, <p>_a, <p>_b``
+    with ``doc_a`` the earlier member in the order."""
+    w = Window.partitionBy(*_bucket(key)).orderBy(*order_by)
+    me = F.struct(F.col("doc_id").alias("id"), *payload)
+    succs = F.filter(
+        F.array(*[F.lead(me, j).over(w) for j in range(1, _BAND_WINDOW + 1)]),
+        lambda x: x.isNotNull(),
+    )
+    return (
+        members.select(me.alias("x"), succs.alias("succs"))
+        .select("x", F.explode("succs").alias("y"))
+        .select(
+            F.col("x.id").alias("doc_a"),
+            F.col("y.id").alias("doc_b"),
+            *[F.col(f"x.{p}").alias(f"{p}_a") for p in payload],
+            *[F.col(f"y.{p}").alias(f"{p}_b") for p in payload],
+        )
+    )
+
+
+def bucket_pairs(
+    members: DataFrame,
+    key: tuple[str, ...],
+    payload: tuple[str, ...] = (),
+) -> DataFrame:
+    """The complete self-join of members sharing a bucket ``key``: every
+    pair once, ``doc_a < doc_b``, columns as :func:`lead_chain`. An
+    empty ``key`` makes all members one bucket, joined without a key."""
+
+    def side(s: str) -> DataFrame:
+        return members.select(
+            F.col("doc_id").alias(f"doc_{s}"),
+            *[F.col(p).alias(f"{p}_{s}") for p in payload],
+            *key,
+        )
+
+    return (
+        side("a")
+        .join(side("b"), list(key) or None)
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .select(
+            "doc_a",
+            "doc_b",
+            *[f"{p}_a" for p in payload],
+            *[f"{p}_b" for p in payload],
+        )
+    )
+
+
+def capped_pairs(
+    members: DataFrame,
+    key: tuple[str, ...],
+    order_by: tuple,
+    payload: tuple[str, ...] = (),
+) -> DataFrame:
+    """Candidate pairs of members sharing a bucket ``key``, bounded per
+    bucket: buckets of up to ``_BUCKET_CAP`` members keep
+    :func:`bucket_pairs`; larger buckets, whose complete pair set is
+    quadratic (saturated band spaces, duplicate-heavy families), fall
+    back to :func:`lead_chain`. Columns as :func:`lead_chain`."""
+    sized = members.withColumn(
+        "m", F.count(F.lit(1)).over(Window.partitionBy(*_bucket(key)))
+    )
+    small = bucket_pairs(sized.filter(F.col("m") <= _BUCKET_CAP), key, payload)
+    big = sized.filter(F.col("m") > _BUCKET_CAP)
+    return small.unionByName(lead_chain(big, key, order_by, payload))
 
 
 # ---------------------------------------------------------------------------
@@ -105,8 +190,6 @@ def dedup_first_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     per (user_id, event_type) — the `dropDuplicates` semantics made
     reproducible via a total order."""
     e = load_table(spark, sf_dir, "events")
-    from pyspark.sql import Window
-
     w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
     return (
         e.select(
@@ -240,8 +323,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = fan_out(_docs(spark, sf_dir).select("doc_id", "text"))
     sets = shingle_sets(docs)
     posting = hashed_postings_from_docs(docs)
-    from pyspark.sql import Window
-
     # document frequency per shingle; broadcast back onto postings
     df_counts = posting.groupBy("shingle").agg(
         F.count(F.lit(1)).alias("df")
@@ -352,17 +433,11 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows-only check + recall property-tested against the exact
     operator (tests).
 
-    HOT-BUCKET BOUND (round-4 verdict): candidates come from a
-    ``lead``-window over each (band_idx, band_hash) bucket — every
-    member pairs with its next ``_BAND_WINDOW`` neighbors in doc_id
-    order — so a bucket of m docs yields ≤ m·W candidates, never the
-    m² of an uncapped self-join (1000 exact copies of one doc → ~16k
-    candidates, not ~10⁶ per band). Buckets of ≤ W+1 members (every
-    bucket on a non-pathological corpus) get exactly the all-pairs
-    candidate set; in larger buckets the windowed pairs form a
-    CONNECTED chain over the duplicate family, so the transitive
-    closure consumed by ``dedup_near_clusters`` still recovers the
-    full cluster even though the pair list itself is subquadratic.
+    HOT-BUCKET BOUND: candidates come from
+    :func:`capped_pairs` over the band buckets, so 1000 exact copies
+    of one doc yield ~16k candidates, not ~10⁶ per band, and the
+    chained pairs still CONNECT the duplicate family for the
+    transitive closure of ``dedup_near_clusters``.
     """
     # fan_out: the posting explode + K seeded-hash min-aggs are heavy
     # per-row work below the first exchange; one-core on the
@@ -377,71 +452,27 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def minhash_lsh_candidates(docs: DataFrame) -> DataFrame:
     """The banded candidate generator behind :func:`dedup_minhash_lsh`:
     ``(doc_id, text)`` in → distinct ``(doc_a, doc_b)`` candidate pairs
-    out. Two-path split (shared with ``dedup_simhash``): buckets of
-    ≤ ``_BUCKET_CAP`` members keep the COMPLETE all-pairs join; larger
-    buckets emit ≤ ``_BAND_WINDOW`` candidates per member (see the
-    caller's hot-bucket note). Separated so the blow-up bound is
-    testable on a planted duplicate-heavy corpus."""
+    out, from :func:`capped_pairs` over the (band_idx, band_val)
+    buckets with hot buckets chained in doc_id order. Separated so the
+    blow-up bound is testable on a planted duplicate-heavy corpus."""
     sigs = minhash_signatures_from_docs(docs)
     rows_per_band = MINHASH_K // MINHASH_BANDS
     band_cols = [
-        F.hash(
-            *[F.col(f"h{b * rows_per_band + j}") for j in range(rows_per_band)]
-        ).alias(f"band{b}")
+        F.hash(*[F.col(f"h{b * rows_per_band + j}") for j in range(rows_per_band)])
         for b in range(MINHASH_BANDS)
     ]
-    banded = sigs.select("doc_id", *band_cols)
-    stack_expr = ", ".join(
-        f"{b}, band{b}" for b in range(MINHASH_BANDS)
-    )
     # cached for the duration of THIS builder only (released below
     # once the candidate union is materialized): the banded long form
     # feeds THREE consumers — the bucket-size window and both bucket
     # paths' self-join sides — and its lineage (the r12
     # projection-only signature stage) would otherwise recompute the
     # K seeded gram-hash mins per consumer
-    long_form = banded.selectExpr(
-        "doc_id",
-        f"stack({MINHASH_BANDS}, {stack_expr}) AS (band_idx, band_hash)",
-    )
-    from pyspark.sql import Window
-
-    w_size = Window.partitionBy("band_idx", "band_hash")
-    sized = long_form.withColumn("m", F.count(F.lit(1)).over(w_size))
-    small = sized.filter(F.col("m") <= _BUCKET_CAP)
-    big = sized.filter(F.col("m") > _BUCKET_CAP)
-
-    small_pairs = (
-        small.select(F.col("doc_id").alias("doc_a"), "band_idx", "band_hash")
-        .join(
-            small.select(
-                F.col("doc_id").alias("doc_b"), "band_idx", "band_hash"
-            ),
-            ["band_idx", "band_hash"],
-        )
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-    )
-
-    w_bucket = Window.partitionBy("band_idx", "band_hash").orderBy("doc_id")
-    neigh = big.select(
-        F.col("doc_id").alias("doc_a"),
-        F.filter(
-            F.array(
-                *[
-                    F.lead("doc_id", j).over(w_bucket)
-                    for j in range(1, _BAND_WINDOW + 1)
-                ]
-            ),
-            lambda x: x.isNotNull(),
-        ).alias("succs"),
-    )
-    big_pairs = neigh.select("doc_a", F.explode("succs").alias("doc_b"))
+    long_form = stack_bands(sigs, band_cols, "doc_id")
+    out = capped_pairs(long_form, ("band_idx", "band_val"), ("doc_id",)).distinct()
     # materialize the bounded candidate set, then release the
     # cached banded-signature table (same lifetime discipline as
     # dedup_simhash / semantic_dedup: never leave a session-pinned
     # cache behind); the checkpointed pair list is 16 bytes/row
-    out = small_pairs.unionByName(big_pairs).distinct()
     with cached(long_form):
         return materialize(out)
 
@@ -464,9 +495,9 @@ def dedup_minhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     This is the correctness anchor, not the production path:
     ``dedup_minhash_lsh`` keeps the seeded-xxhash64 family (one
-    string hash per shingle instead of K=16 md5 passes) and the
-    two-path hot-bucket cap; the anchor keeps the complete band
-    self-join precisely because the oracle must replay it verbatim.
+    string hash per shingle instead of K=16 md5 passes) and
+    :func:`capped_pairs`; the anchor keeps the complete
+    :func:`bucket_pairs` join because the oracle must replay it verbatim.
     Same scale shape otherwise — posting explode, K map-side min
     aggregates in ONE doc-keyed shuffle, band equi-join, broadcast
     verify."""
@@ -480,30 +511,11 @@ def dedup_minhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigs = posting.groupBy("doc_id").agg(*aggs)
     rows = _MD5_K // _MD5_BANDS
     band_cols = [
-        F.md5(
-            F.concat_ws(
-                "|", *[F.col(f"h{b * rows + j}") for j in range(rows)]
-            )
-        ).alias(f"band{b}")
+        F.md5(F.concat_ws("|", *[F.col(f"h{b * rows + j}") for j in range(rows)]))
         for b in range(_MD5_BANDS)
     ]
-    banded = sigs.select("doc_id", *band_cols)
-    stack_expr = ", ".join(f"{b}, band{b}" for b in range(_MD5_BANDS))
-    long_form = banded.selectExpr(
-        "doc_id", f"stack({_MD5_BANDS}, {stack_expr}) AS (band_idx, band_val)"
-    )
-    candidates = (
-        long_form.select(F.col("doc_id").alias("doc_a"), "band_idx", "band_val")
-        .join(
-            long_form.select(
-                F.col("doc_id").alias("doc_b"), "band_idx", "band_val"
-            ),
-            ["band_idx", "band_val"],
-        )
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+    long_form = stack_bands(sigs, band_cols, "doc_id")
+    candidates = bucket_pairs(long_form, ("band_idx", "band_val")).distinct()
     return _jaccard_pairs_from_candidates(candidates, sets)
 
 
@@ -720,34 +732,10 @@ def simhash_column() -> F.Column:
     return _simhash(F.col("text"))
 
 
-def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup pairs with SimHash Hamming distance ≤ 6: 8-bit band
-    blocking (8 bands ⇒ guaranteed collision for distance ≤ 7), then
-    JVM-side ``bit_count(xor)`` verification. The production path is
-    rows-only at the driver because the two-path hot-bucket cap below
-    is deliberately lossy on saturated corpora; the oracle-paired
-    anchor for the SAME signature kernel + banding + Hamming verify is
-    :func:`dedup_simhash_md5` (complete band join, DuckDB-replayable),
-    and the oracle-paired exact twin for near-dup semantics is
-    ``dedup_ngram_jaccard``.
-
-    BUCKET-SATURATION BOUND (round-5 scale audit): the 8-bit band
-    space is FIXED at 256 values, so average bucket size grows
-    linearly with the corpus and an uncapped band-bucket self-join
-    grows QUADRATICALLY — the 10× audit measured it superlinear
-    before this rewrite. Two-path split (the semdedup cap
-    discipline): buckets of ≤ ``_BUCKET_CAP`` members keep
-    the COMPLETE all-pairs self-join (identical output to the
-    uncapped operator — every bucket on a non-saturated corpus);
-    larger buckets demote to a ``lead``-window over the bucket
-    ORDERED BY THE FULL 64-BIT SIGNATURE (Charikar-style sorted
-    probing: signatures within small Hamming distance sort adjacent
-    once a band's bits agree), each member pairing with its next
-    ``_BAND_WINDOW`` neighbors — ≤ m·W candidates, a connected chain
-    over the (inherently quadratic-output) near-dup family that
-    downstream clustering recovers in full. Recall vs the exact
-    Jaccard operator is pytest-bounded.
-    """
+def _simhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(doc_id, sim, band_idx, band_val)``: each document's 64-bit
+    SimHash and its eight 8-bit bands, shared by both SimHash
+    operators."""
     # fan_out before the Arrow signature kernel: the pandas_udf is the
     # plan's heavy per-row stage and the unsplittable single-row-group
     # bench input otherwise pins it to one core (alternated min-of-3
@@ -757,71 +745,49 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", simhash_column().alias("sim")
     )
     bands = [
-        F.shiftrightunsigned(F.col("sim"), 8 * b)
-        .bitwiseAND(F.lit(255))
-        .alias(f"band{b}")
+        F.shiftrightunsigned(F.col("sim"), 8 * b).bitwiseAND(F.lit(255))
         for b in range(8)
     ]
-    banded = d.select("doc_id", "sim", *bands)
-    stack_expr = ", ".join(f"{b}, band{b}" for b in range(8))
+    return stack_bands(d, bands, "doc_id", "sim")
+
+
+def _hamming() -> Column:
+    return F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))).alias("hamming")
+
+
+def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-dup pairs with SimHash Hamming distance ≤ 6: 8-bit band
+    blocking (8 bands ⇒ guaranteed collision for distance ≤ 7), then
+    JVM-side ``bit_count(xor)`` verification. The production path has
+    no oracle query because the hot-bucket cap below is
+    deliberately lossy on saturated corpora; the oracle-paired
+    anchor for the SAME signature kernel + banding + Hamming verify is
+    :func:`dedup_simhash_md5` (complete band join, DuckDB-replayable),
+    and the oracle-paired exact twin for near-dup semantics is
+    ``dedup_ngram_jaccard``.
+
+    BUCKET-SATURATION BOUND (round-5 scale audit): the 8-bit band
+    space is FIXED at 256 values, so average bucket size grows
+    linearly with the corpus and an uncapped band-bucket self-join
+    grows QUADRATICALLY — the 10× audit measured it superlinear
+    before this rewrite. Candidates come from :func:`capped_pairs`,
+    with hot buckets chained in the order of the FULL 64-BIT
+    SIGNATURE (Charikar-style sorted probing: signatures within small
+    Hamming distance sort adjacent once a band's bits agree). Recall
+    vs the exact Jaccard operator is pytest-bounded.
+    """
     # cached for the duration of THIS builder only (released below
     # once the candidate union is materialized): the signature stage
     # is a pandas_udf pass and both bucket paths (and the size window)
     # read it
-    long_form = banded.selectExpr(
-        "doc_id", "sim", f"stack(8, {stack_expr}) AS (band_idx, band_val)"
-    )
-    from pyspark.sql import Window
-
-    w_size = Window.partitionBy("band_idx", "band_val")
-    sized = long_form.withColumn("m", F.count(F.lit(1)).over(w_size))
-    small = sized.filter(F.col("m") <= _BUCKET_CAP)
-    big = sized.filter(F.col("m") > _BUCKET_CAP)
-
-    sa = small.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("sim").alias("sim_a"),
-        "band_idx",
-        "band_val",
-    )
-    sb = small.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("sim").alias("sim_b"),
-        "band_idx",
-        "band_val",
-    )
-    small_pairs = (
-        sa.join(sb, ["band_idx", "band_val"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.bit_count(
-                F.col("sim_a").bitwiseXOR(F.col("sim_b"))
-            ).alias("hamming"),
-        )
-    )
-
+    long_form = _simhash_bands(spark, sf_dir)
     # hot-bucket chain order: UNSIGNED signature order (sim XOR
     # Long.MIN_VALUE flips the sign bit), so near signatures
     # straddling 0x7FF…/0x800… sort adjacent — the signed order put
     # them maximally far apart, weakening the sorted-probing claim
     sim_unsigned = F.col("sim").bitwiseXOR(F.lit(-(2**63)))
-    w_bucket = Window.partitionBy("band_idx", "band_val").orderBy(
-        sim_unsigned, "doc_id"
-    )
-    me = F.struct(F.col("doc_id").alias("id"), F.col("sim").alias("s"))
-    succs = F.filter(
-        F.array(
-            *[F.lead(me, j).over(w_bucket) for j in range(1, _BAND_WINDOW + 1)]
-        ),
-        lambda x: x.isNotNull(),
-    )
-    neigh = big.select(me.alias("x"), succs.alias("succs"))
-    big_pairs = neigh.select("x", F.explode("succs").alias("y")).select(
-        F.least("x.id", "y.id").alias("doc_a"),
-        F.greatest("x.id", "y.id").alias("doc_b"),
-        F.bit_count(F.col("x.s").bitwiseXOR(F.col("y.s"))).alias("hamming"),
+    pairs = capped_pairs(
+        long_form, ("band_idx", "band_val"), (sim_unsigned, "doc_id"), ("sim",)
     )
     # materialize the bounded candidate union, then release the wide
     # cached signature table — without this the per-doc signature
@@ -829,7 +795,11 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # applied here); the checkpointed pair list is narrow (2 longs +
     # an int per row) and its blocks are GC-cleaned with the result
     out = (
-        small_pairs.unionByName(big_pairs)
+        pairs.select(
+            F.least("doc_a", "doc_b").alias("doc_a"),
+            F.greatest("doc_a", "doc_b").alias("doc_b"),
+            _hamming(),
+        )
         .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .distinct()
     )
@@ -855,50 +825,14 @@ def dedup_simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     only the cap policy — pytest-bounded — outside the oracle.
 
     Correctness anchor, not the production path: ``dedup_simhash``
-    keeps the two-path hot-bucket bound for saturated corpora; the
-    anchor keeps the complete join because the oracle must replay it.
+    keeps :func:`capped_pairs` for saturated corpora; the anchor keeps
+    the complete join because the oracle must replay it.
     """
-    # fan_out before the Arrow signature kernel: the pandas_udf is the
-    # plan's heavy per-row stage and the unsplittable single-row-group
-    # bench input otherwise pins it to one core (alternated min-of-3
-    # A/B: 0.27–0.39× across two windows, identical pairs; no-op on
-    # splittable at-scale inputs)
-    d = fan_out(_docs(spark, sf_dir).select("doc_id", "text")).select(
-        "doc_id", simhash_column().alias("sim")
-    )
-    bands = [
-        F.shiftrightunsigned(F.col("sim"), 8 * b)
-        .bitwiseAND(F.lit(255))
-        .alias(f"band{b}")
-        for b in range(8)
-    ]
-    banded = d.select("doc_id", "sim", *bands)
-    stack_expr = ", ".join(f"{b}, band{b}" for b in range(8))
-    long_form = banded.selectExpr(
-        "doc_id", "sim", f"stack(8, {stack_expr}) AS (band_idx, band_val)"
-    )
-    a = long_form.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("sim").alias("sim_a"),
-        "band_idx",
-        "band_val",
-    )
-    b = long_form.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("sim").alias("sim_b"),
-        "band_idx",
-        "band_val",
+    pairs = bucket_pairs(
+        _simhash_bands(spark, sf_dir), ("band_idx", "band_val"), ("sim",)
     )
     return (
-        a.join(b, ["band_idx", "band_val"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))).alias(
-                "hamming"
-            ),
-        )
+        pairs.select("doc_a", "doc_b", _hamming())
         .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .distinct()
     )
@@ -999,21 +933,17 @@ def fuzzy_title_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Hot segment keys (> ``_SEG_BUCKET_CAP`` index members — the
     boilerplate-prefix class: titles sharing a common first word at
-    corpus scale) demote from the complete equi-join to a sorted
-    lead-window chain over the key's members, the LSH hot-bucket
-    discipline applied to PassJoin: per-key work m·W instead of m²,
-    verified families stay connected, output oracle-exact wherever no
-    key exceeds the cap (all tested SFs; sf0.1 max is 192).
+    corpus scale) demote from the complete equi-join to
+    :func:`lead_chain` over the key's members: per-key work m·W
+    instead of m², verified families stay connected, output
+    oracle-exact wherever no key exceeds the cap (all tested SFs;
+    sf0.1 max is 192).
 
     Titles shorter than d+1 chars can't form d+1 non-empty segments;
     any two such titles are within distance d by construction
-    (lev ≤ max(len)), so they pair through one constant-key bucket.
-    That bucket's complete output is inherently quadratic in its
-    member count, so it gets the standard two-path bound: complete
-    pairs up to ``_BUCKET_CAP`` members (oracle-exact on clean
-    corpora), a lead-window chain beyond it (dirty web corpora are
-    full of empty/whitespace docs — the chain keeps the family
-    connected for clustering without the m² plan).
+    (lev ≤ max(len)), so they pair through one keyless bucket of
+    :func:`capped_pairs` (dirty web corpora are full of
+    empty/whitespace docs, so the bucket can be hot).
     """
     k = _FUZZY_MAX_DIST + 1
     D = _FUZZY_MAX_DIST
@@ -1055,7 +985,7 @@ def fuzzy_title_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     index = d.select(
         F.col("doc_id").alias("doc_b"),
-        F.col("title").alias("tb"),
+        F.col("title").alias("title_b"),
         F.explode(
             F.filter(F.array(*idx_entries), lambda x: x.isNotNull())
         ).alias("key"),
@@ -1101,7 +1031,7 @@ def fuzzy_title_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.join(F.broadcast(lens), reach & halved)
         .select(
             F.col("doc_id").alias("doc_a"),
-            F.col("title").alias("ta"),
+            F.col("title").alias("title_a"),
             F.explode(
                 F.array_distinct(
                     F.filter(F.array(*probe_entries), lambda x: x.isNotNull())
@@ -1126,8 +1056,6 @@ def fuzzy_title_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # from a narrow groupBy-count joined back on (measured ~1 s
     # cheaper at sf0.1 than a per-key count window, which sorts the
     # full index by key).
-    from pyspark.sql import Window
-
     sizes = index.groupBy("key").agg(F.count(F.lit(1)).alias("m"))
     idx_sized = index.join(sizes, "key")
 
@@ -1142,7 +1070,7 @@ def fuzzy_title_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "key",
         )
         .filter(F.col("doc_a") != F.col("doc_b"))
-        .select("doc_a", "doc_b", "ta", "tb")
+        .select("doc_a", "doc_b", "title_a", "title_b")
     )
 
     # hot keys: chain the key's member set (index members ∪ probe
@@ -1152,100 +1080,35 @@ def fuzzy_title_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     hot_idx = idx_sized.filter(F.col("m") > _SEG_BUCKET_CAP)
     hot_members = (
         hot_idx.select(
-            "key", F.col("doc_b").alias("doc_id"), F.col("tb").alias("title")
+            "key", F.col("doc_b").alias("doc_id"), F.col("title_b").alias("title")
         )
         .unionByName(
             probe.join(hot_idx.select("key").distinct(), "key").select(
                 "key",
                 F.col("doc_a").alias("doc_id"),
-                F.col("ta").alias("title"),
+                F.col("title_a").alias("title"),
             )
         )
         .distinct()
     )
-    w_hot = Window.partitionBy("key").orderBy("title", "doc_id")
-    me_hot = F.struct(F.col("doc_id").alias("id"), F.col("title").alias("t"))
-    hot_pairs = (
-        hot_members.select(
-            me_hot.alias("x"),
-            F.filter(
-                F.array(
-                    *[
-                        F.lead(me_hot, j).over(w_hot)
-                        for j in range(1, _BAND_WINDOW + 1)
-                    ]
-                ),
-                lambda x: x.isNotNull(),
-            ).alias("succs"),
-        )
-        .select("x", F.explode("succs").alias("y"))
-        .select(
-            F.col("x.id").alias("doc_a"),
-            F.col("y.id").alias("doc_b"),
-            F.col("x.t").alias("ta"),
-            F.col("y.t").alias("tb"),
-        )
-    )
-    seg_pairs = seg_pairs.unionByName(hot_pairs)
+    hot_pairs = lead_chain(hot_members, ("key",), ("title", "doc_id"), ("title",))
 
     # ---- tiny titles (len < k): all within distance d of each other,
-    # so they form ONE bucket whose complete pair set is inherently
-    # quadratic. Two-path split (the hot-LSH-bucket discipline): if
-    # the bucket holds ≤ _BUCKET_CAP docs — every clean corpus; dirty
-    # web corpora are full of empty/whitespace docs — emit the
-    # complete, oracle-exact pair set; above the cap demote to a
-    # lead-window chain (all members are mutually within distance d,
-    # so a chain keeps the family connected for clustering while the
-    # plan stays ≤ m·W instead of m²).
-    from pyspark.sql import Window
-
-    w_tiny = Window.partitionBy(F.lit(0))
-    tiny = (
-        d.filter(F.col("len") < k)
-        .select("doc_id", "title")
-        .withColumn("m", F.count(F.lit(1)).over(w_tiny))
+    # so they form ONE keyless bucket whose complete pair set is
+    # inherently quadratic — the capped-bucket kernel's case exactly
+    # (all members are mutually within distance d, so a chain above
+    # the cap keeps the family connected for clustering)
+    tiny_pairs = capped_pairs(
+        d.filter(F.col("len") < k).select("doc_id", "title"),
+        (),
+        ("doc_id",),
+        ("title",),
     )
-    t_small = tiny.filter(F.col("m") <= _BUCKET_CAP)
-    tiny_small_pairs = (
-        t_small.select(
-            F.col("doc_id").alias("doc_a"), F.col("title").alias("ta")
-        )
-        .join(
-            t_small.select(
-                F.col("doc_id").alias("doc_b"), F.col("title").alias("tb")
-            )
-        )
-        .filter(F.col("doc_a") < F.col("doc_b"))
-    )
-    w_tiny_chain = Window.partitionBy(F.lit(0)).orderBy("doc_id")
-    me = F.struct(F.col("doc_id").alias("id"), F.col("title").alias("t"))
-    tiny_big_pairs = (
-        tiny.filter(F.col("m") > _BUCKET_CAP)
-        .select(
-            me.alias("x"),
-            F.filter(
-                F.array(
-                    *[
-                        F.lead(me, j).over(w_tiny_chain)
-                        for j in range(1, _BAND_WINDOW + 1)
-                    ]
-                ),
-                lambda x: x.isNotNull(),
-            ).alias("succs"),
-        )
-        .select("x", F.explode("succs").alias("y"))
-        .select(
-            F.col("x.id").alias("doc_a"),
-            F.col("y.id").alias("doc_b"),
-            F.col("x.t").alias("ta"),
-            F.col("y.t").alias("tb"),
-        )
-    )
-    tiny_pairs = tiny_small_pairs.unionByName(tiny_big_pairs)
 
     return (
-        seg_pairs.unionByName(tiny_pairs)
-        .withColumn("edit_dist", F.levenshtein("ta", "tb"))
+        seg_pairs.unionByName(hot_pairs)
+        .unionByName(tiny_pairs)
+        .withColumn("edit_dist", F.levenshtein("title_a", "title_b"))
         .filter(F.col("edit_dist") <= _FUZZY_MAX_DIST)
         .select(
             F.least("doc_a", "doc_b").alias("doc_a"),
@@ -1357,8 +1220,6 @@ def shared_span_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     suffix-array formulation replaces the windowing at byte
     granularity; the distributed shape (posting lists → capped
     collision pairs) is identical."""
-    from pyspark.sql import Window
-
     # fan_out: the per-row window-hash build (md5 per token window)
     # is the plan's heavy stage and sits below the first exchange
     # (alternated A/B: 0.63×/0.87× across two windows, identical
@@ -1456,8 +1317,6 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     one hash-agg over the expanded pairs; sizes broadcast back. The
     oracle replays string n-grams (hash collisions ~|shingles|²/2⁶⁴ —
     negligible)."""
-    from pyspark.sql import Window
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     kept = hashed_postings_from_docs(docs).withColumn(
         "df", F.count(F.lit(1)).over(Window.partitionBy("shingle"))

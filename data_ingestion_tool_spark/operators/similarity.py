@@ -35,6 +35,7 @@ from data_ingestion_tool_spark.operators.base import (
     QuerySpec,
     cached,
     materialize,
+    stack_bands,
 )
 from data_ingestion_tool_spark.sources.tables import fan_out, load_table
 
@@ -226,7 +227,7 @@ def _band_cols(vec_col: Column) -> list[Column]:
         packed = F.lit(0)
         for bit in band_bits:
             packed = packed * 2 + bit
-        cols.append(packed.alias(f"band{b}"))
+        cols.append(packed)
     return cols
 
 
@@ -239,11 +240,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     emb = _emb(spark, sf_dir)
     vecs = emb.select("vec_id", _as_double("embedding").alias("v"))
-    banded = vecs.select("vec_id", "v", *_band_cols(F.col("v")))
-    stack_expr = ", ".join(f"{b}, band{b}" for b in range(_LSH_BANDS))
-    long_form = banded.selectExpr(
-        "vec_id", "v", f"stack({_LSH_BANDS}, {stack_expr}) AS (band_idx, band_val)"
-    )
+    long_form = stack_bands(vecs, _band_cols(F.col("v")), "vec_id", "v")
     queries = long_form.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),

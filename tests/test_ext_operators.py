@@ -25,6 +25,24 @@ def _pairs(df):
     return {(r["doc_a"], r["doc_b"]) for r in df.collect()}
 
 
+def _n_components(ids, pairs) -> int:
+    """Number of connected components of ``ids`` under the
+    ``(doc_a, doc_b)`` rows of ``pairs`` (union-find)."""
+    parent = {i: i for i in ids}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for r in pairs:
+        a, b = find(r["doc_a"]), find(r["doc_b"])
+        if a != b:
+            parent[a] = b
+    return len({find(i) for i in parent})
+
+
 @pytest.fixture(scope="module")
 def exact_pairs(spark):
     return _pairs(dedup_ngram_jaccard(spark, SF_CORRECT))
@@ -99,20 +117,8 @@ def test_minhash_hot_bucket_candidates_are_bounded_and_connected(spark):
     )
     # connectivity: union-find over the candidate pairs must leave ONE
     # component spanning all m docs
-    parent = list(range(m))
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for r in cand:
-        a, b = find(r["doc_a"]), find(r["doc_b"])
-        if a != b:
-            parent[a] = b
-    roots = {find(i) for i in range(m)}
-    assert len(roots) == 1, f"duplicate family split into {len(roots)} components"
+    n = _n_components(range(m), cand)
+    assert n == 1, f"duplicate family split into {n} components"
 
 
 def test_simhash_hot_bucket_pairs_are_bounded_and_connected(spark):
@@ -139,19 +145,73 @@ def test_simhash_hot_bucket_pairs_are_bounded_and_connected(spark):
         docs.write.mode("overwrite").parquet(f"{tmp}/documents.parquet")
         pairs = dedup_simhash(spark, tmp).collect()
     assert 0 < len(pairs) <= m * _BAND_WINDOW * 8, len(pairs)
-    parent = list(range(m))
+    assert _n_components(range(m), pairs) == 1
 
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
 
-    for r in pairs:
-        a, b = find(r["doc_a"]), find(r["doc_b"])
-        if a != b:
-            parent[a] = b
-    assert len({find(i) for i in range(m)}) == 1
+def _members(spark, rows):
+    return spark.createDataFrame(rows, "doc_id long, k long, title string")
+
+
+def test_capped_pairs_at_cap_is_complete(spark):
+    """A bucket of exactly ``_BUCKET_CAP`` members keeps the complete
+    self-join: all C(64, 2) = 2016 pairs, each once, ``doc_a < doc_b``."""
+    from itertools import combinations
+
+    from data_ingestion_tool_spark.operators.dedup import _BUCKET_CAP, capped_pairs
+
+    m = _BUCKET_CAP
+    members = _members(spark, [(i, 7, f"t{i}") for i in range(m)])
+    got = capped_pairs(members, ("k",), ("doc_id",)).collect()
+    assert len(got) == m * (m - 1) // 2 == 2016
+    assert {(r["doc_a"], r["doc_b"]) for r in got} == set(combinations(range(m), 2))
+
+
+def test_capped_pairs_over_cap_is_chained(spark):
+    """One member over the cap switches the bucket to the lead-window
+    chain: at most m·W pairs, fewer than the complete C(m, 2), one
+    connected component."""
+    from data_ingestion_tool_spark.operators.dedup import (
+        _BAND_WINDOW,
+        _BUCKET_CAP,
+        capped_pairs,
+    )
+
+    m = _BUCKET_CAP + 1
+    members = _members(spark, [(i, 7, f"t{i}") for i in range(m)])
+    got = capped_pairs(members, ("k",), ("doc_id",)).collect()
+    assert len(got) <= m * _BAND_WINDOW
+    assert len(got) < m * (m - 1) // 2
+    assert all(r["doc_a"] < r["doc_b"] for r in got)
+    assert _n_components(range(m), got) == 1
+
+
+def test_capped_pairs_empty_key_is_one_bucket(spark):
+    """An empty key ignores every column: members that differ in ``k``
+    still pair, all of them with each other."""
+    from data_ingestion_tool_spark.operators.dedup import capped_pairs
+
+    m = 10
+    members = _members(spark, [(i, i, f"t{i}") for i in range(m)])
+    assert capped_pairs(members, (), ("doc_id",)).count() == m * (m - 1) // 2
+    assert capped_pairs(members, ("k",), ("doc_id",)).count() == 0
+
+
+def test_capped_pairs_payload_columns(spark):
+    """Payload columns arrive as ``<p>_a`` / ``<p>_b`` and belong to the
+    pair's own members, on the complete path (bucket 1) and the
+    chained path (bucket 2, over the cap)."""
+    from data_ingestion_tool_spark.operators.dedup import _BUCKET_CAP, capped_pairs
+
+    rows = [(i, 1, f"s{i}") for i in range(3)]
+    rows += [(100 + i, 2, f"b{i}") for i in range(_BUCKET_CAP + 5)]
+    title = {i: t for i, _, t in rows}
+    out = capped_pairs(_members(spark, rows), ("k",), ("doc_id",), ("title",))
+    assert out.columns == ["doc_a", "doc_b", "title_a", "title_b"]
+    got = out.collect()
+    assert {r["doc_a"] >= 100 for r in got} == {False, True}  # both paths
+    for r in got:
+        assert r["title_a"] == title[r["doc_a"]]
+        assert r["title_b"] == title[r["doc_b"]]
 
 
 def test_simhash_finds_planted_near_dups(spark, exact_pairs):
@@ -1265,20 +1325,48 @@ def test_fuzzy_hot_segment_bucket_is_bounded_and_connected(spark, tmp_path):
         assert r["edit_dist"] <= 2
 
     # connectivity: the family must stay one component
-    parent = list(range(m))
+    n = _n_components(range(m), pairs)
+    assert n == 1, f"family split into {n} components"
 
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
 
-    for r in pairs:
-        a, b = find(r["doc_a"]), find(r["doc_b"])
-        if a != b:
-            parent[a] = b
-    roots = {find(i) for i in range(m)}
-    assert len(roots) == 1, f"family split into {len(roots)} components"
+def test_fuzzy_tiny_titles_match_oracle(spark, tmp_path):
+    """Titles shorter than d+1 chars have no PassJoin segments and pair
+    through the keyless tiny-title bucket (complete join under the
+    cap), and tiny titles still probe longer ones: every pair within
+    distance d must match the all-pairs DuckDB oracle."""
+    from data_ingestion_tool_spark.operators.dedup import (
+        FUZZY_TITLE_PAIRS_SQL,
+        fuzzy_title_pairs,
+    )
+    from tests.parity import compare
+
+    titles = ["", "a", "b", "ab", "xy", "abc", "abcd", "zzzzzz", "  q "]
+    sf_dir = _write_docs(spark, tmp_path, list(enumerate(titles)))
+
+    out = fuzzy_title_pairs(spark, sf_dir)
+    # C(6, 2) = 15 tiny pairs + abc-{a, b, ab} + abcd-{ab, abc}
+    assert out.count() == 20
+    assert compare(out, _duck_on(sf_dir, FUZZY_TITLE_PAIRS_SQL)) == []
+
+
+def test_fuzzy_tiny_title_bucket_over_cap_is_chained(spark, tmp_path):
+    """A tiny-title bucket over ``_BUCKET_CAP`` (dirty corpora are full
+    of empty and one-char docs) falls back to the lead-window chain:
+    at most m·W pairs, still one component."""
+    from data_ingestion_tool_spark.operators.dedup import (
+        _BAND_WINDOW,
+        _BUCKET_CAP,
+        fuzzy_title_pairs,
+    )
+
+    m = 100
+    assert m > _BUCKET_CAP
+    rows = [(i, f"{chr(65 + i // 10)}{i % 10}") for i in range(m)]
+    sf_dir = _write_docs(spark, tmp_path, rows)
+
+    pairs = fuzzy_title_pairs(spark, sf_dir).collect()
+    assert 0 < len(pairs) <= m * _BAND_WINDOW, len(pairs)
+    assert _n_components(range(m), pairs) == 1
 
 
 def test_winsorized_auto_switch_approx_path(spark, monkeypatch):

@@ -224,14 +224,13 @@ def test_bench_runs_two_sweeps_and_keeps_min():
 def test_bench_git_tree_stamp():
     """r10 verdict item 3: every bench record carries the measured git
     tree + dirty flag so cross-record A/Bs are machine-checkable; on a
-    non-repo directory the stamp nulls out instead of crashing."""
+    non-repo directory the stamp nulls out instead of crashing. The
+    checkout case uses a repository made here, so the test passes in
+    an exported copy of the source that is not itself a checkout."""
     import tempfile
 
     import bench
 
-    stamp = bench._git_tree(REPO)
-    assert stamp["tree"] and len(stamp["tree"]) == 40
-    assert stamp["dirty"] in (True, False)
     with tempfile.TemporaryDirectory() as d:
         assert bench._git_tree(d) == {"tree": None, "dirty": None}
 
@@ -247,6 +246,9 @@ def test_bench_git_tree_stamp():
              "commit", "-q", "--allow-empty", "-m", "init"],
             check=True,
         )
+        stamp = bench._git_tree(d)
+        assert stamp["tree"] and len(stamp["tree"]) == 40
+        assert stamp["dirty"] in (True, False)
         with open(os.path.join(d, "BENCH_LOCAL.json"), "w") as fh:
             fh.write("{}\n")
         with open(os.path.join(d, "BENCH_LOCAL_HISTORY.jsonl"), "a") as fh:

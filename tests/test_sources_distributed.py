@@ -86,20 +86,30 @@ def test_events_loads_on_unconfigured_session(spark):
     without our confs; load_table must canonicalize events.ts to
     TIMESTAMP_NTZ at runtime whether the file stores TIMESTAMP(NANOS)
     (round-1 testdata; PARQUET_TYPE_ILLEGAL without nanosAsLong) or
-    naive micros (current testdata), under any session settings."""
-    spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-    df = load_table(spark, SF_SMOKE, "events")
-    assert df.schema["ts"].dataType.typeName() == "timestamp_ntz"
-    assert df.count() > 0
-    again = _memo_hit_load(spark, SF_SMOKE, "events")
-    assert again.schema == df.schema
-    assert _rows_by_id(again) == _rows_by_id(df)
-    # the scoped confs are RESTORED after schema resolution — the
-    # caller's session is left exactly as we found it (the conf is
-    # captured into the relation at read time, so execution still
-    # works; verified against a synthetic TIMESTAMP(NANOS) file in
-    # test_nanos_file_loads_with_scoped_conf)
-    assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "false"
+    naive micros (current testdata), under any session settings. The
+    shared session's own value is put back afterwards, so later tests
+    do not inherit the unconfigured setting."""
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    saved = spark.conf.get(key, None)
+    spark.conf.unset(key)
+    try:
+        df = load_table(spark, SF_SMOKE, "events")
+        assert df.schema["ts"].dataType.typeName() == "timestamp_ntz"
+        assert df.count() > 0
+        again = _memo_hit_load(spark, SF_SMOKE, "events")
+        assert again.schema == df.schema
+        assert _rows_by_id(again) == _rows_by_id(df)
+        # the scoped confs are RESTORED after schema resolution — the
+        # caller's session is left exactly as we found it (the conf is
+        # captured into the relation at read time, so execution still
+        # works; verified against a synthetic TIMESTAMP(NANOS) file in
+        # test_nanos_file_loads_with_scoped_conf)
+        assert spark.conf.get(key) == "false"
+    finally:
+        if saved is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, saved)
 
 
 def test_nanos_file_loads_with_scoped_conf(spark, tmp_path):
